@@ -26,8 +26,6 @@ for i in $(seq 1 "$N"); do
     SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
     SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
     java $OPENS \
-      --add-modules jdk.internal.jvmstat \
-      --add-exports jdk.internal.jvmstat/sun.jvmstat.monitor=ALL-UNNAMED \
       -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
       -Xmx8g -XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing \
       -cp "$CP" graft.Bench > "run$i.raw" 2> "run$i.err"

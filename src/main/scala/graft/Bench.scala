@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries ns timestamps; Spark is µs-native (SURVEY §1)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     // ERROR, not WARN: the PRQL whole-relation windows (q09 et al) emit a
     // WindowExec warning per run, and sbt flushes forked stderr late — in
     // rounds 2-4 those lines landed AFTER the summary JSON and pushed it out
@@ -53,101 +44,6 @@ object Bench {
     import scala.jdk.CollectionConverters._
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    // total JIT code-cache occupancy (all CodeHeap segments) — sampled
-    // around every query so the recurring interpreted-execution anomaly
-    // (r8/r11/r13: cpu≈run at 3-17x the ledger envelope on untouched code)
-    // adjudicates mechanically from bench_detail.json: an outlier whose
-    // ch_used sits near the reserve, or whose ch_delta is strongly
-    // negative (a flush just evicted compiled methods), is JVM state, not
-    // a plan regression.
-    def chUsed: Long = java.lang.management.ManagementFactory
-      .getMemoryPoolMXBeans.asScala
-      .filter(_.getName.startsWith("CodeHeap")).map(_.getUsage.getUsed).sum
-    // JIT-state telemetry (r15, the r8/r11/r13/r14 warm-JVM anomaly —
-    // code-cache occupancy alone did NOT explain r14's outliers, so name
-    // the remaining HotSpot mechanism per query): jit_ms is the JVM's
-    // cumulative compiler-thread time (a query that triggers a
-    // recompilation storm shows a large delta on unchanged code), and the
-    // hsperf counters sun.ci.totalBailouts / sun.ci.totalInvalidates
-    // count compile bailouts and nmethod invalidations (the
-    // deopt→reprofile→recompile cycle that, past
-    // PerMethodRecompilationCutoff, makes a method PERMANENTLY
-    // not-compilable — the leading theory for cpu≈wall outliers late in a
-    // 460-query JVM). Counters are read via jvmstat self-attach,
-    // reflectively: no compile-time module dependency, silent null where
-    // the module isn't exported (build.sbt adds it for forked runs).
-    def jitMs: Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else -1L
-    }
-    // reflection resolves every member on the EXPORTED types
-    // (MonitoredHost/MonitoredVm/Monitor) — resolving on the runtime impl
-    // classes (sun.jvmstat.perfdata.*, unexported) throws
-    // InaccessibleObjectException and would silently zero the telemetry
-    val ciState: Option[(Class[_], Any, Any)] = try {
-      val mhC = Class.forName("sun.jvmstat.monitor.MonitoredHost")
-      val mvC = Class.forName("sun.jvmstat.monitor.MonitoredVm")
-      val monC = Class.forName("sun.jvmstat.monitor.Monitor")
-      val idC = Class.forName("sun.jvmstat.monitor.VmIdentifier")
-      val pid = java.lang.ProcessHandle.current().pid()
-      val vmId = idC.getConstructor(classOf[String]).newInstance(pid.toString)
-      val host = mhC.getMethod("getMonitoredHost", idC).invoke(null, vmId)
-      val vm = mhC.getMethod("getMonitoredVm", idC).invoke(host, vmId)
-      val find = mvC.getMethod("findByName", classOf[String])
-      val bail = find.invoke(vm, "sun.ci.totalBailouts")
-      val inval = find.invoke(vm, "sun.ci.totalInvalidates")
-      if (bail != null && inval != null) Some((monC, bail, inval)) else None
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] jvmstat counters unavailable " +
-        s"(ci_* will report -1): ${e.getClass.getSimpleName}: ${e.getMessage}")
-      None
-    }
-    def ciValue(monC: Class[_], m: Any): Long = try {
-      monC.getMethod("getValue").invoke(m) match {
-        case l: java.lang.Long => l.longValue; case _ => -1L }
-    } catch { case _: Throwable => -1L }
-    val ciMonitors: Option[(Any, Any)] = ciState.map(s => (s._2, s._3))
-    def ciRead(m: Any): Long =
-      ciState.map(s => ciValue(s._1, m)).getOrElse(-1L)
-    def ciBailouts: Long = ciMonitors.map(m => ciRead(m._1)).getOrElse(-1L)
-    def ciInvalidates: Long = ciMonitors.map(m => ciRead(m._2)).getOrElse(-1L)
-    // JIT compile-QUEUE depth (r15, the run that killed the deopt theory:
-    // a reproduced anomaly band showed ci_invalidates=0, ci_bailouts=0,
-    // normal per-query jit_ms — but jit_total_ms ~2/3 of the run's wall,
-    // i.e. compiler threads saturated). HotSpot's tiered compile
-    // THRESHOLDS scale UP with queue length per compiler thread
-    // (advancedThresholdPolicy): under a deep C2 queue a short-lived
-    // generated method never qualifies and runs interpreted for its whole
-    // life — cpu≈wall at 5-25x on untouched code, exactly the signature.
-    // Bracket every query with the queue depth so an outlier's row names
-    // the mechanism (hot + cq_pre high = threshold-scaled/starved;
-    // hot + cq≈0 = genuinely slower plan).
-    val dcmdTarget: Option[(javax.management.MBeanServer,
-        javax.management.ObjectName)] = try {
-      Some((java.lang.management.ManagementFactory.getPlatformMBeanServer,
-        new javax.management.ObjectName(
-          "com.sun.management:type=DiagnosticCommand")))
-    } catch { case _: Throwable => None }
-    def compileQueueDepth: Int = dcmdTarget.map { case (srv, on) =>
-      try {
-        val out = srv.invoke(on, "compilerQueue",
-          Array[AnyRef](null), Array("[Ljava.lang.String;"))
-          .asInstanceOf[String]
-        // one "sig::method (n bytes)" line per queued/in-flight compile
-        out.split('\n').count(_.contains("::"))
-      } catch { case _: Throwable => -1 }
-    }.getOrElse(-1)
-    // Memory-system telemetry (r15 run 3 killed the queue theory too: an
-    // anomalous x43 read cpu≈wall at 6x with an EMPTY compile queue,
-    // normal jit_ms, zero invalidations). getThreadCpuTime counts cycles
-    // on-CPU including stall cycles and kernel time — a query can read
-    // 17x "CPU" while executing the same compiled instructions if the
-    // process is fighting page faults or THP/compaction (host memory
-    // state, invisible to every JIT counter). /proc/self/stat minflt(10)
-    // majflt(12) stime(15, ticks) deltas name that mechanism per query:
-    // a hot row with a fault/kernel-time spike is host memory state, a
-    // hot row with flat faults and flat jit is a genuine plan cost.
     // USER_HZ measured, not assumed (ADVICE r15): `getconf CLK_TCK` once,
     // fall back to the Linux-universal 100 if the exec fails
     val userHz: Long = try {
@@ -157,39 +53,6 @@ object Bench {
       val v = out.toLong
       if (v > 0) v else 100L
     } catch { case _: Throwable => 100L }
-    def procStat: (Long, Long, Long) = try {
-      val s = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")))
-      // field 2 is "(comm)" which may contain spaces — split after ')'
-      val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-      // rest(0) is field 3 (state); minflt=field 10 -> rest(7),
-      // majflt=field 12 -> rest(9), stime=field 15 -> rest(12)
-      (rest(7).toLong, rest(9).toLong,
-        rest(12).toLong * 1000L / userHz) // stime ticks -> ms
-    } catch { case _: Throwable => (-1L, -1L, -1L) }
-    // Effective-CPU-speed probe (r15: THP/compaction ruled out on this
-    // host — THP=madvise, compact_stall=0, zero memory pressure — and the
-    // run-1 anomaly band was TEMPORALLY CONTIGUOUS in execution order,
-    // which is the signature of a host-level CPU-speed window: frequency
-    // throttling or hypervisor interference inflates ON-CPU seconds for
-    // the same instructions, with cpu≈wall and every JVM counter clean).
-    // Time a fixed pure-ALU xorshift loop before each query: the probe's
-    // nanoseconds are a direct per-query index of effective CPU speed —
-    // a hot query whose spin_ns also inflated is host CPU state, named
-    // mechanically; a hot query at nominal spin_ns is genuinely doing
-    // more work. ~2-4 ms per probe, ~1.5 s per 476-query suite.
-    val spinSink = new java.util.concurrent.atomic.AtomicLong(0L)
-    def spinProbeNs: Long = {
-      var x = 0x9E3779B97F4A7C15L
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 4000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        i += 1
-      }
-      spinSink.addAndGet(x) // defeat dead-code elimination
-      System.nanoTime() - t0
-    }
     def stealTicks: Long = try {
       val first = scala.io.Source.fromFile("/proc/stat").getLines()
         .find(_.startsWith("cpu ")).getOrElse("")
@@ -197,21 +60,11 @@ object Bench {
       if (f.length > 8) f(8).toLong else -1L // field: steal
     } catch { case _: Throwable => -1L }
     final case class QStat(sec: Double, gcMs: Long, taskMs: Long,
-                           taskCpuMs: Long, chUsed: Long, chDelta: Long,
-                           jitMs: Long, bailDelta: Long, invalDelta: Long,
-                           cqPre: Int, cqPost: Int, pfMinor: Long,
-                           pfMajor: Long, sysMs: Long, spinNs: Long,
-                           stealDelta: Long)
-    // compile the probe loop itself before measuring with it
-    locally { (1 to 3).foreach(_ => spinProbeNs) }
+                           taskCpuMs: Long, stealDelta: Long)
     val results = selected.map { case (name, fn) =>
       org.apache.spark.GraftListeners.drain(spark.sparkContext)
-      val (gc0, tk0, cp0, ch0) = (gcMs, taskMs.get, taskCpuNs.get, chUsed)
-      val (jit0, bail0, inv0) = (jitMs, ciBailouts, ciInvalidates)
-      val cq0 = compileQueueDepth
-      val (mnf0, mjf0, sys0) = procStat
+      val (gc0, tk0, cp0) = (gcMs, taskMs.get, taskCpuNs.get)
       val steal0 = stealTicks
-      val spin0 = spinProbeNs
       val t0 = System.nanoTime()
       // noop sink materializes every column (count() would let Spark prune
       // projections and under-report the real work)
@@ -225,15 +78,6 @@ object Bench {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       org.apache.spark.GraftListeners.drain(spark.sparkContext)
-      val ch1 = chUsed
-      val invalDelta = if (inv0 < 0) -1L else ciInvalidates - inv0
-      // an invalidation burst on one query = the deopt→recompile cycle
-      // ran hot RIGHT HERE; say so loudly instead of leaving a mystery
-      // wall-time outlier for the ledger reader
-      if (invalDelta > 20)
-        System.err.println(s"[bench] WARNING: $name saw $invalDelta nmethod " +
-          "invalidations (deopt storm) — its wall time reflects JVM state, " +
-          "not plan cost")
       val stealNow = if (steal0 < 0) -1L else stealTicks - steal0
       // a steal burst = the hypervisor ran a co-tenant on our vCPUs
       // during THIS query (run 10: steal>100 ⇒ median 1.70× ledger) —
@@ -242,16 +86,8 @@ object Bench {
         System.err.println(f"[bench] WARNING: $name saw $stealNow steal " +
           f"ticks (${stealNow.toDouble / userHz}%.1f s of stolen vCPU) — " +
           "its wall time reflects hypervisor interference, not plan cost")
-      val (mnf1, mjf1, sys1) = procStat
       name -> QStat(sec, gcMs - gc0, taskMs.get - tk0,
-        (taskCpuNs.get - cp0) / 1000000L, ch1, ch1 - ch0,
-        if (jit0 < 0) -1L else jitMs - jit0,
-        if (bail0 < 0) -1L else ciBailouts - bail0,
-        invalDelta, cq0, compileQueueDepth,
-        if (mnf0 < 0) -1L else mnf1 - mnf0,
-        if (mjf0 < 0) -1L else mjf1 - mjf0,
-        if (sys0 < 0) -1L else sys1 - sys0,
-        spin0, stealNow)
+        (taskCpuNs.get - cp0) / 1000000L, stealNow)
     }
     // The driver keeps only the LAST 2000 chars of output, and the one-line
     // JSON outgrew that window at 78 full-name ns-precision entries
@@ -364,23 +200,15 @@ object Bench {
     try {
       val full = results.map { case (k, v) =>
         val rerun = rerunSecs.get(k).map(r => s""","rerun_sec":$r""").getOrElse("")
-        s"\"" + k + "\":" + s"""{"sec":${v.sec},"gc_ms":${v.gcMs},"task_ms":${v.taskMs},"task_cpu_ms":${v.taskCpuMs},"ch_used":${v.chUsed},"ch_delta":${v.chDelta},"jit_ms":${v.jitMs},"ci_bailouts":${v.bailDelta},"ci_invalidates":${v.invalDelta},"cq_pre":${v.cqPre},"cq_post":${v.cqPost},"pf_minor":${v.pfMinor},"pf_major":${v.pfMajor},"sys_ms":${v.sysMs},"spin_ns":${v.spinNs},"steal_ticks":${v.stealDelta}$rerun}"""
+        s"\"" + k + "\":" + s"""{"sec":${v.sec},"gc_ms":${v.gcMs},"task_ms":${v.taskMs},"task_cpu_ms":${v.taskCpuMs},"steal_ticks":${v.stealDelta}$rerun}"""
       }.mkString("{", ",", "}")
       // the twin list rides along so downstream tooling (scripts/ledger.py)
       // reads ONE source of truth — a twin added here but not there would
       // otherwise silently skew production sums between the two ledgers
       val twinsJson = oracleTwins.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val sumJit = results.map(_._2.jitMs).filter(_ >= 0).sum
-      val sumInval = results.map(_._2.invalDelta).filter(_ >= 0).sum
-      val sumBail = results.map(_._2.bailDelta).filter(_ >= 0).sum
-      val maxCq = (results.map(_._2.cqPre) ++ results.map(_._2.cqPost))
-        .foldLeft(-1)(math.max)
       val stealSum = results.map(_._2.stealDelta).filter(_ >= 0).sum
-      val spinSorted = results.map(_._2.spinNs).sorted
-      val spinMed = if (spinSorted.isEmpty) -1L
-        else spinSorted(spinSorted.length / 2)
       val w = new java.io.PrintWriter("bench_detail.json")
-      try w.println(s"""{"total":$total,"total_rerun_min":$totalRerunMin,"production_total":$prodTotal,"production_rerun_min":$prodRerunMin,"reruns":${rerunSecs.size},"gc_total_ms":$sumGcMs,"task_total_ms":$sumTaskMs,"jit_total_ms":$sumJit,"ci_invalidates_total":$sumInval,"ci_bailouts_total":$sumBail,"cq_max":$maxCq,"steal_ticks_total":$stealSum,"spin_ns_median":$spinMed,"parallelism":${f"$par%.2f"},"cpus":$cpus,"code_cache":$codeCacheJson,"oracle_twins":$twinsJson,"queries":$full,"failed":$failedJson,"sf":"$sfDir"}""")
+      try w.println(s"""{"total":$total,"total_rerun_min":$totalRerunMin,"production_total":$prodTotal,"production_rerun_min":$prodRerunMin,"reruns":${rerunSecs.size},"gc_total_ms":$sumGcMs,"task_total_ms":$sumTaskMs,"steal_ticks_total":$stealSum,"parallelism":${f"$par%.2f"},"cpus":$cpus,"code_cache":$codeCacheJson,"oracle_twins":$twinsJson,"queries":$full,"failed":$failedJson,"sf":"$sfDir"}""")
       finally w.close()
     } catch { case _: Throwable => }
     // Stop Spark BEFORE printing the summary so no executor/stage log line

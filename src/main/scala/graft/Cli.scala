@@ -161,15 +161,9 @@ object Cli {
   }
 
   def main(argv: Array[String]): Unit = {
-    implicit val spark: SparkSession = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    implicit val spark: SparkSession = GraftSession.builder(
+        sys.env.getOrElse("SPARK_MASTER", "local[*]"), GraftSession.cpus)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(parseArgs(argv))

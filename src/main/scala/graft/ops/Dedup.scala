@@ -460,13 +460,12 @@ object Dedup {
       }: _*)).as("__c"))
       .select(s, F.col("__c.bands"), F.col("__c.rows_per_band"),
         F.col("__c.__q").as("__q"))
-    def dec9(c: Column): Column = F.round(c, 9).cast("decimal(38,9)")
     val agg = rows.groupBy("bands", "rows_per_band").agg(
       F.count(F.lit(1)).as("n_pairs"),
       F.sum(F.when(s >= threshold, 1L).otherwise(0L)).as("__nab"),
-      F.sum(F.when(s < threshold, dec9(F.col("__q")))
+      F.sum(F.when(s < threshold, Quant.dec9(F.col("__q")))
         .otherwise(F.lit(0).cast("decimal(38,9)"))).as("__fp"),
-      F.sum(F.when(s >= threshold, dec9(F.lit(1.0) - F.col("__q")))
+      F.sum(F.when(s >= threshold, Quant.dec9(F.lit(1.0) - F.col("__q")))
         .otherwise(F.lit(0).cast("decimal(38,9)"))).as("__fn"))
     val qt = configs.map { case (b, r) =>
       (b, r, {  // same squaring chain, driver-side IEEE — identical

@@ -1770,17 +1770,16 @@ object EventOps {
           F.col("__p").cast("string"),
           F.lit(" — the logging policy could never have played this " +
             "row's action; fix the logged propensities upstream.")))))
-    def dec9(c: Column): Column = F.round(c, 9).cast("decimal(38,9)")
     val scored = base.crossJoin(F.broadcast(cands))
       .withColumn("__w", F.when(F.col("__a") === F.col("target_action"),
         F.lit(1.0) / F.col("__p")).otherwise(0.0))
     val agg = scored.groupBy("target_action").agg(
       F.count(F.lit(1)).as("n"),
       F.sum(F.when(F.col("__w") > 0.0, 1L).otherwise(0L)).as("n_match"),
-      F.sum(dec9(F.col("__r"))).as("__sr"),
-      F.sum(dec9(F.col("__w") * F.col("__r"))).as("__swr"),
-      F.sum(dec9(F.col("__w"))).as("__sw"),
-      F.sum(dec9(F.col("__w") * F.col("__w"))).as("__sw2"))
+      F.sum(Quant.dec9(F.col("__r"))).as("__sr"),
+      F.sum(Quant.dec9(F.col("__w") * F.col("__r"))).as("__swr"),
+      F.sum(Quant.dec9(F.col("__w"))).as("__sw"),
+      F.sum(Quant.dec9(F.col("__w") * F.col("__w"))).as("__sw2"))
     agg.select(F.col("target_action"), F.col("n"), F.col("n_match"),
         Quant.noNegZero(F.round(F.col("__sr").cast("double") /
           F.col("n").cast("double"), 6)).as("mean_logged_reward"),

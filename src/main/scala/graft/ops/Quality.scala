@@ -463,8 +463,8 @@ object Quality {
     * SPIDER/Bellman single-pair check). NULLs are ignored on both
     * sides (a NULL never references anything).
     *
-    * Scale shape: two map-side-combined distinct collapses + one
-    * equi-join on the value, all counts exact; nothing quadratic.
+    * Scale shape: one tagged union-aggregate over both key columns
+    * ([[inclusionAggregates]]), all counts exact; nothing quadratic.
     *
     * @return one row: (a_col, b_col, n_a_distinct, n_b_distinct,
     *         n_shared, inclusion 6-dp (NULL when a is empty),
@@ -476,69 +476,86 @@ object Quality {
     inclusionAuditAll(Seq((a, aCol, b, bCol, aLabel, bLabel)))
 
   /** Batched [[inclusionAudit]]: one row per candidate, in input order.
-    * Candidates that are exact REVERSALS of an earlier one (same two
-    * DataFrame objects and columns, swapped sides — the FK census always
-    * asks both directions) are served from the SAME aggregate: the
-    * intersection is symmetric and both distinct counts are already in
-    * the 1-row rollup, so the second direction costs nothing. */
+    * A candidate that repeats an earlier one, or REVERSES it (the FK
+    * census always asks both directions), is served from the same
+    * aggregate — see [[inclusionAggregates]]. */
   def inclusionAuditAll(
       candidates: Seq[(DataFrame, String, DataFrame, String,
         String, String)]): DataFrame = {
     require(candidates.nonEmpty, "inclusionAuditAll: need >= 1 candidate")
-    // r19 shape (guide §2 two-phase aggregation): both sides' non-null
-    // keys union with presence tags, ONE map-side-combined
-    // groupBy(value) collapse, then a 1-row rollup reads |distinct(a)|,
-    // |distinct(b)| and |intersection| together — replacing the two
-    // distinct passes + two localCheckpoint jobs + semi-join of the old
-    // shape with a single shuffle and zero eager actions.
-    // Dataset keeps reference equality, so the map key matches exactly
-    // the "same DataFrame object both directions" census shape.
-    val merged = scala.collection.mutable.Map
-      .empty[Seq[(DataFrame, String)], (DataFrame, Boolean)]
-    candidates.map { case (a, aCol, b, bCol, aLabel, bLabel) =>
+    val aggs = inclusionAggregates(candidates.map(c => (c._1, c._2, c._3, c._4)))
+    candidates.zip(aggs).map { case ((_, aCol, _, bCol, aLabel, bLabel), (agg, reversed)) =>
       val la = Option(aLabel).getOrElse(aCol)
       val lb = Option(bLabel).getOrElse(bCol)
-      // native-typed keys when both sides agree (the inclusionProfile
-      // rule): the string cast is only for mismatched-type pairs, and it
-      // is injective, so counts and the intersection are identical.
-      // FLOAT/DOUBLE keys always take the string image: native grouping
-      // normalizes -0.0 to 0.0 and collapses NaNs where the string image
-      // keeps them distinct (advisor r18)
-      val sameType = a.schema(aCol).dataType == b.schema(bCol).dataType &&
-        !Set[org.apache.spark.sql.types.DataType](
-          org.apache.spark.sql.types.FloatType,
-          org.apache.spark.sql.types.DoubleType)
-          .contains(a.schema(aCol).dataType)
-      def key(df: DataFrame, c: String): org.apache.spark.sql.Column =
-        if (sameType) df(c) else df(c).cast("string")
-      def tagged(df: DataFrame, c: String, tagA: Int): DataFrame =
-        df.filter(F.col(c).isNotNull)
-          .select(key(df, c).as("__v"), F.lit(tagA).as("__ia"),
-            F.lit(1 - tagA).as("__ib"))
+      val (na, nb) = if (reversed) ("__nb", "__na") else ("__na", "__nb")
+      agg.select(F.lit(la).as("a_col"), F.lit(lb).as("b_col"),
+        F.col(na).as("n_a_distinct"), F.col(nb).as("n_b_distinct"),
+        F.col("__nx").as("n_shared"),
+        F.round(F.col("__nx").cast("double") /
+          F.nullif(F.col(na).cast("double"), F.lit(0.0)), 6)
+          .as("inclusion"),
+        (F.col("__nx") === F.col(na) &&
+          F.col(na) > 0L).as("fk_candidate"))
+    }.reduce(_ unionByName _)
+  }
+
+  /** The shared shape behind [[inclusionAuditAll]] and
+    * [[Stats.inclusionProfile]]: per candidate (a, aCol, b, bCol), a
+    * 1-row frame of `__na` = |distinct(a)|, `__nb` = |distinct(b)| and
+    * `__nx` = |intersection| (NULLs ignored on both sides), and whether
+    * the caller must read it REVERSED (`__nb` is its own lhs count).
+    *
+    * r19 shape (guide §2 two-phase aggregation): both sides' non-null
+    * keys union with presence tags, ONE map-side-combined
+    * groupBy(value) collapse, then a 1-row rollup reads all three counts
+    * together — one shuffle and zero eager actions per side pair.
+    * A candidate that repeats or reverses an earlier one reuses its
+    * aggregate: the intersection is symmetric and both distinct counts
+    * are in the rollup. Dataset does not override equals, so the memo
+    * compares sides by REFERENCE — exactly the "same DataFrame object
+    * passed twice" shape the census entries use.
+    */
+  private[ops] def inclusionAggregates(
+      candidates: Seq[(DataFrame, String, DataFrame, String)]
+  ): Seq[(DataFrame, Boolean)] = {
+    val memo = scala.collection.mutable.Map
+      .empty[Seq[(DataFrame, String)], DataFrame]
+    candidates.map { case (a, aCol, b, bCol) =>
       val fwdKey = Seq((a, aCol), (b, bCol))
-      val (agg, reversed) = merged.get(fwdKey.reverse) match {
-        case Some((shared, _)) => (shared, true)
-        case None =>
+      memo.get(fwdKey).map(_ -> false)
+        .orElse(memo.get(fwdKey.reverse).map(_ -> true))
+        .getOrElse {
+          // keys stay in their NATIVE type when both sides already agree —
+          // the string cast exists only to make mismatched-type pairs
+          // joinable, and casting is injective, so distinct counts and the
+          // intersection are identical either way; on a 6M-row lineitem
+          // key the long→string cast + string hashing was the dominant
+          // cost (r18: x226 11.4 s task, mostly the two lineitem
+          // distincts). FLOAT/DOUBLE keys always take the string image:
+          // native grouping normalizes -0.0 to 0.0 and collapses NaNs
+          // where the string image keeps them distinct (advisor r18)
+          val sameType = a.schema(aCol).dataType == b.schema(bCol).dataType &&
+            !Set[org.apache.spark.sql.types.DataType](
+              org.apache.spark.sql.types.FloatType,
+              org.apache.spark.sql.types.DoubleType)
+              .contains(a.schema(aCol).dataType)
+          def key(df: DataFrame, c: String): org.apache.spark.sql.Column =
+            if (sameType) df(c) else df(c).cast("string")
+          def tagged(df: DataFrame, c: String, tagA: Int): DataFrame =
+            df.filter(F.col(c).isNotNull)
+              .select(key(df, c).as("__v"), F.lit(tagA).as("__ia"),
+                F.lit(1 - tagA).as("__ib"))
           val m = tagged(a, aCol, 1).unionAll(tagged(b, bCol, 0))
             .groupBy("__v")
             .agg(F.max("__ia").as("__ia"), F.max("__ib").as("__ib"))
             .agg(F.coalesce(F.sum("__ia"), F.lit(0L)).as("__na"),
               F.coalesce(F.sum("__ib"), F.lit(0L)).as("__nb"),
               F.coalesce(F.sum(F.col("__ia") * F.col("__ib")), F.lit(0L))
-                .as("n_shared"))
-          merged(fwdKey) = (m, false)
+                .as("__nx"))
+          memo(fwdKey) = m
           (m, false)
-      }
-      val (na, nb) = if (reversed) ("__nb", "__na") else ("__na", "__nb")
-      agg.select(F.lit(la).as("a_col"), F.lit(lb).as("b_col"),
-        F.col(na).as("n_a_distinct"), F.col(nb).as("n_b_distinct"),
-        F.col("n_shared"),
-        F.round(F.col("n_shared").cast("double") /
-          F.nullif(F.col(na).cast("double"), F.lit(0.0)), 6)
-          .as("inclusion"),
-        (F.col("n_shared") === F.col(na) &&
-          F.col(na) > 0L).as("fk_candidate"))
-    }.reduce(_ unionByName _)
+        }
+    }
   }
 
   def fdAudit(df: DataFrame, fds: Seq[(Seq[String], String)]): DataFrame = {

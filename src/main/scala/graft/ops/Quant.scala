@@ -44,4 +44,9 @@ object Quant {
     * hash, red row. Canonicalizing on both sides closes the class.
     */
   def noNegZero(c: Column): Column = c + F.lit(0.0)
+
+  /** Round to 9 dp, then cast to DECIMAL(38,9): the exact-sum summand.
+    * A decimal `sum` is exact, so it reads the same whatever order the
+    * partitions add up in — unlike a DOUBLE sum. */
+  def dec9(c: Column): Column = F.round(c, 9).cast("decimal(38,9)")
 }

@@ -51,8 +51,9 @@ object Scale {
     if (df.isStreaming) return df
     import org.apache.spark.sql.catalyst.plans.logical._
     val wide = df.queryExecution.analyzed.collectFirst {
-      case p @ (_: Join | _: Aggregate | _: Distinct | _: Sort |
-                _: Window | _: RepartitionOperation | _: GlobalLimit) => p
+      case p @ (_: Join | _: Aggregate | _: Distinct | _: Deduplicate |
+                _: SetOperation | _: Sort | _: Window |
+                _: RepartitionOperation | _: GlobalLimit) => p
     }.isDefined
     if (wide) return df
     val target = df.sparkSession.sparkContext.defaultParallelism

@@ -2021,72 +2021,27 @@ object Stats {
     * schema-matching primitive (Bauckmann et al., SINDY/BINDER) run as a
     * census.
     *
-    * Scale shape per candidate: distinct-collapse each side (map-side
-    * partials), then ONE left-semi join of the A distinct set against the
-    * B distinct set — B's distinct set is the natural broadcast side when
-    * it is a dimension key. Values never carry row payloads.
+    * Scale shape: one tagged union-aggregate (a single shuffle of the
+    * two key columns) per side pair, see [[Quality.inclusionAggregates]].
+    * Values never carry row payloads.
     *
     * @return one row per candidate: (dep, n_lhs, n_hit, coefficient 6-dp)
     */
   def inclusionProfile(
       candidates: Seq[(String, DataFrame, String, DataFrame, String)]): DataFrame = {
     require(candidates.nonEmpty, "inclusionProfile: need at least one candidate")
-    // One tagged union-aggregate per UNORDERED side pair (r19, guide §2
-    // two-phase aggregation): both sides' keys union with presence tags,
-    // one map-side-combined groupBy(value) collapses them, and a 1-row
-    // rollup reads |distinct(a)|, |distinct(b)| and the intersection at
-    // once — replacing per-candidate [2 distinct passes + a semi-join]
-    // with ONE shuffle, and serving a reversed candidate (b ⊆ a, the FK
-    // census always asks both directions) from the SAME aggregate.
-    // Dataset does not override equals, so the map key compares sides by
-    // REFERENCE — exactly the "same DataFrame object passed twice" shape
-    // the census entries use
-    val merged = scala.collection.mutable.Map
-      .empty[Seq[(DataFrame, String)], (DataFrame, Boolean)]
-    candidates.map { case (name, a, aCol, b, bCol) =>
-      // keys stay in their NATIVE type when both sides already agree —
-      // the string cast exists only to make mismatched-type pairs
-      // joinable, and casting is injective, so distinct counts and the
-      // intersection are identical either way; on a 6M-row lineitem
-      // key the long→string cast + string hashing was the dominant cost
-      // (r18: x226 11.4 s task, mostly the two lineitem distincts).
-      // FLOAT/DOUBLE keys always take the string image: native grouping
-      // normalizes -0.0 to 0.0 and collapses NaNs where the string image
-      // keeps them distinct (advisor r18) — integral/decimal/string keys
-      // agree, fractional ones are pinned to the historical semantics
-      val sameType = a.schema(aCol).dataType == b.schema(bCol).dataType &&
-        !Set[org.apache.spark.sql.types.DataType](
-          org.apache.spark.sql.types.FloatType,
-          org.apache.spark.sql.types.DoubleType)
-          .contains(a.schema(aCol).dataType)
-      def key(df: DataFrame, c: String): org.apache.spark.sql.Column =
-        if (sameType) df(c) else df(c).cast("string")
-      def tagged(df: DataFrame, c: String, tagA: Int): DataFrame =
-        df.filter(F.col(c).isNotNull)
-          .select(key(df, c).as("__v"), F.lit(tagA).as("__ia"),
-            F.lit(1 - tagA).as("__ib"))
-      val fwdKey = Seq((a, aCol), (b, bCol))
-      val (agg, reversed) = merged.get(fwdKey.reverse) match {
-        case Some((shared, _)) => (shared, true)
-        case None =>
-          val m = tagged(a, aCol, 1).unionAll(tagged(b, bCol, 0))
-            .groupBy("__v")
-            .agg(F.max("__ia").as("__ia"), F.max("__ib").as("__ib"))
-            .agg(F.coalesce(F.sum("__ia"), F.lit(0L)).as("__na"),
-              F.coalesce(F.sum("__ib"), F.lit(0L)).as("__nb"),
-              F.coalesce(F.sum(F.col("__ia") * F.col("__ib")), F.lit(0L))
-                .as("n_hit"))
-          merged(fwdKey) = (m, false)
-          (m, false)
-      }
+    // one tagged union-aggregate per side pair, shared by a repeated or
+    // reversed candidate (b ⊆ a — the FK census always asks both ways)
+    val aggs = Quality.inclusionAggregates(candidates.map(c => (c._2, c._3, c._4, c._5)))
+    candidates.zip(aggs).map { case ((name, _, _, _, _), (agg, reversed)) =>
       val lhs = if (reversed) "__nb" else "__na"
       // empty/all-NULL lhs: the inclusion is vacuously true — emit 1.0
       // explicitly (Spark's 0/0 is NULL; DuckDB's sum-over-no-rows NULL
       // would diverge otherwise, advisor r11)
       agg.select(F.lit(name).as("dep"), F.col(lhs).as("n_lhs"),
-        F.col("n_hit"),
+        F.col("__nx").as("n_hit"),
         F.when(F.col(lhs) === 0L, F.lit(1.0))
-          .otherwise(F.round(F.col("n_hit").cast("double") /
+          .otherwise(F.round(F.col("__nx").cast("double") /
             F.col(lhs), 6)).as("coefficient"))
     }.reduce(_ unionByName _)
   }
@@ -5724,20 +5679,19 @@ object Stats {
           .cast("double") / F.lit(reg)), 9).as("__k"),
         F.abs(F.col("__i") - F.col("__j")).cast("double").as("__cost"))
       .coalesce(1).localCheckpoint()
-    def dec9(col: Column): Column = F.round(col, 9).cast("decimal(38,9)")
     var u = r.select(F.col("__i"), F.lit(1.0).as("__u"))
     var v = c.select(F.col("__j"), F.lit(1.0).as("__v"))
     var it = 0
     while (it < iters) {
       val kv = kern.join(F.broadcast(v), "__j")
-        .groupBy("__i").agg(F.sum(dec9(F.col("__k") * F.col("__v")))
+        .groupBy("__i").agg(F.sum(Quant.dec9(F.col("__k") * F.col("__v")))
           .as("__kv"))
       u = r.join(F.broadcast(kv), "__i")
         .select(F.col("__i"), F.round(F.col("__a") /
           F.col("__kv").cast("double"), 9).as("__u"))
         .coalesce(1).localCheckpoint()
       val ku = kern.join(F.broadcast(u), "__i")
-        .groupBy("__j").agg(F.sum(dec9(F.col("__k") * F.col("__u")))
+        .groupBy("__j").agg(F.sum(Quant.dec9(F.col("__k") * F.col("__u")))
           .as("__ku"))
       v = c.join(F.broadcast(ku), "__j")
         .select(F.col("__j"), F.round(F.col("__b") /
@@ -5750,16 +5704,16 @@ object Stats {
         F.round(F.col("__u") * F.col("__k") * F.col("__v"), 9)
           .as("__pi"), F.col("__cost"))
     val cost = plan.agg(
-      F.sum(dec9(F.col("__pi") * F.col("__cost"))).as("__tc"))
+      F.sum(Quant.dec9(F.col("__pi") * F.col("__cost"))).as("__tc"))
     val rowErr = plan.groupBy("__i")
-      .agg(F.sum(dec9(F.col("__pi"))).as("__rm"))
+      .agg(F.sum(Quant.dec9(F.col("__pi"))).as("__rm"))
       .join(r, "__i")
-      .agg(F.sum(dec9(F.abs(F.col("__rm").cast("double") -
+      .agg(F.sum(Quant.dec9(F.abs(F.col("__rm").cast("double") -
         F.col("__a")))).as("__re"))
     val colErr = plan.groupBy("__j")
-      .agg(F.sum(dec9(F.col("__pi"))).as("__cm"))
+      .agg(F.sum(Quant.dec9(F.col("__pi"))).as("__cm"))
       .join(c, "__j")
-      .agg(F.sum(dec9(F.abs(F.col("__cm").cast("double") -
+      .agg(F.sum(Quant.dec9(F.abs(F.col("__cm").cast("double") -
         F.col("__b")))).as("__ce"))
     val na = r.agg(F.sum("__na").as("n_a"))
     val nb = c.agg(F.sum("__nb").as("n_b"))

@@ -10,7 +10,7 @@ import graft.functions.{CosineSim, DeflateLen, DotProduct, L2Norm, MinHashSig, Q
   * spark.sql(...) and PRQL s-strings — a `--sql` user gets the same
   * codegen'd kernels as the Scala API:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   graft.GraftSession.builder(master, partitions) ... // installs this
   *   spark.sql("SELECT simhash64(text), minhash_sig(text, 5, 64) FROM docs")
   *   spark.sql("SELECT cosine_sim(a.embedding, b.embedding) FROM ...")
   *   spark.sql("SELECT quantize_int8(embedding).* FROM embeddings")

@@ -8409,15 +8409,17 @@ class OpsSpec extends AnyFunSuite {
     import graft.ops.Quality
     val a = Seq(Some(1L), Some(2L), Some(3L), None).toDF("k")
     val b = Seq(2L, 3L, 4L).toDF("k2")
+    // the third candidate repeats the first in the same direction
     val both = Quality.inclusionAuditAll(Seq(
         (a, "k", b, "k2", null, null),
-        (b, "k2", a, "k", null, null)))
+        (b, "k2", a, "k", null, null),
+        (a, "k", b, "k2", null, null)))
       .as[(String, String, Long, Long, Long, Double, Boolean)]
       .collect().toSeq
     val solo1 = Quality.inclusionAudit(a, "k", b, "k2")
       .as[(String, String, Long, Long, Long, Double, Boolean)].head()
     val solo2 = Quality.inclusionAudit(b, "k2", a, "k")
       .as[(String, String, Long, Long, Long, Double, Boolean)].head()
-    assert(both == Seq(solo1, solo2), both)
+    assert(both == Seq(solo1, solo2, solo1), both)
   }
 }

@@ -152,6 +152,25 @@ class ScaleSpec extends AnyFunSuite {
     assert(Similarity.corpusRows(emb, 64, Some(12345L)) == 12345L)
   }
 
+  test("spreadNarrowScan passes dedup and set-operation inputs through, firing no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val a = Seq(1L, 1L, 2L, 3L).toDF("k")
+    val b = Seq(2L, 3L, 4L).toDF("k")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // each plans a shuffle: probing its parallelism would run it eagerly
+      Seq(a.dropDuplicates(), a.intersect(b), a.except(b)).foreach { df =>
+        assert(Scale.spreadNarrowScan(df) eq df)
+      }
+      org.apache.spark.GraftListeners.drain(spark.sparkContext)
+      assert(jobs.get == 0, s"${jobs.get} job(s) fired at construction")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("salted two-phase aggregation equals one-phase groupBy") {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val plain = li.groupBy("l_returnflag").agg(

@@ -5,19 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Shared local SparkSession for all specs (one JVM, forked by sbt). */
 object SparkTest {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", "4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // managed tables (bucketing tests) go to a scratch dir, not the repo
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      // events.parquet carries ns timestamps (TESTDATA); Spark is µs-native,
-      // so read them as long nanos and convert explicitly where used.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
