@@ -1,0 +1,32 @@
+#!/usr/bin/env python3
+"""Eager jobs of each query's construction, from a traced perfbench run.
+
+  python3 perfbench/run.py --workload ops_iterative --trace 1
+  python3 scripts/eager_jobs.py [.bench_build/perfbench/run/records.jsonl]
+
+For the last traced `ops.construct` span of each query, prints one line per
+Spark job the span fired (call site, ms, tasks, shuffle read/write bytes)
+and the span's totals: the jobs an operator runs before it returns its
+DataFrame, which is where a repeated corpus scan shows up.
+"""
+import json
+import sys
+
+path = sys.argv[1] if len(sys.argv) > 1 else ".bench_build/perfbench/run/records.jsonl"
+recs = [json.loads(line) for line in open(path)]
+last = {}
+for r in recs:
+    if r["kind"] == "span" and r["name"] == "ops.construct":
+        last[r["query"]] = r
+for q, span in sorted(last.items()):
+    jobs = sorted((j for j in recs if j["kind"] == "job" and j["span"] == span["id"]),
+                  key=lambda j: j["start_ms"])
+    print(f"{q}  pass {span['pass']}  construct {span['ms']:.0f} ms")
+    print(f"  {'site':60s} {'ms':>6s} {'tasks':>5s} {'shuf_rd':>9s} {'shuf_wr':>9s}")
+    for j in jobs:
+        print(f"  {j['site'][:60]:60s} {j['end_ms'] - j['start_ms']:6d} {j['tasks']:5d} "
+              f"{j['shuffle_read']:9d} {j['shuffle_write']:9d}")
+    print(f"  {'total: ' + str(len(jobs)) + ' jobs':60s} "
+          f"{sum(j['end_ms'] - j['start_ms'] for j in jobs):6d} "
+          f"{sum(j['tasks'] for j in jobs):5d} {sum(j['shuffle_read'] for j in jobs):9d} "
+          f"{sum(j['shuffle_write'] for j in jobs):9d}")

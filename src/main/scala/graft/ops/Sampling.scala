@@ -497,12 +497,16 @@ object Sampling {
     * Rounds stop early when no remaining source adds mass — fewer than k
     * rows is a signal, not an error.
     *
-    * Scale shape: one token explode feeds the vocab census (map-side
-    * combined, TakeOrdered top-V by (count desc, token asc) — the x464
-    * pick rule) and the (source, vocab-token) presence collapse; the
-    * inherently sequential greedy then runs DRIVER-LOCAL on that
-    * ≤ sources×V table (the kCenter/bradleyTerry bounded-solve
-    * convention; loud cap below) and returns literals. Ties break on the
+    * Scale shape: ONE corpus pass. The token explode collapses map-side
+    * to the (source, token) count cells, materialized once with
+    * `localCheckpoint`; the vocab census (TakeOrdered top-V by (count
+    * desc, token asc) — the x464 pick rule) and the (source, vocab-token)
+    * presence filter, driven by the collected top-V list, both read that
+    * checkpoint. The presence collect takes at most 2^20 + 1 rows and
+    * fails loudly past the cap, so the driver never holds more than the
+    * cap plus one. The inherently sequential greedy then runs
+    * DRIVER-LOCAL on that ≤ sources×V table (the kCenter/bradleyTerry
+    * bounded-solve convention) and returns literals. Ties break on the
     * smaller source name; every pick is engine-replayable.
     *
     * @return per round: (round, source, gain_mass, covered_mass,
@@ -514,20 +518,21 @@ object Sampling {
     require(vocabSize >= 1 && vocabSize <= 4096,
       s"vocabSize out of range: $vocabSize")
     val spark = docs.sparkSession
-    val toks = docs.filter(F.col(sourceCol).isNotNull)
+    val cells = docs.filter(F.col(sourceCol).isNotNull)
       .select(F.col(sourceCol).cast("string").as("__src"),
         F.explode(F.filter(
           F.split(F.lower(F.trim(F.coalesce(F.col(textCol), F.lit("")))),
             "\\s+"), x => F.length(x) > 0)).as("__tok"))
-    val vocabDf = toks.groupBy("__tok").agg(F.count(F.lit(1)).as("__c"))
+      .groupBy("__src", "__tok").agg(F.count(F.lit(1)).as("__c"))
+      .localCheckpoint()
+    val vocab = cells.groupBy("__tok").agg(F.sum("__c").as("__c"))
       .orderBy(F.col("__c").desc, F.col("__tok").asc).limit(vocabSize)
-    val vocab = vocabDf.collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    val sv = toks
-      .join(F.broadcast(vocabDf.select("__tok")), Seq("__tok"), "leftsemi")
-      .select("__src", "__tok").distinct().collect()
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    val maxCells = 1 << 20
+    val sv = cells.filter(F.col("__tok").isin(vocab.map(_._1): _*))
+      .select("__src", "__tok").limit(maxCells + 1).collect()
       .map(r => (r.getString(0), r.getString(1)))
-    require(sv.length <= (1 << 20),
+    require(sv.length <= maxCells,
       s"greedyCoverage: ${sv.length} (source, token) presence cells " +
         "exceed the 2^20 driver-local cap — the source alphabet is not " +
         "bounded; this op is for bounded source sets, not entity keys")

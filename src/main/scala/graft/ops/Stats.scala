@@ -2329,7 +2329,8 @@ object Stats {
     * @param sumSource optional CHEAPER subtree with the same partCols /
     *               orderCol / valueCol whose per-block sums equal `df`'s
     *               (the sparse cell table behind a 0-filled dense grid,
-    *               and any part value present in `df` present here too) —
+    *               and any part value present in `df` present here too;
+    *               a part value missing here fails the query) —
     *               without it the block sums re-derive `df` itself, which
     *               for a join-built grid doubles the expensive subtree
     *               (measured r19: x272 task_ms 2× with df-derived sums)
@@ -2388,8 +2389,15 @@ object Stats {
       if (descending) F.col(orderCol).desc else F.col(orderCol).asc
     val wIn = Window.partitionBy(blkKey.map(F.col): _*).orderBy(ordIn)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withBlk.join(F.broadcast(offsets), cond)
-      .withColumn(outCol, F.sum(valueCol).over(wIn) + F.col("__sc_off"))
+    // LEFT attach + fail-fast: every (part, block) of df must find its
+    // offset row; a part value missing from sumSource breaks the contract
+    // above, and an inner join would silently drop its rows
+    val off = F.when(F.col("__sc_off").isNotNull, F.col("__sc_off"))
+      .otherwise(F.raise_error(F.lit("segmentedCumSum: a row's part " +
+        s"value (${partCols.mkString(", ")}) is missing from sumSource " +
+        "— the block offsets cannot cover it")))
+    withBlk.join(F.broadcast(offsets), cond, "left")
+      .withColumn(outCol, F.sum(valueCol).over(wIn) + off)
       .drop(blkKey.map(c => s"__so_$c") :+ "__sc_blk" :+ "__sc_off": _*)
   }
 
@@ -2733,11 +2741,15 @@ object Stats {
     * geometrically, so 3 rounds from uniform is a stable readout, and a
     * FIXED count keeps the op deterministic and oracle-replayable).
     *
-    * Scale shape: battles collapse map-side to the item×item win matrix
-    * (item-vocabulary-bounded); the MM rounds then solve on the COLLECTED
-    * k²-cell matrix driver-side — the kmeansAssign / kCenterCoreset
-    * bounded-fit convention — so corpus size never re-enters and no round
-    * re-scans anything. Guarded at 4096 items.
+    * Scale shape: ONE corpus pass. Battles collapse map-side to the
+    * item×item win matrix w (item-vocabulary-bounded), materialized once
+    * with `localCheckpoint`; the 2..4096 distinct-item guard is a count
+    * over that checkpointed table, so a runaway item domain fails before
+    * any pair row reaches the driver. w is then collected once, and the
+    * symmetric n_ij, the per-item wins (0 for items that only lose) and
+    * the MM rounds all derive from it driver-side — the kmeansAssign /
+    * kCenterCoreset bounded-fit convention — so corpus size never
+    * re-enters and nothing re-scans the battles.
     *
     * @return (item, wins, p) — p 6-dp from the 9-dp fixpoint ladder,
     *         ordered by item
@@ -2751,35 +2763,26 @@ object Stats {
       .filter(F.col("wi").isNotNull && F.col("lo").isNotNull &&
         F.col("wi") =!= F.col("lo"))
       .groupBy("wi", "lo").agg(F.count(F.lit(1)).as("__w"))
-    // symmetric battle counts n_ij and per-item totals (bounded tables)
-    val nPair = w.select(F.col("wi").as("i"), F.col("lo").as("j"), F.col("__w"))
-      .unionByName(w.select(F.col("lo").as("i"), F.col("wi").as("j"),
-        F.col("__w")))
-      .groupBy("i", "j").agg(F.sum("__w").as("__n"))
-    val wins = nPair.select(F.col("i")).distinct()
-      .join(w.groupBy(F.col("wi").as("i")).agg(F.sum("__w").as("wins")),
-        Seq("i"), "left")
-      .na.fill(0L, Seq("wins"))
-    // The win matrix is item-vocabulary-bounded (k² rows for k models /
-    // sources) — iterate the MM fixpoint on the COLLECTED matrix, the
-    // kmeansAssign / kCenterCoreset bounded-driver-fit convention: one
-    // distributed collapse owns the corpus scan, the k²-row solve runs
-    // driver-side, and the ladder sums run in sorted-item order so the
-    // 9-dp rounds replay identically everywhere. (The first cut chained
-    // every round through a new DataFrame join of the SAME collapse —
-    // 3 re-scans of the corpus for a 25-cell matrix; ledger r12.)
-    // bound the vocabulary BEFORE collecting anything: a runaway item
-    // domain must fail on a 1-row count, not after shipping k² pair rows
-    // to the driver
-    val kGuard = wins.count()
+      .localCheckpoint()
+    // The checkpoint is the only pass over the battles. The item guard
+    // counts over it, so a runaway item domain fails before any pair row
+    // reaches the driver; the MM fixpoint then iterates on the collected
+    // matrix, ladder sums in sorted-item order so the 9-dp rounds replay
+    // identically everywhere.
+    val kGuard = w.select(F.explode(F.array(F.col("wi"), F.col("lo"))))
+      .distinct().count()
     require(kGuard >= 2, s"bradleyTerry: need >= 2 items, got $kGuard")
     require(kGuard <= 4096,
       s"bradleyTerry: $kGuard items — the matrix solve is meant for a " +
         "bounded model/source vocabulary; aggregate first")
-    val pairRows = nPair.collect().map(r =>
-      (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val winRows = wins.collect().map(r =>
-      r.getString(0) -> r.getLong(1)).sortBy(_._1)
+    val cells = w.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    // symmetric battle counts n_ij, and wins per item including the
+    // items that only ever lose (wins 0)
+    val pairRows = cells.flatMap { case (i, j, c) => Seq((i, j) -> c, (j, i) -> c) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    val winOf = cells.groupMapReduce(_._1)(_._3)(_ + _)
+    val winRows = pairRows.keysIterator.map(_._1).toArray.distinct.sorted
+      .map(i => i -> winOf.getOrElse(i, 0L))
     val kItems = winRows.size
     def r9(x: Double): Double =
       BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -7050,9 +7053,12 @@ object Stats {
     * per half-round — the [[Similarity.kmeansLloyd]]/x241 iteration
     * contract, engine-replayable.
     *
-    * Scale shape: two distributed collapses (sample cells, population
-    * margins) to bounded tables; the driver holds |cells| doubles; the
-    * result returns as a small local relation.
+    * Scale shape: two distributed collapses to bounded tables — the
+    * sample cells, and both population margins from ONE tagged
+    * aggregate (each population row explodes to a row-key and a col-key
+    * tag, so the population is scanned and shuffled once); the driver
+    * holds |cells| doubles; the result returns as a small local
+    * relation.
     *
     * @return per cell (rkey, ckey, n, w, wn) — w 9-dp, wn = w·n 6-dp,
     *         ordered by (rkey, ckey)
@@ -7072,14 +7078,16 @@ object Stats {
         "coarsen the keys")
     val rObs = cells.map(_._1._1).toSet
     val cObs = cells.map(_._1._2).toSet
-    val rT = population.groupBy(F.col(rowKey).cast("string").as("r"))
+    val margins = population
+      .select(F.explode(F.array(
+        F.struct(F.lit(true).as("__r"), F.col(rowKey).cast("string").as("__k")),
+        F.struct(F.lit(false).as("__r"), F.col(colKey).cast("string").as("__k"))))
+        .as("__m"))
+      .groupBy(F.col("__m.__r"), F.col("__m.__k"))
       .agg(F.count(F.lit(1)).as("n")).collect()
-      .map(x => x.getString(0) -> x.getLong(1).toDouble).toMap
-      .filter { case (k, _) => rObs(k) }
-    val cT = population.groupBy(F.col(colKey).cast("string").as("c"))
-      .agg(F.count(F.lit(1)).as("n")).collect()
-      .map(x => x.getString(0) -> x.getLong(1).toDouble).toMap
-      .filter { case (k, _) => cObs(k) }
+      .map(x => (x.getBoolean(0), x.getString(1), x.getLong(2).toDouble))
+    val rT = margins.collect { case (true, k, n) if rObs(k) => k -> n }.toMap
+    val cT = margins.collect { case (false, k, n) if cObs(k) => k -> n }.toMap
     def r9(x: Double): Double = math.round(x * 1e9) / 1e9
     var w = cells.map { case (k, n) => (k, n, 1.0) }
     for (_ <- 1 to rounds) {

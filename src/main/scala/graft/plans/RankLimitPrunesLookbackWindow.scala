@@ -31,6 +31,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * The inserted node is Spark's own WindowGroupLimit, which plans as a
   * Partial group-limit BEFORE the window exchange and a Final one after —
   * per-group top-k rows cross the shuffle instead of every row.
+  *
+  * Gated like `InferWindowGroupLimit`: `spark.sql.optimizer.
+  * windowGroupLimitThreshold` = -1 disables the rule, and a limit above
+  * the threshold is not inserted. The rule runs in the fixed-point
+  * operator batch, so a WindowGroupLimit it inserted earlier may sit
+  * under a Project by the next iteration; that still counts as present.
   */
 object RankLimitPrunesLookbackWindow extends Rule[LogicalPlan] {
 
@@ -71,9 +77,17 @@ object RankLimitPrunesLookbackWindow extends Rule[LogicalPlan] {
     case _ => false
   }
 
+  /** a WindowGroupLimit directly below, or below Projects only */
+  @scala.annotation.tailrec
+  private def limited(p: LogicalPlan): Boolean = p match {
+    case _: WindowGroupLimit => true
+    case Project(_, child) => limited(child)
+    case _ => false
+  }
+
   def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case filter @ Filter(cond, window @ Window(exprs, part, order, child, _))
-        if order.nonEmpty && !child.isInstanceOf[WindowGroupLimit] &&
+        if order.nonEmpty && !limited(child) &&
           exprs.exists(isRankLike) && !exprs.forall(isRankLike) &&
           exprs.forall(lookbackOnly) =>
       val limits = exprs.flatMap {
@@ -83,11 +97,12 @@ object RankLimitPrunesLookbackWindow extends Rule[LogicalPlan] {
             .map(limit => (limit, rankFn))
         case _ => None
       }
+      // limits are >= 1, so a threshold of -1 admits none
       limits.filter(_._1 >= 1).sortBy(_._1).headOption match {
-        case Some((limit, rankFn)) =>
+        case Some((limit, rankFn)) if limit <= conf.windowGroupLimitThreshold =>
           filter.copy(child = window.copy(child =
             WindowGroupLimit(part, order, rankFn, limit, child)))
-        case None => filter
+        case _ => filter
       }
   }
 }

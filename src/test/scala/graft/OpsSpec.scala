@@ -23,6 +23,39 @@ class OpsSpec extends AnyFunSuite {
       .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
   }
 
+  /** Counts, over `body`, the stages that scanned a file (a FileScanRDD
+    * stage that read input records) and records every job's call site. */
+  private final class ScanLog extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val s = e.stageInfo
+      if (s.taskMetrics.inputMetrics.recordsRead > 0 &&
+          s.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      sites.add(e.stageInfos.maxBy(_.stageId).name)
+  }
+
+  private def listened[T](body: => T): (T, ScanLog) = {
+    val log = new ScanLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val out = body
+      org.apache.spark.GraftListeners.drain(spark.sparkContext)
+      (out, log)
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  /** `df` written to a fresh parquet directory and read back. */
+  private def parquetFrame(df: org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ops").resolve("t")
+    df.write.parquet(dir.toString)
+    spark.read.parquet(dir.toString)
+  }
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
     (2L, "the quick brown fox jumps over the lazy dog"),   // exact dup of 1
@@ -4521,6 +4554,42 @@ class OpsSpec extends AnyFunSuite {
       ("c", 1L, 0.333333)), u)
   }
 
+  test("bradleyTerry: one pass over a parquet-backed corpus per call") {
+    import graft.ops.Stats
+    val b = (Seq.fill(3)(("a", "b")) ++ Seq(("b", "a"), ("b", "c"),
+      ("c", "a"))).toDF("w", "l")
+    val battles = parquetFrame(b)
+    val (got, log) = listened(Stats.bradleyTerry(battles, F.col("w"),
+      F.col("l")).as[(String, Long, Double)].collect().toSeq)
+    assert(got.map(_._1) == Seq("a", "b", "c") &&
+      got.map(_._2) == Seq(3L, 2L, 1L), got)
+    assert(log.scans.get == 1,
+      s"battles scanned ${log.scans.get} times, expected once")
+  }
+
+  test("bradleyTerry: item guards fire before any pair row is collected; " +
+      "an item that only loses is listed with wins 0") {
+    import graft.ops.Stats
+    // 4097 distinct items in a chain of 4096 battles
+    val many = (0 until 4096).map(i => (s"i$i", s"i${i + 1}")).toDF("w", "l")
+    val (msg, log) = listened(loudMsg(
+      Stats.bradleyTerry(many, F.col("w"), F.col("l"))))
+    assert(msg.contains("bradleyTerry: 4097 items"), msg)
+    import scala.jdk.CollectionConverters._
+    assert(!log.sites.asScala.exists(_.startsWith("collect at")),
+      s"a collect ran before the guard: ${log.sites}")
+    // self-battles are dropped, so one item alone has nothing to rank
+    val one = Seq(("a", "a"), ("a", "a")).toDF("w", "l")
+    val m1 = loudMsg(Stats.bradleyTerry(one, F.col("w"), F.col("l")))
+    assert(m1.contains("bradleyTerry: need >= 2 items"), m1)
+    // c never wins: wins 0, and its strength is driven to 0
+    val chain = Seq(("a", "b"), ("a", "c"), ("b", "c")).toDF("w", "l")
+    val got = Stats.bradleyTerry(chain, F.col("w"), F.col("l"))
+      .as[(String, Long, Double)].collect().toSeq
+    assert(got == Seq(("a", 2L, 0.818092), ("b", 1L, 0.181908),
+      ("c", 0L, 0.0)), got)
+  }
+
   test("dunnPairs: pairwise z from mean ranks, -3/sqrt(5) hand value") {
     import graft.ops.Stats
     val df = Seq(("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 4.0), ("b", 5.0),
@@ -7893,6 +7962,35 @@ class OpsSpec extends AnyFunSuite {
     assert(got2 == Seq((1L, "s1", 2L, 2L, 1.0)), got2)
   }
 
+  test("greedyCoverage: one pass over a parquet-backed corpus per call") {
+    import graft.ops.Sampling
+    val docs = parquetFrame(Seq(("s1", "a b"), ("s2", "b c d"),
+      ("s3", "a b c d e"), ("s1", "e f")).toDF("source", "text"))
+    val (got, log) = listened(Sampling.greedyCoverage(docs, "source", "text",
+      k = 3, vocabSize = 16).as[(Long, String, Long, Long, Double)]
+      .collect().toSeq)
+    assert(got == Seq((1L, "s3", 11L, 11L, 0.916667),
+      (2L, "s1", 1L, 12L, 1.0)), got)
+    assert(log.scans.get == 1,
+      s"documents scanned ${log.scans.get} times, expected once")
+  }
+
+  test("greedyCoverage: 2^20 presence cells pass, one more fails loudly") {
+    import graft.ops.Sampling
+    // 256 sources each holding all 4096 tokens: exactly 2^20 cells
+    val full = spark.range(1L << 20).select(
+      (F.col("id") / 4096).cast("long").cast("string").as("source"),
+      F.concat(F.lit("t"), (F.col("id") % 4096).cast("string")).as("text"))
+    val got = Sampling.greedyCoverage(full, "source", "text", k = 1,
+        vocabSize = 4096)
+      .as[(Long, String, Long, Long, Double)].collect().toSeq
+    assert(got == Seq((1L, "0", 4096L * 256L, 4096L * 256L, 1.0)), got)
+    val over = full.union(Seq(("extra", "t0")).toDF("source", "text"))
+    val msg = loudMsg(Sampling.greedyCoverage(over, "source", "text", k = 1,
+      vocabSize = 4096))
+    assert(msg.contains("exceed the 2^20 driver-local cap"), msg)
+  }
+
   test("fdAudit: violating and holding FDs censused with blast radius; " +
       "all-NULL rhs group is not a violation") {
     import graft.ops.Quality
@@ -8379,6 +8477,17 @@ class OpsSpec extends AnyFunSuite {
       .select("g", "v", "cum").as[(Option[String], Double, Long)]
       .collect().toSet
     assert(segN == flatN)
+  }
+
+  test("segmentedCumSum: a part value missing from sumSource fails the " +
+      "query instead of dropping its rows") {
+    import graft.ops.Stats
+    val df = (1 to 40).map(i => (if (i % 2 == 0) "gA" else "gB",
+      i.toDouble, i.toLong)).toDF("g", "v", "c")
+    val msg = loudMsg(Stats.segmentedCumSum(df, Seq("g"), "v", "c", "cum",
+        sumSource = Some(df.filter(F.col("g") === "gA")))
+      .select("g", "v", "cum").collect())
+    assert(msg.contains("missing from sumSource"), msg)
   }
 
   test("native-key float guard: -0.0/0.0 and NaN keys give the string-" +

@@ -106,6 +106,55 @@ class PlanQualitySpec extends AnyFunSuite {
       s"whole-partition frame must NOT be pruned:\n$np")
   }
 
+  /** the q10 shape over lineitem: a rolling lookback sum and a
+    * row_number under `rn <= 2` */
+  private def rankedRolling: DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("l_suppkey")
+      .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
+    tables("lineitem")
+      .withColumn("qty_3", F.sum("l_quantity").over(w.rowsBetween(-2, 0)))
+      .withColumn("rn", F.row_number().over(w))
+      .filter(F.col("rn") <= 2)
+  }
+
+  private def groupLimits(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+    p.collect { case g: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit => g }.size
+
+  test("mixed-window prune honours spark.sql.optimizer.windowGroupLimitThreshold") {
+    val key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    def limitsAt(threshold: String): Int = {
+      spark.conf.set(key, threshold)
+      try groupLimits(rankedRolling.queryExecution.optimizedPlan)
+      finally spark.conf.unset(key)
+    }
+    assert(limitsAt("1000") == 1, "the default threshold admits rn <= 2")
+    assert(limitsAt("2") == 1, "a limit equal to the threshold is inserted")
+    assert(limitsAt("1") == 0, "a limit above the threshold is not inserted")
+    assert(limitsAt("-1") == 0, "-1 disables the rule")
+  }
+
+  test("mixed-window prune does not re-insert under an interposed Project") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Window,
+      WindowGroupLimit}
+    import graft.plans.RankLimitPrunesLookbackWindow
+    val opt = rankedRolling.queryExecution.optimizedPlan
+    assert(groupLimits(opt) == 1, opt)
+    // positive control: with the limit taken out, the rule puts it back
+    val bare = opt.transform {
+      case w @ Window(_, _, _, g: WindowGroupLimit, _) => w.copy(child = g.child)
+    }
+    assert(groupLimits(bare) == 0 &&
+      groupLimits(RankLimitPrunesLookbackWindow(bare)) == 1)
+    // a Project between the Window and its limit: already pruned
+    val wrapped = opt.transform {
+      case w @ Window(_, _, _, g: WindowGroupLimit, _) =>
+        w.copy(child = Project(g.output, g))
+    }
+    val again = RankLimitPrunesLookbackWindow(wrapped)
+    assert(groupLimits(again) == 1, again)
+  }
+
   test("group-aggregate partial-aggregates map-side before the shuffle") {
     val df = prql(
       """from lineitem
