@@ -4,10 +4,12 @@
   python3 perfbench/run.py --workload ops_iterative --trace 1
   python3 scripts/eager_jobs.py [.bench_build/perfbench/run/records.jsonl]
 
-For the last traced `ops.construct` span of each query, prints one line per
+For the last traced construction span of each query, prints one line per
 Spark job the span fired (call site, ms, tasks, shuffle read/write bytes)
-and the span's totals: the jobs an operator runs before it returns its
-DataFrame, which is where a repeated corpus scan shows up.
+and the span's totals: the jobs that run before a DataFrame is returned,
+which is where a repeated corpus scan or a per-round loop job shows up.
+Construction is `ops.construct` for the ops entries and `prql.lower` (the
+PRQL compiler, e.g. the rounds of a `loop`) for the pq_cli queries.
 """
 import json
 import sys
@@ -16,12 +18,12 @@ path = sys.argv[1] if len(sys.argv) > 1 else ".bench_build/perfbench/run/records
 recs = [json.loads(line) for line in open(path)]
 last = {}
 for r in recs:
-    if r["kind"] == "span" and r["name"] == "ops.construct":
+    if r["kind"] == "span" and r["name"] in ("ops.construct", "prql.lower"):
         last[r["query"]] = r
 for q, span in sorted(last.items()):
     jobs = sorted((j for j in recs if j["kind"] == "job" and j["span"] == span["id"]),
                   key=lambda j: j["start_ms"])
-    print(f"{q}  pass {span['pass']}  construct {span['ms']:.0f} ms")
+    print(f"{q}  pass {span['pass']}  {span['name']} {span['ms']:.0f} ms")
     print(f"  {'site':60s} {'ms':>6s} {'tasks':>5s} {'shuf_rd':>9s} {'shuf_wr':>9s}")
     for j in jobs:
         print(f"  {j['site'][:60]:60s} {j['end_ms'] - j['start_ms']:6d} {j['tasks']:5d} "

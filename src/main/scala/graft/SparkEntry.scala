@@ -526,8 +526,7 @@ object SparkEntry {
         |sort [l_returnflag, l_linestatus]""".stripMargin),
 
     "q28_loop" -> q( // PRQL 0.6 experimental `loop` = recursive-CTE
-      // equivalent, driven iteratively by the compiler (no recursion in
-      // Spark SQL)
+      // equivalent, driven iteratively by the compiler (Lowering.lowerLoop)
       """from region
         |take 1
         |select [n = 1]

@@ -75,30 +75,31 @@ object Writers {
       if (toStdout && (fmt == Parquet || fmt == Avro || fmt == Orc))
         throw OutputError(s"${fmt.name} cannot be written to stdout") // main.rs:188-191
       val tmp = Files.createTempDirectory("graft-out").toString
-      val w = df.coalesce(1).write.mode("overwrite")
-      fmt match {
-        case Csv => w.option("header", "true").csv(tmp)
-        case Json => w.json(tmp)
-        case Parquet => w.parquet(tmp)
-        case Orc => w.orc(tmp)
-        // beyond-reference sink symmetry for the graft-avro source; the
-        // hadoop committer nests part files under the output dir directly
-        case Avro => graft.sources.AvroWrite.write(df.coalesce(1), tmp + "/av")
-        case Table => // unreachable
-      }
-      val part = Option(new File(if (fmt == Avro) tmp + "/av" else tmp).listFiles())
-        .getOrElse(Array.empty)
-        .find(f => f.getName.startsWith("part-"))
-        .getOrElse(throw OutputError("no output part file produced"))
-      if (toStdout) // `--to -` / no dest: stream text formats to stdout (main.rs writer contract)
-        print(new String(Files.readAllBytes(part.toPath)))
-      else
-        Files.move(part.toPath, Paths.get(dest.get), StandardCopyOption.REPLACE_EXISTING)
       def rm(f: File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
         f.delete(): Unit
       }
-      rm(new File(tmp))
+      try {
+        val w = df.coalesce(1).write.mode("overwrite")
+        fmt match {
+          case Csv => w.option("header", "true").csv(tmp)
+          case Json => w.json(tmp)
+          case Parquet => w.parquet(tmp)
+          case Orc => w.orc(tmp)
+          // beyond-reference sink symmetry for the graft-avro source; the
+          // hadoop committer nests part files under the output dir directly
+          case Avro => graft.sources.AvroWrite.write(df.coalesce(1), tmp + "/av")
+          case Table => // unreachable
+        }
+        val part = Option(new File(if (fmt == Avro) tmp + "/av" else tmp).listFiles())
+          .getOrElse(Array.empty)
+          .find(f => f.getName.startsWith("part-"))
+          .getOrElse(throw OutputError("no output part file produced"))
+        if (toStdout) // `--to -` / no dest: stream text formats to stdout (main.rs writer contract)
+          print(new String(Files.readAllBytes(part.toPath)))
+        else
+          Files.move(part.toPath, Paths.get(dest.get), StandardCopyOption.REPLACE_EXISTING)
+      } finally rm(new File(tmp))
   }
 
   /** ASCII table of ALL rows — the reference prints everything

@@ -1,8 +1,9 @@
 package graft.prql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import scala.jdk.CollectionConverters._
 import Ast._
 
 /** Lowers a resolved PRQL pipeline to Spark `DataFrame` transformations —
@@ -116,23 +117,7 @@ object Lowering {
         pending = items
 
       case Loop(pipe) =>
-        // Spark has no recursive CTE, so the compiler drives the iteration
-        // (SURVEY §2c): acc ∪ step(acc) ∪ step²(acc) … until a step is
-        // empty. localCheckpoint (eager) bounds each step's plan lineage —
-        // without it analysis cost compounds per iteration; the emptiness
-        // probe is one action per step by construction of the semantics.
-        val maxIter = 1000
-        var acc = df.localCheckpoint()
-        var frontier = acc
-        var i = 0
-        var more = true
-        while (more) {
-          if (i >= maxIter) throw LowerError(s"loop exceeded $maxIter iterations")
-          frontier = lowerPipeline(pipe, env, Some(frontier)).localCheckpoint()
-          if (frontier.isEmpty) more = false
-          else { acc = acc.unionByName(frontier); i += 1 }
-        }
-        df = acc
+        df = lowerLoop(df, pipe, env)
 
       case Take(lo, hi) =>
         if (pending.nonEmpty) df = df.orderBy(sortCols(pending): _*)
@@ -178,6 +163,69 @@ object Lowering {
         df = df.unionByName(resolveTable(table, env))
     }
     if (pending.nonEmpty) df.orderBy(sortCols(pending): _*) else df
+  }
+
+  // ---------- loop ----------
+
+  /** Frontiers of at most this many rows stay on the driver: the anchor
+    * cutoff Spark 4.1's `UnionLoopExec` uses for the same purpose. */
+  private val localFrontierRows = 100
+  private val maxLoopIterations = 1000
+
+  /** A loop part: `rows` holds it on the driver (`df` is then a
+    * LocalRelation over them); `None` means `df` is a localCheckpoint. */
+  private final case class LoopPart(df: DataFrame, rows: Option[Array[Row]])
+
+  /** `loop (step)` = anchor ∪ step(anchor) ∪ step²(anchor) … until a step is
+    * empty (SURVEY §2c). Spark 4.1 has a recursive CTE (`UnionLoop`), but it
+    * repartitions every round (~2× slower on a 150k-row, 4-round loop) and
+    * fails past `spark.sql.cteRecursionRowLimit` rows, so the compiler drives
+    * the iteration. A frontier of ≤ `localFrontierRows` rows is held as a
+    * LocalRelation, so a filter/derive step over it folds at optimization
+    * (ConvertToLocalRelation) and runs no job; a larger one is
+    * localCheckpointed to bound its lineage. One bounded probe per round
+    * sizes the frontier and answers emptiness. The parts are unioned once,
+    * at the end. */
+  private def lowerLoop(anchor: DataFrame, pipe: Seq[Transform], env: Env): DataFrame = {
+    def local(rows: Array[Row], d: DataFrame) =
+      LoopPart(env.spark.createDataFrame(rows.toSeq.asJava, d.schema), Some(rows))
+    def probe(d: DataFrame) = d.limit(localFrontierRows + 1).collect()
+    // Each part runs once. A plan bounded to ≤ localFrontierRows rows (a
+    // filter/derive over a LocalRelation, a `take`) is probed directly;
+    // anything else is checkpointed first and the probe reads the checkpoint.
+    def materialize(d: DataFrame): LoopPart = {
+      val bounded = d.queryExecution.analyzed.maxRows.exists(_ <= localFrontierRows)
+      val in = if (bounded) d else d.localCheckpoint()
+      val rows = probe(in)
+      if (rows.length <= localFrontierRows) local(rows, in) else LoopPart(in, None)
+    }
+
+    val parts = scala.collection.mutable.ArrayBuffer(materialize(anchor))
+    var frontier = parts.head
+    var more = true
+    while (more) {
+      if (parts.length > maxLoopIterations)
+        throw LowerError(s"loop exceeded $maxLoopIterations iterations")
+      frontier = materialize(lowerPipeline(pipe, env, Some(frontier.df)))
+      if (frontier.rows.exists(_.isEmpty)) more = false else parts += frontier
+    }
+    // unionByName widens column types across parts, as SQL's UNION ALL does
+    val union = parts.map(_.df).reduce(_ unionByName _)
+    if (parts.exists(_.rows.isEmpty)) union
+    else {
+      // every part is on the driver: keep one relation, casting a part whose
+      // columns differ from the union's (a projection over a LocalRelation,
+      // so no job). One partition: a LocalRelation scan is otherwise spread
+      // over every core, and a sort after the loop would then range-shuffle
+      // a few rows (a sampling job and a map stage).
+      def shape(d: DataFrame) = d.schema.fields.toSeq.map(f => (f.name, f.dataType))
+      val cols = union.schema.fields.toSeq.map(f =>
+        F.col("`" + f.name.replace("`", "``") + "`").cast(f.dataType).as(f.name))
+      val rows = parts.flatMap { p =>
+        if (shape(p.df) == shape(union)) p.rows.get.toSeq else p.df.select(cols: _*).collect().toSeq
+      }
+      env.spark.createDataFrame(rows.asJava, union.schema).coalesce(1)
+    }
   }
 
   // ---------- group ----------

@@ -85,6 +85,17 @@ class CliSpec extends AnyFunSuite {
     intercept[Writers.OutputError](Writers.inferFormat(None, Some("parquet")))
   }
 
+  test("a failing write removes its temp directory") {
+    val spark = SparkTest.session
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def outDirs() = Option(tmpRoot.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith("graft-out")).map(_.getName).toSet
+    val before = outDirs()
+    assertThrows[java.nio.file.NoSuchFileException](
+      Writers.write(spark.range(3).toDF("n"), Some("/nonexistent/dir/x.csv"), Writers.Csv))
+    assert(outDirs() -- before == Set.empty)
+  }
+
   test(".env file supplies PQ_* fallbacks; real environment wins") {
     val dir = java.nio.file.Files.createTempDirectory("dotenv")
     java.nio.file.Files.writeString(dir.resolve(".env"),

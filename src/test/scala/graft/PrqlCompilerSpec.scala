@@ -432,6 +432,121 @@ class PrqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out == Seq(1L, 2L, 3L, 4L, 5L))
   }
 
+  /** Jobs fired while `body` runs. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftListeners.drain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("loop: a small frontier stays on the driver, so q28 lowers with at most 2 jobs") {
+    import graft.prql.{Lowering, Parser}
+    val q28 = Parser.parse(
+      """from region
+        |take 1
+        |select [n = 1]
+        |loop (
+        |  filter n < 8
+        |  derive [n = n + 1]
+        |)
+        |sort n""".stripMargin)
+    val env = Lowering.Env(spark, tables, Map.empty, Map.empty)
+    // one bounded anchor probe; every round folds over a LocalRelation (a
+    // checkpoint and an emptiness job per round would make 17)
+    val (df, jobs) = jobsDuring(Lowering.lowerQuery(q28, env))
+    assert(jobs <= 2, s"$jobs jobs fired while lowering q28")
+    assert(df.collect().map(_.getLong(0)).toSeq == (1L to 8L))
+  }
+
+  test("loop: an INT anchor unioned with BIGINT steps widens to BIGINT") {
+    val df = prql(
+      """from region
+        |select [n = r_regionkey]
+        |loop (
+        |  filter n < 20
+        |  sort n
+        |  take 2
+        |  derive [n = n + 10]
+        |)""".stripMargin)
+    assert(spark.table("region").schema("r_regionkey").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(df.schema("n").dataType == org.apache.spark.sql.types.LongType)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L))
+  }
+
+  test("loop: frontiers crossing the 100-row cutoff in both directions") {
+    // large all the way, then empty
+    val n = spark.table("orders").count()
+    assert(n > 100)
+    val agg = prql(
+      """from orders
+        |select [k = o_orderkey, d = 0]
+        |loop (
+        |  filter d < 3
+        |  derive [d = d + 1]
+        |)
+        |aggregate [c = count, s = sum d]""".stripMargin).collect().head
+    assert((agg.getLong(0), agg.getLong(1)) == (4 * n, 6 * n))
+    // large anchor, then small frontiers down to empty; checked against
+    // Spark's own recursive CTE
+    assertSameAs(
+      prql(
+        """from orders
+          |select [k = o_orderkey]
+          |loop (
+          |  filter k > 0 and k <= 64
+          |  derive [k = k * 2]
+          |)
+          |sort k""".stripMargin),
+      """WITH RECURSIVE t(k) AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) FROM orders
+        |  UNION ALL SELECT k * 2 FROM t WHERE k > 0 AND k <= 64)
+        |SELECT k FROM t ORDER BY k""".stripMargin)
+    // small anchor, a large step, then empty
+    assertSameAs(
+      prql(
+        """from nation
+          |select [k = n_nationkey, d = 0]
+          |loop (
+          |  filter d == 0
+          |  join orders [k == o_custkey % 25]
+          |  select [k = o_orderkey, d = 1]
+          |)
+          |sort [k, d]""".stripMargin),
+      """SELECT n_nationkey AS k, 0 AS d FROM nation
+        |UNION ALL
+        |SELECT o_orderkey, 1 FROM nation JOIN orders ON n_nationkey = o_custkey % 25
+        |ORDER BY k, d""".stripMargin)
+  }
+
+  test("loop: an empty anchor gives no rows with the anchor's schema") {
+    val anchor = prql("from region | select [n = r_regionkey, name = r_name] | filter n < 0")
+    val df = prql(
+      """from region
+        |select [n = r_regionkey, name = r_name]
+        |filter n < 0
+        |loop (derive [n = n + 1])""".stripMargin)
+    assert(df.schema == anchor.schema)
+    assert(df.collect().isEmpty)
+  }
+
+  test("loop: a step that never empties fails loudly at the iteration cap") {
+    val e = intercept[graft.prql.Lowering.LowerError](prql(
+      """from region
+        |take 1
+        |select [n = 1]
+        |loop (derive [n = n + 1])""".stripMargin))
+    assert(e.getMessage == "loop exceeded 1000 iterations")
+  }
+
   test("s-string holes carry full expressions: arithmetic, func inline, pipe-in, switch") {
     assertSameAs(
       prql("""func net p d -> p * (1 - d)
