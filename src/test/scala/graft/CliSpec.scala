@@ -223,4 +223,16 @@ class CliSpec extends AnyFunSuite {
     assert(printed.contains("(1) Scan"), s"expected numbered nodes:\n$printed")
     assert(!java.nio.file.Files.exists(out), "--explain must not execute the write")
   }
+
+  test("--no-exec over a parquet source prints the plan and fires no Spark job") {
+    implicit val spark = SparkTest.session
+    val bos = new java.io.ByteArrayOutputStream()
+    val (_, jobs) = SparkTest.jobsDuring(Console.withOut(new java.io.PrintStream(bos)) {
+      Cli.run(Cli.parseArgs(Array(
+        "--no-exec", "--from", "t=/root/testdata/sf0.001/region.parquet", "from t")))
+    })
+    val printed = bos.toString
+    assert(printed.contains("Relation") && printed.contains("r_name"), s"expected a plan, got:\n$printed")
+    assert(jobs == 0, s"$jobs job(s) fired by a dry run")
+  }
 }

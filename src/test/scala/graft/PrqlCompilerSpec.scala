@@ -432,21 +432,6 @@ class PrqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out == Seq(1L, 2L, 3L, 4L, 5L))
   }
 
-  /** Jobs fired while `body` runs. */
-  def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.GraftListeners.drain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("loop: a small frontier stays on the driver, so q28 lowers with at most 2 jobs") {
     import graft.prql.{Lowering, Parser}
     val q28 = Parser.parse(
@@ -461,7 +446,7 @@ class PrqlCompilerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val env = Lowering.Env(spark, tables, Map.empty, Map.empty)
     // one bounded anchor probe; every round folds over a LocalRelation (a
     // checkpoint and an emptiness job per round would make 17)
-    val (df, jobs) = jobsDuring(Lowering.lowerQuery(q28, env))
+    val (df, jobs) = SparkTest.jobsDuring(Lowering.lowerQuery(q28, env))
     assert(jobs <= 2, s"$jobs jobs fired while lowering q28")
     assert(df.collect().map(_.getLong(0)).toSeq == (1L to 8L))
   }

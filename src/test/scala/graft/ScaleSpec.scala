@@ -122,26 +122,18 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("LSH auto-tune derives N from plan stats — no eager count() job (VERDICT r2 #3)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.ops.Similarity
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     // the read itself runs a schema-inference job — do it before listening
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // constructing the plan (incl. plane auto-tune at nPlanes=0, the x05
-      // config) must stay lazy: round 2 ran corpus.count() here, an extra
-      // job that re-executed the whole upstream plan on derived inputs
+    // constructing the plan (incl. plane auto-tune at nPlanes=0, the x05
+    // config) must stay lazy: round 2 ran corpus.count() here, an extra
+    // job that re-executed the whole upstream plan on derived inputs
+    val (_, jobs) = SparkTest.jobsDuring {
       Similarity.nearDupPairs(emb, "vec_id", "embedding", threshold = 0.4, nTables = 16)
       Similarity.lshKnn(emb, emb.limit(5), "vec_id", "embedding", k = 3)
-      // listener events are delivered async — let the bus drain before judging
-      Thread.sleep(1500)
-      assert(jobs.get == 0,
-        "auto-tune must derive the corpus size from optimizer stats, not an eager count() job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      "auto-tune must derive the corpus size from optimizer stats, not an eager count() job")
 
     // the stats estimate feeds log2(N/target): on this parquet scan it must
     // land within one plane of the exact-count answer (500 rows at sf0.01)
@@ -153,22 +145,15 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("spreadNarrowScan passes dedup and set-operation inputs through, firing no job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val a = Seq(1L, 1L, 2L, 3L).toDF("k")
     val b = Seq(2L, 3L, 4L).toDF("k")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // each plans a shuffle: probing its parallelism would run it eagerly
+    // each plans a shuffle: probing its parallelism would run it eagerly
+    val (_, jobs) = SparkTest.jobsDuring {
       Seq(a.dropDuplicates(), a.intersect(b), a.except(b)).foreach { df =>
         assert(Scale.spreadNarrowScan(df) eq df)
       }
-      org.apache.spark.GraftListeners.drain(spark.sparkContext)
-      assert(jobs.get == 0, s"${jobs.get} job(s) fired at construction")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"$jobs job(s) fired at construction")
   }
 
   test("salted two-phase aggregation equals one-phase groupBy") {

@@ -14,4 +14,20 @@ object SparkTest {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Spark jobs started on the shared session while `body` runs, counted
+    * after the listener bus has drained. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    session.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftListeners.drain(session.sparkContext)
+      (out, jobs.get)
+    } finally session.sparkContext.removeSparkListener(listener)
+  }
 }
