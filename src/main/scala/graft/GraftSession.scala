@@ -16,6 +16,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // events.parquet carries ns timestamps; Spark is µs-native (SURVEY §1)
+      // Spark is µs-native (SURVEY §1): parquet inputs with ns timestamps
+      // read as long nanos instead of failing the read
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

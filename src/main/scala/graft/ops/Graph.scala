@@ -41,7 +41,7 @@ object Graph {
     * by `dst`, and a 1-row dangling aggregate that rides a broadcast
     * cross-join — never a driver action. At 100 TB the edge list dominates
     * and is scanned once per round with no resizing; rank state is one row
-    * per node. Lineage is truncated every `checkpointInterval` rounds
+    * per node. Lineage is truncated every 5 rounds
     * ([[Components]]' localCheckpoint idiom) so long runs do not
     * re-plan a growing DAG.
     *
@@ -57,29 +57,12 @@ object Graph {
     * @return one row per node: (node, out_deg, rank) after `iters` rounds
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85,
-               checkpointInterval: Int = 5): DataFrame = {
+               iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0,1), got $damping")
-    // The edge list is consumed EVERY round (contrib join) plus three
-    // times at setup (nodes × 2, degrees) — materialize it once, or an
-    // upstream build (a big join, a distinct) re-executes per iteration:
-    // measured 13.6 → 10.1 s task on x92's orders×lineitem edges at 3
-    // rounds, and the saving grows linearly in iters at 100 TB where the
-    // edge build is the dominant scan
-    val e = edges
-      .filter(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
-      .select(F.col(srcCol).as("src"), F.col(dstCol).as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(F.col("src").as("node"))
-      .union(e.select(F.col("dst").as("node")))
-      .distinct()
-    val outDeg = e.groupBy(F.col("src").as("node"))
-      .agg(F.count(F.lit(1)).as("out_deg"))
-    val base = nodes.join(outDeg, Seq("node"), "left")
-      .select(F.col("node"), F.coalesce(F.col("out_deg"), F.lit(0L)).as("out_deg"))
-      .localCheckpoint() // setup frame reused every round — cut the build lineage
+    val (e, _, degs) = rankPrelude(edges, srcCol, dstCol)
+    val base = degs.localCheckpoint()
     // N: one setup action; (1-d)/N and 1/N precompute driver-side with the
     // same IEEE steps an oracle engine performs at runtime
     val n = base.count()
@@ -88,36 +71,8 @@ object Graph {
     // r0 = round6(1/N): quantized so the dangling sum (thousands of equal
     // addends) is association-order-stable; rounded IN THE PLAN by F.round
     // so both engines apply their native 6-dp rounding to the same double
-    var ranks = base.withColumn("rank", F.round(F.lit(1.0 / nD), 6))
-    var it = 0
-    while (it < iters) {
-      // 1-row dangling mass; sum of 6-dp multiples rounded to kill
-      // association-order ulp drift, NULL (no sinks) → 0.0
-      val dang = ranks.filter(F.col("out_deg") === 0L)
-        .agg(F.round(F.sum("rank"), 6).as("__dang"))
-      val contribs = e.join(
-          ranks.select(F.col("node").as("src"), F.col("out_deg"), F.col("rank")),
-          "src")
-        .groupBy(F.col("dst").as("node"))
-        // per-EDGE quantization rides the floor form (Quant.halfUp) —
-        // F.round's BigDecimal per edge per round was pure overhead;
-        // grid values identical, x92 re-pinned hash-green at 3 SFs
-        .agg(F.round(F.sum(
-          Quant.halfUp(F.lit(damping) * F.col("rank") / F.col("out_deg"), 6)), 6).as("__cs"))
-      val next = base.join(contribs, Seq("node"), "left")
-        .crossJoin(F.broadcast(dang))
-        .select(F.col("node"), F.col("out_deg"),
-          F.round(
-            F.lit((1.0 - damping) / nD) +
-              F.lit(damping) * F.coalesce(F.col("__dang"), F.lit(0.0)) / F.lit(nD) +
-              F.coalesce(F.col("__cs"), F.lit(0.0)),
-            6).as("rank"))
-      ranks =
-        if ((it + 1) % checkpointInterval == 0) next.localCheckpoint()
-        else next
-      it += 1
-    }
-    ranks
+    rankRounds(e, base, F.round(F.lit(1.0 / nD), 6), iters, damping,
+      F.lit((1.0 - damping) / nD) + F.lit(damping) * dangMass / F.lit(nD))
   }
 
   /** Personalized PageRank (random walk with restart, Haveliwala 2002)
@@ -152,13 +107,47 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, iters: Int, nSeeds: Int = 4,
                            damping: Double = 0.85,
-                           seedFilter: Option[Column] = None,
-                           checkpointInterval: Int = 5): DataFrame = {
+                           seedFilter: Option[Column] = None): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(nSeeds >= 1 && nSeeds <= 1024,
       s"nSeeds must be in [1,1024], got $nSeeds")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0,1), got $damping")
+    val (e, nodes, degs) = rankPrelude(edges, srcCol, dstCol)
+    val seeds = seedFilter match {
+      case Some(p) => nodes.filter(p).select(F.col("node"))
+      case None => nodes
+        .withColumn("__h", F.md5(F.col("node").cast("string")))
+        .orderBy(F.col("__h"), F.col("node")).limit(nSeeds)
+        .select(F.col("node"))
+    }
+    val base = degs
+      .join(F.broadcast(seeds.withColumn("__s", F.lit(1))),
+        Seq("node"), "left")
+      .select(F.col("node"), F.col("out_deg"),
+        F.coalesce(F.col("__s"), F.lit(0)).as("seed"))
+      .localCheckpoint()
+    val k = base.filter(F.col("seed") === 1).count()
+    require(k > 0, "personalizedPageRank: empty seed set")
+    // t(v): 6-dp quantized seed mass, the r0 = teleport start
+    val tp = F.when(F.col("seed") === 1,
+      F.round(F.lit(1.0 / k.toDouble), 6)).otherwise(F.lit(0.0))
+    rankRounds(e, base, tp, iters, damping,
+      F.lit(1.0 - damping) * tp + F.lit(damping) * dangMass * tp)
+      .orderBy(F.col("rank").desc, F.col("node"))
+  }
+
+  /** Setup shared by the rank ops: the null-free (src, dst) edge list,
+    * its node set, and every node's out-degree (0 for sinks). The edge
+    * list is consumed EVERY round (contrib join) plus three times at
+    * setup (nodes × 2, degrees) — it is materialized once, or an upstream
+    * build (a big join, a distinct) re-executes per iteration: measured
+    * 13.6 → 10.1 s task on x92's orders×lineitem edges at 3 rounds, and
+    * the saving grows linearly in iters at 100 TB where the edge build is
+    * the dominant scan.
+    * @return (edges, nodes, (node, out_deg)) */
+  private def rankPrelude(edges: DataFrame, srcCol: String,
+                          dstCol: String): (DataFrame, DataFrame, DataFrame) = {
     val e = edges
       .filter(F.col(srcCol).isNotNull && F.col(dstCol).isNotNull)
       .select(F.col(srcCol).as("src"), F.col(dstCol).as("dst"))
@@ -168,77 +157,52 @@ object Graph {
       .distinct()
     val outDeg = e.groupBy(F.col("src").as("node"))
       .agg(F.count(F.lit(1)).as("out_deg"))
-    val seeds = seedFilter match {
-      case Some(p) => nodes.filter(p).select(F.col("node"))
-      case None => nodes
-        .withColumn("__h", F.md5(F.col("node").cast("string")))
-        .orderBy(F.col("__h"), F.col("node")).limit(nSeeds)
-        .select(F.col("node"))
-    }
-    val base = nodes.join(outDeg, Seq("node"), "left")
-      .join(F.broadcast(seeds.withColumn("__s", F.lit(1))),
-        Seq("node"), "left")
-      .select(F.col("node"),
-        F.coalesce(F.col("out_deg"), F.lit(0L)).as("out_deg"),
-        F.coalesce(F.col("__s"), F.lit(0)).as("seed"))
-      .localCheckpoint()
-    val k = base.filter(F.col("seed") === 1).count()
-    require(k > 0, "personalizedPageRank: empty seed set")
-    // t(v): 6-dp quantized seed mass, the r0 = teleport start
-    val tp = F.when(F.col("seed") === 1,
-      F.round(F.lit(1.0 / k.toDouble), 6)).otherwise(F.lit(0.0))
-    var ranks = base.withColumn("rank", tp)
-    var it = 0
-    while (it < iters) {
+    val degs = nodes.join(outDeg, Seq("node"), "left")
+      .select(F.col("node"), F.coalesce(F.col("out_deg"), F.lit(0L)).as("out_deg"))
+    (e, nodes, degs)
+  }
+
+  /** The rank loop cuts its lineage every this many rounds. */
+  private val rankCheckpointEvery = 5
+
+  /** The round's dangling mass — the 1-row `__dang` sum over sinks, NULL
+    * (no sinks) read as 0.0 — for callers' restart terms. */
+  private val dangMass: Column = F.coalesce(F.col("__dang"), F.lit(0.0))
+
+  /** `iters` rank rounds over the checkpointed setup frame `base` (node,
+    * out_deg, any extra columns, carried through), starting from `r0`:
+    * {{{
+    *   rank'(v) = round6(restart + Σ_{(u,v)∈E} halfUp6(d · rank(u)/out(u)))
+    * }}}
+    * `restart` is the caller's teleport term over [[dangMass]], passed as
+    * a Column so each op keeps its exact floating-point expression. */
+  private def rankRounds(e: DataFrame, base: DataFrame, r0: Column,
+                         iters: Int, damping: Double,
+                         restart: Column): DataFrame = {
+    var ranks = base.withColumn("rank", r0)
+    (1 to iters).foreach { it =>
+      // 1-row dangling mass; sum of 6-dp multiples rounded to kill
+      // association-order ulp drift
       val dang = ranks.filter(F.col("out_deg") === 0L)
         .agg(F.round(F.sum("rank"), 6).as("__dang"))
       val contribs = e.join(
-          ranks.select(F.col("node").as("src"), F.col("out_deg"),
-            F.col("rank")), "src")
+          ranks.select(F.col("node").as("src"), F.col("out_deg"), F.col("rank")),
+          "src")
         .groupBy(F.col("dst").as("node"))
+        // per-EDGE quantization rides the floor form (Quant.halfUp) —
+        // F.round's BigDecimal per edge per round was pure overhead;
+        // grid values identical, x92 re-pinned hash-green at 3 SFs
         .agg(F.round(F.sum(
-          Quant.halfUp(F.lit(damping) * F.col("rank") / F.col("out_deg"),
-            6)), 6).as("__cs"))
+          Quant.halfUp(F.lit(damping) * F.col("rank") / F.col("out_deg"), 6)), 6).as("__cs"))
       val next = base.join(contribs, Seq("node"), "left")
         .crossJoin(F.broadcast(dang))
-        .select(F.col("node"), F.col("out_deg"), F.col("seed"),
-          F.round(
-            F.lit(1.0 - damping) * tp +
-              F.lit(damping) * F.coalesce(F.col("__dang"), F.lit(0.0)) * tp +
-              F.coalesce(F.col("__cs"), F.lit(0.0)),
-            6).as("rank"))
-      ranks =
-        if ((it + 1) % checkpointInterval == 0) next.localCheckpoint()
-        else next
-      it += 1
+        .select(base.columns.map(F.col) :+
+          F.round(restart + F.coalesce(F.col("__cs"), F.lit(0.0)), 6).as("rank"): _*)
+      ranks = if (it % rankCheckpointEvery == 0) next.localCheckpoint() else next
     }
-    ranks.select("node", "out_deg", "seed", "rank")
-      .orderBy(F.col("rank").desc, F.col("node"))
+    ranks
   }
 
-  /** Per-node triangle counts by degree-ordered orientation (the
-    * MapReduce triangle algorithm of Suri & Vassilvitskii 2011): clustering
-    * structure for a co-occurrence / link graph — the local clustering
-    * signal behind community-quality and spam-farm detection on crawl
-    * graphs.
-    *
-    * Input is an undirected edge list (either direction, duplicates fine);
-    * it is canonicalized to distinct a<b pairs. Each edge is then ORIENTED
-    * from its lower-(degree, id) endpoint to the higher one. Orientation is
-    * the whole algorithm: every wedge `u→v, u→w` is generated at a node u
-    * whose oriented out-degree is bounded by O(√m) on any graph (the
-    * arboricity bound), so the wedge join — the step that goes quadratic
-    * in naive enumeration on a hub node — is bounded by m^1.5 TOTAL
-    * regardless of degree skew. A 10M-follower hub generates ZERO wedges;
-    * its triangles are counted at their two low-degree corners.
-    *
-    * Plan shape: one distinct (one shuffle), one degree rollup, the wedge
-    * self-join on the oriented source, and one equi-join of wedges back
-    * onto oriented edges; per-corner counts then roll up with a map-side
-    * partial. All integer keys and counts — engine-replayable exactly.
-    *
-    * @return (node, n_tri) — one row per node appearing in any edge
-    */
   /** Co-occurrence edge list: items sharing a group (suppliers in an
     * order, tokens in a doc, hosts in a session) become an edge when they
     * co-occur in at least `minCount` distinct groups. The `minCount`
@@ -278,6 +242,60 @@ object Graph {
       .filter(F.col("a") =!= F.col("b"))
       .distinct()
 
+  /** (node, `name`) — how many rows of `df` name each node in column `a`
+    * or `b`: the degree rollup over an edge list. */
+  private def degrees(df: DataFrame, a: String, b: String,
+                      name: String): DataFrame =
+    df.select(F.col(a).as("node"))
+      .unionAll(df.select(F.col(b).as("node")))
+      .groupBy("node").agg(F.count(F.lit(1)).as(name))
+
+  /** Canonical (a, b) edges oriented from their (deg, id)-smaller endpoint
+    * to the other, as (lo, hi, `cols`...), checkpointed: the oriented list
+    * is referenced FOUR times downstream (both wedge sides + both
+    * closing-probe directions); without truncation Catalyst replays the
+    * whole edge-build + degree join per reference. `deg` is
+    * `degrees(und, "a", "b", "deg")`. */
+  private def orient(und: DataFrame, deg: DataFrame, cols: Column*): DataFrame = {
+    val fwd = F.col("__da") < F.col("__db") ||
+      (F.col("__da") === F.col("__db") && F.col("a") < F.col("b"))
+    und
+      .join(deg.select(F.col("node").as("a"), F.col("deg").as("__da")), "a")
+      .join(deg.select(F.col("node").as("b"), F.col("deg").as("__db")), "b")
+      .select(F.when(fwd, F.col("a")).otherwise(F.col("b")).as("lo") +:
+        F.when(fwd, F.col("b")).otherwise(F.col("a")).as("hi") +: cols: _*)
+      .localCheckpoint()
+  }
+
+  /** Both directions of a canonical (a, b) edge list as (__n, __nb):
+    * every node next to each of its neighbors. */
+  private def neighbors(und: DataFrame): DataFrame =
+    und.select(F.col("a").as("__n"), F.col("b").as("__nb"))
+      .unionAll(und.select(F.col("b").as("__n"), F.col("a").as("__nb")))
+
+  /** Per-node triangle counts by degree-ordered orientation (the
+    * MapReduce triangle algorithm of Suri & Vassilvitskii 2011): clustering
+    * structure for a co-occurrence / link graph — the local clustering
+    * signal behind community-quality and spam-farm detection on crawl
+    * graphs.
+    *
+    * Input is an undirected edge list (either direction, duplicates fine);
+    * it is canonicalized to distinct a<b pairs. Each edge is then ORIENTED
+    * from its lower-(degree, id) endpoint to the higher one. Orientation is
+    * the whole algorithm: every wedge `u→v, u→w` is generated at a node u
+    * whose oriented out-degree is bounded by O(√m) on any graph (the
+    * arboricity bound), so the wedge join — the step that goes quadratic
+    * in naive enumeration on a hub node — is bounded by m^1.5 TOTAL
+    * regardless of degree skew. A 10M-follower hub generates ZERO wedges;
+    * its triangles are counted at their two low-degree corners.
+    *
+    * Plan shape: one distinct (one shuffle), one degree rollup, the wedge
+    * self-join on the oriented source, and one equi-join of wedges back
+    * onto oriented edges; per-corner counts then roll up with a map-side
+    * partial. All integer keys and counts — engine-replayable exactly.
+    *
+    * @return (node, n_tri) — one row per node appearing in any edge
+    */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     triangleCountsCanon(canonicalUndirected(edges, srcCol, dstCol))
 
@@ -302,25 +320,7 @@ object Graph {
     * the skew-killer an unoriented Σ deg² adjacency self-join lacks
     * (VERDICT r13 #2). */
   private def orientedTriangles(und: DataFrame): DataFrame = {
-    val deg = und.select(F.col("a").as("node"))
-      .unionAll(und.select(F.col("b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("deg"))
-    // orient each canonical edge from its (deg, id)-smaller endpoint
-    val withDeg = und
-      .join(deg.select(F.col("node").as("a"), F.col("deg").as("__da")), "a")
-      .join(deg.select(F.col("node").as("b"), F.col("deg").as("__db")), "b")
-    // oriented is referenced FOUR times downstream (both wedge sides +
-    // both closing-probe directions); without truncation Catalyst replays
-    // the whole edge-build + degree join per reference — localCheckpoint
-    // materializes the (tiny) oriented edge list once, the pageRank idiom
-    val oriented = withDeg.select(
-      F.when(F.col("__da") < F.col("__db") ||
-          (F.col("__da") === F.col("__db") && F.col("a") < F.col("b")),
-          F.col("a")).otherwise(F.col("b")).as("lo"),
-      F.when(F.col("__da") < F.col("__db") ||
-          (F.col("__da") === F.col("__db") && F.col("a") < F.col("b")),
-          F.col("b")).otherwise(F.col("a")).as("hi"))
-      .localCheckpoint()
+    val oriented = orient(und, degrees(und, "a", "b", "deg"))
     // wedges at the low-degree corner; v < w dedupes the unordered pair
     val wedges = oriented.select(F.col("lo").as("u"), F.col("hi").as("v"))
       .join(oriented.select(F.col("lo").as("u"), F.col("hi").as("w")), "u")
@@ -360,9 +360,7 @@ object Graph {
     // the triangle pass both start here, and the upstream edge build
     // (x300: the lineitem co-purchase pair-explode) must not run twice
     val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    val deg = und.select(F.col("a").as("node"))
-      .unionAll(und.select(F.col("b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("deg"))
+    val deg = degrees(und, "a", "b", "deg")
     val tri = triangleCountsCanon(und)
     val nodes = deg.join(tri, Seq("node"), "left")
       .withColumn("n_tri", F.coalesce(F.col("n_tri"), F.lit(0L)))
@@ -460,11 +458,10 @@ object Graph {
       .select(F.col(srcCol).as("s"), F.col(dstCol).as("d"))
       .filter(F.col("s") =!= F.col("d"))
       .distinct()
-    val deg = e.select(F.col("s").as("n")).unionAll(e.select(F.col("d").as("n")))
-      .groupBy("n").agg(F.count(F.lit(1)).as("deg"))
+    val deg = degrees(e, "s", "d", "deg")
     val both = e
-      .join(deg.select(F.col("n").as("s"), F.col("deg").as("__da")), "s")
-      .join(deg.select(F.col("n").as("d"), F.col("deg").as("__db")), "d")
+      .join(deg.select(F.col("node").as("s"), F.col("deg").as("__da")), "s")
+      .join(deg.select(F.col("node").as("d"), F.col("deg").as("__db")), "d")
       .select(F.col("__da").as("x"), F.col("__db").as("y"))
     val sym = both.unionAll(both.select(F.col("y").as("x"), F.col("x").as("y")))
     val agg = sym.agg(
@@ -505,29 +502,44 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 64,
       s"rounds must be in [1,64], got $rounds")
-    var e = edges
-      .select(F.col(srcCol).cast("long").as("__a"),
-        F.col(dstCol).cast("long").as("__b"))
-      .filter(F.col("__a") =!= F.col("__b"))
-      .select(F.least(F.col("__a"), F.col("__b")).as("__a"),
-        F.greatest(F.col("__a"), F.col("__b")).as("__b"))
-      .distinct()
+    val und = canonicalUndirected(
+      edges.select(F.col(srcCol).cast("long").as(srcCol),
+        F.col(dstCol).cast("long").as(dstCol)), srcCol, dstCol)
       .localCheckpoint()
-    (1 to rounds).foreach { _ =>
-      val deg = e.select(F.col("__a").as("__n"))
-        .unionAll(e.select(F.col("__b").as("__n")))
-        .groupBy("__n").agg(F.count(F.lit(1)).as("__d"))
-      val keep = deg.filter(F.col("__d") >= k).select("__n")
-      e = e
-        .join(keep.select(F.col("__n").as("__a")), Seq("__a"), "left_semi")
-        .join(keep.select(F.col("__n").as("__b")), Seq("__b"), "left_semi")
-        .localCheckpoint()
-    }
-    e.select(F.col("__a").as("node"))
-      .unionAll(e.select(F.col("__b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("degree"))
-      .orderBy("node")
+    nodeDegrees(peel(und, rounds) { e =>
+      val keep = degrees(e, "a", "b", "deg").filter(F.col("deg") >= k)
+      e.join(keep.select(F.col("node").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(F.col("node").as("b")), Seq("b"), "left_semi")
+    })
   }
+
+  /** `rounds` peels of a checkpointed canonical (a, b) edge list: each
+    * round keeps the edges `step` returns and is checkpointed, so round
+    * r+1 scans round r's survivors, never the original corpus again. */
+  private def peel(und: DataFrame, rounds: Int)(
+      step: DataFrame => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(und)((e, _) => step(e).localCheckpoint())
+
+  /** The k-truss peel step: edges in at least k−2 triangles of `e`.
+    * Zero-support edges are absent from [[edgeSupport]], so the
+    * semi-join drops them without a left-outer + coalesce. */
+  private def trussStep(k: Int)(e: DataFrame): DataFrame =
+    e.join(edgeSupport(e).filter(F.col("__sup") >= (k - 2).toLong)
+      .select("a", "b"), Seq("a", "b"), "left_semi")
+
+  /** The peel ops' result: (node, degree) over the surviving edges, by
+    * node. */
+  private def nodeDegrees(e: DataFrame): DataFrame =
+    degrees(e, "a", "b", "degree").orderBy("node")
+
+  /** One (__n, __c) row per node of `comm`: a node listed with several
+    * communities `c` keeps the smallest. A duplicate mapping would
+    * otherwise multiply edge rows in the community joins and silently
+    * corrupt every count. */
+  private def communityMap(comm: DataFrame, nodeCol: String,
+                           c: Column): DataFrame =
+    comm.select(F.col(nodeCol).as("__n"), c.as("__c"))
+      .groupBy("__n").agg(F.min("__c").as("__c"))
 
   /** Newman modularity Q of a GIVEN node partition — "how much more of
     * the graph's edge mass falls inside these communities than a random
@@ -542,8 +554,9 @@ object Graph {
     * (m, Σe_c, Σd_c²) is an exact long, so Q is two divisions.
     *
     * Edges whose endpoint has no community row drop (inner join) — feed
-    * a complete assignment. Self-loops and duplicate/reversed edges are
-    * canonicalized away.
+    * a complete assignment. A node listed under several communities
+    * counts in the smallest one, as in [[partitionQuality]]. Self-loops
+    * and duplicate/reversed edges are canonicalized away.
     *
     * Scale shape: two broadcast-able dimension joins onto the edge list,
     * one community-bounded rollup, one endpoint-census rollup. No
@@ -554,23 +567,21 @@ object Graph {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  comm: DataFrame, nodeCol: String,
                  commCol: String): DataFrame = {
-    val e = edges
-      .select(F.least(F.col(srcCol), F.col(dstCol)).as("__a"),
-        F.greatest(F.col(srcCol), F.col(dstCol)).as("__b"))
-      .filter(F.col("__a") =!= F.col("__b"))
-      .distinct()
-    val cm = comm.select(F.col(nodeCol).as("__n"),
-      F.col(commCol).cast("string").as("__cm"))
-    val j = e
-      .join(F.broadcast(cm.select(F.col("__n").as("__a"),
-        F.col("__cm").as("__c1"))), Seq("__a"))
-      .join(F.broadcast(cm.select(F.col("__n").as("__b"),
-        F.col("__cm").as("__c2"))), Seq("__b"))
+    val cm = communityMap(comm, nodeCol, F.col(commCol).cast("string"))
+    val j = canonicalUndirected(edges, srcCol, dstCol)
+      .join(F.broadcast(cm.select(F.col("__n").as("a"),
+        F.col("__c").as("__c1"))), Seq("a"))
+      .join(F.broadcast(cm.select(F.col("__n").as("b"),
+        F.col("__c").as("__c2"))), Seq("b"))
     val tot = j.agg(F.count(F.lit(1)).as("m"),
       F.sum(F.when(F.col("__c1") === F.col("__c2"), 1L).otherwise(0L))
         .as("intra"))
-    val dsum = j.select(F.col("__c1").as("__cc"))
-      .unionAll(j.select(F.col("__c2").as("__cc")))
+    // explode, not a union of the two columns: every consumer of `j` then
+    // reads both communities, so `cm` aggregates in one shape and its
+    // exchange is reused (a union prunes each branch to its own shape,
+    // +2 jobs on x279)
+    val dsum = j.select(F.explode(F.array(F.col("__c1"), F.col("__c2")))
+        .as("__cc"))
       .groupBy("__cc").agg(F.count(F.lit(1)).as("__d"))
       .agg(F.count(F.lit(1)).as("k_comms"),
         F.sum(F.col("__d") * F.col("__d")).as("__sd2"))
@@ -580,6 +591,38 @@ object Graph {
           F.col("__sd2").cast("double") /
             (F.lit(4L) * F.col("m") * F.col("m")).cast("double"), 6)
           .as("q"))
+  }
+
+  /** The shared prelude of [[moransI]] and [[gearyC]]: one row with the
+    * attributed graph nodes' count `n`, exact sums `__t` = Σx and
+    * `__s2` = Σx², mean `__xbar` and centered square sum `__den` =
+    * Σ(x−x̄)², the edge count `m`, and the caller's `edgeSums` over every
+    * canonical edge carrying both endpoint values (`__xa`, `__xb`). x is
+    * the attribute ×`scale`, rounded to a long. */
+  private def attributeMoments(edges: DataFrame, srcCol: String,
+                               dstCol: String, attrs: DataFrame,
+                               nodeCol: String, valueCol: Column,
+                               scale: Long)(edgeSums: Column*): DataFrame = {
+    val e = canonicalUndirected(edges, srcCol, dstCol)
+    val nd = attrs.select(F.col(nodeCol).as("__n"),
+        F.round(valueCol.cast("double") * scale).cast("long").as("__x"))
+      .filter(F.col("__x").isNotNull)
+      .join(e.select(F.col("a").as("__n"))
+        .unionAll(e.select(F.col("b").as("__n"))).distinct(),
+        Seq("__n"), "left_semi")
+    val one = nd.agg(F.count(F.lit(1)).as("n"), F.sum("__x").as("__t"),
+      F.sum(F.col("__x") * F.col("__x")).as("__s2"))
+    val pe = e
+      .join(F.broadcast(nd.select(F.col("__n").as("a"),
+        F.col("__x").as("__xa"))), Seq("a"))
+      .join(F.broadcast(nd.select(F.col("__n").as("b"),
+        F.col("__x").as("__xb"))), Seq("b"))
+      .agg(F.count(F.lit(1)).as("m"), edgeSums: _*)
+    val xbar = F.col("__t").cast("double") / F.col("n").cast("double")
+    one.crossJoin(F.broadcast(pe))
+      .withColumn("__xbar", xbar)
+      .withColumn("__den", F.col("__s2").cast("double") -
+        F.col("__t").cast("double") * F.col("__xbar"))
   }
 
   /** Moran's I — network autocorrelation of a node attribute over the
@@ -603,38 +646,17 @@ object Graph {
   def moransI(edges: DataFrame, srcCol: String, dstCol: String,
               attrs: DataFrame, nodeCol: String, valueCol: Column,
               scale: Long = 100L): DataFrame = {
-    val e = edges
-      .select(F.least(F.col(srcCol), F.col(dstCol)).as("__a"),
-        F.greatest(F.col(srcCol), F.col(dstCol)).as("__b"))
-      .filter(F.col("__a") =!= F.col("__b"))
-      .distinct()
-    val at = attrs.select(F.col(nodeCol).as("__n"),
-      F.round(valueCol.cast("double") * scale).cast("long").as("__x"))
-      .filter(F.col("__x").isNotNull)
-    val nodesInG = e.select(F.col("__a").as("__n"))
-      .unionAll(e.select(F.col("__b").as("__n"))).distinct()
-    val nd = at.join(nodesInG, Seq("__n"), "left_semi")
-    val one = nd.agg(F.count(F.lit(1)).as("n"), F.sum("__x").as("__t"),
-      F.sum(F.col("__x") * F.col("__x")).as("__s2"))
-    val je = e
-      .join(F.broadcast(nd.select(F.col("__n").as("__a"),
-        F.col("__x").as("__xa"))), Seq("__a"))
-      .join(F.broadcast(nd.select(F.col("__n").as("__b"),
-        F.col("__x").as("__xb"))), Seq("__b"))
-    val pe = je.agg(F.count(F.lit(1)).as("m"),
-      F.sum(F.col("__xa") * F.col("__xb")).as("__p"),
+    val row = attributeMoments(edges, srcCol, dstCol, attrs, nodeCol,
+      valueCol, scale)(F.sum(F.col("__xa") * F.col("__xb")).as("__p"),
       F.sum(F.col("__xa") + F.col("__xb")).as("__se"))
-    val row = one.crossJoin(F.broadcast(pe))
     val nD = F.col("n").cast("double")
-    val xbar = F.col("__t").cast("double") / nD
-    val den = F.col("__s2").cast("double") -
-      F.col("__t").cast("double") * xbar
+    val xbar = F.col("__xbar")
     val cross = F.col("__p").cast("double") - xbar *
       F.col("__se").cast("double") + F.col("m").cast("double") *
       xbar * xbar
     row.select(F.col("n"), F.col("m"),
       F.round(nD * cross /
-        F.nullif(F.col("m").cast("double") * den, F.lit(0.0)), 6)
+        F.nullif(F.col("m").cast("double") * F.col("__den"), F.lit(0.0)), 6)
         .as("i"),
       F.round(F.lit(-1.0) /
         F.nullif(nD - 1.0, F.lit(0.0)), 6).as("e_i"))
@@ -665,35 +687,12 @@ object Graph {
   def gearyC(edges: DataFrame, srcCol: String, dstCol: String,
              attrs: DataFrame, nodeCol: String, valueCol: Column,
              scale: Long = 100L): DataFrame = {
-    val e = edges
-      .select(F.least(F.col(srcCol), F.col(dstCol)).as("__a"),
-        F.greatest(F.col(srcCol), F.col(dstCol)).as("__b"))
-      .filter(F.col("__a") =!= F.col("__b"))
-      .distinct()
-    val at = attrs.select(F.col(nodeCol).as("__n"),
-      F.round(valueCol.cast("double") * scale).cast("long").as("__x"))
-      .filter(F.col("__x").isNotNull)
-    val nodesInG = e.select(F.col("__a").as("__n"))
-      .unionAll(e.select(F.col("__b").as("__n"))).distinct()
-    val nd = at.join(nodesInG, Seq("__n"), "left_semi")
-    val one = nd.agg(F.count(F.lit(1)).as("n"), F.sum("__x").as("__t"),
-      F.sum(F.col("__x") * F.col("__x")).as("__s2"))
-    val je = e
-      .join(F.broadcast(nd.select(F.col("__n").as("__a"),
-        F.col("__x").as("__xa"))), Seq("__a"))
-      .join(F.broadcast(nd.select(F.col("__n").as("__b"),
-        F.col("__x").as("__xb"))), Seq("__b"))
-    val pe = je.agg(F.count(F.lit(1)).as("m"),
-      F.sum((F.col("__xa") - F.col("__xb")) *
+    val row = attributeMoments(edges, srcCol, dstCol, attrs, nodeCol,
+      valueCol, scale)(F.sum((F.col("__xa") - F.col("__xb")) *
         (F.col("__xa") - F.col("__xb"))).as("__ss"))
-    val row = one.crossJoin(F.broadcast(pe))
-    val nD = F.col("n").cast("double")
-    val xbar = F.col("__t").cast("double") / nD
-    val den = F.col("__s2").cast("double") -
-      F.col("__t").cast("double") * xbar
     row.select(F.col("n"), F.col("m"),
-      F.round((nD - 1.0) * F.col("__ss").cast("double") /
-        F.nullif(F.lit(2.0) * F.col("m").cast("double") * den,
+      F.round((F.col("n").cast("double") - 1.0) * F.col("__ss").cast("double") /
+        F.nullif(F.lit(2.0) * F.col("m").cast("double") * F.col("__den"),
           F.lit(0.0)), 6).as("c"),
       F.lit(1.0).as("e_c"))
   }
@@ -723,13 +722,11 @@ object Graph {
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
                      topN: Int = 20): DataFrame = {
     val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    val adj = und.select(F.col("a").as("__z"), F.col("b").as("__n"))
-      .unionAll(und.select(F.col("b").as("__z"), F.col("a").as("__n")))
-    val deg = adj.groupBy(F.col("__z").as("node"))
-      .agg(F.count(F.lit(1)).as("deg"))
+    val adj = neighbors(und)
+    val deg = degrees(und, "a", "b", "deg")
     // wedges u−z−v with u<v: every candidate pair shares neighbor z
-    val wedges = adj.select(F.col("__z"), F.col("__n").as("u"))
-      .join(adj.select(F.col("__z"), F.col("__n").as("v")), Seq("__z"))
+    val wedges = adj.select(F.col("__n").as("__z"), F.col("__nb").as("u"))
+      .join(adj.select(F.col("__n").as("__z"), F.col("__nb").as("v")), Seq("__z"))
       .filter(F.col("u") < F.col("v"))
       .join(F.broadcast(deg.select(F.col("node").as("__z"),
         F.col("deg").as("__dz"))), Seq("__z"))
@@ -783,23 +780,19 @@ object Graph {
   def harmonic2(edges: DataFrame, srcCol: String, dstCol: String,
                 topN: Int = 20): DataFrame = {
     val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    val adj = und.select(F.col("a").as("__z"), F.col("b").as("__n"))
-      .unionAll(und.select(F.col("b").as("__z"), F.col("a").as("__n")))
-    val deg = adj.groupBy(F.col("__z").as("node"))
-      .agg(F.count(F.lit(1)).as("deg"))
+    val adj = neighbors(und)
+    val deg = degrees(und, "a", "b", "deg")
     // distance-exactly-2: neighbors-of-neighbors, minus self, minus
     // direct neighbors (anti-join works on canonical a<b pairs)
-    val two = adj.select(F.col("__z").as("__mid"), F.col("__n").as("u"))
-      .join(adj.select(F.col("__z").as("__mid"), F.col("__n").as("w")),
+    val two = adj.select(F.col("__n").as("__mid"), F.col("__nb").as("u"))
+      .join(adj.select(F.col("__n").as("__mid"), F.col("__nb").as("w")),
         Seq("__mid"))
       .filter(F.col("u") =!= F.col("w"))
       .select(F.least(F.col("u"), F.col("w")).as("a"),
         F.greatest(F.col("u"), F.col("w")).as("b"))
       .distinct()
       .join(und, Seq("a", "b"), "left_anti")
-    val n2 = two.select(F.col("a").as("node"))
-      .unionAll(two.select(F.col("b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("n2"))
+    val n2 = degrees(two, "a", "b", "n2")
     deg.join(n2, Seq("node"), "left_outer")
       .withColumn("n2", F.coalesce(F.col("n2"), F.lit(0L)))
       .withColumn("h2", F.col("deg").cast("double") +
@@ -807,6 +800,23 @@ object Graph {
       .orderBy(F.col("h2").desc, F.col("node"))
       .limit(topN)
   }
+
+  /** Per-edge triangle support off [[orientedTriangles]] — (a, b, __sup)
+    * for every edge in at least one triangle (zero-support edges are
+    * ABSENT; callers needing them left-join the edge list). Each
+    * triangle (u, v, w) touches exactly 3 canonical edges: (v, w) is
+    * already canonical (v < w by construction), the two u-edges
+    * canonicalize by least/greatest. */
+  private def edgeSupport(und: DataFrame): DataFrame =
+    orientedTriangles(und)
+      .select(F.explode(F.array(
+        F.struct(F.least(F.col("u"), F.col("v")).as("a"),
+          F.greatest(F.col("u"), F.col("v")).as("b")),
+        F.struct(F.least(F.col("u"), F.col("w")).as("a"),
+          F.greatest(F.col("u"), F.col("w")).as("b")),
+        F.struct(F.col("v").as("a"), F.col("w").as("b")))).as("__e"))
+      .select(F.col("__e.a").as("a"), F.col("__e.b").as("b"))
+      .groupBy("a", "b").agg(F.count(F.lit(1)).as("__sup"))
 
   /** Edge-support census — for every edge, the number of triangles it
     * participates in (its SUPPORT, the k-truss quantity), rolled into
@@ -832,23 +842,6 @@ object Graph {
     * @return per-support rows (support, n_edges, share, bridge_share)
     *         ordered by support — 6-dp; bridge_share repeated
     */
-  /** Per-edge triangle support off [[orientedTriangles]] — (a, b, __sup)
-    * for every edge in at least one triangle (zero-support edges are
-    * ABSENT; callers needing them left-join the edge list). Each
-    * triangle (u, v, w) touches exactly 3 canonical edges: (v, w) is
-    * already canonical (v < w by construction), the two u-edges
-    * canonicalize by least/greatest. */
-  private def edgeSupport(und: DataFrame): DataFrame =
-    orientedTriangles(und)
-      .select(F.explode(F.array(
-        F.struct(F.least(F.col("u"), F.col("v")).as("a"),
-          F.greatest(F.col("u"), F.col("v")).as("b")),
-        F.struct(F.least(F.col("u"), F.col("w")).as("a"),
-          F.greatest(F.col("u"), F.col("w")).as("b")),
-        F.struct(F.col("v").as("a"), F.col("w").as("b")))).as("__e"))
-      .select(F.col("__e.a").as("a"), F.col("__e.b").as("b"))
-      .groupBy("a", "b").agg(F.count(F.lit(1)).as("__sup"))
-
   def edgeSupportCensus(edges: DataFrame, srcCol: String,
                         dstCol: String): DataFrame = {
     val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
@@ -907,22 +900,10 @@ object Graph {
       .groupBy("a", "b").agg(F.max("__w").as("__w"))
       .localCheckpoint()
     val wmax = und.agg(F.max("__w").as("__wm"))
-    val deg = und.select(F.col("a").as("node"))
-      .unionAll(und.select(F.col("b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("deg"))
+    val deg = degrees(und, "a", "b", "deg")
     // (deg, id)-oriented edges carrying the normalized weight
-    val withDeg = und
-      .join(deg.select(F.col("node").as("a"), F.col("deg").as("__da")), "a")
-      .join(deg.select(F.col("node").as("b"), F.col("deg").as("__db")), "b")
-      .crossJoin(F.broadcast(wmax))
-    val fwd = F.col("__da") < F.col("__db") ||
-      (F.col("__da") === F.col("__db") && F.col("a") < F.col("b"))
-    val oriented = withDeg.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).as("lo"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).as("hi"),
-        (F.col("__w").cast("double") / F.col("__wm").cast("double"))
-          .as("__wn"))
-      .localCheckpoint()
+    val oriented = orient(und.crossJoin(F.broadcast(wmax)), deg,
+      (F.col("__w").cast("double") / F.col("__wm").cast("double")).as("__wn"))
     val wedges = oriented.select(F.col("lo").as("u"), F.col("hi").as("v"),
         F.col("__wn").as("__w1"))
       .join(oriented.select(F.col("lo").as("u"), F.col("hi").as("w"),
@@ -1042,18 +1023,8 @@ object Graph {
     require(k >= 3, s"k must be >= 3, got $k")
     require(rounds >= 1 && rounds <= 16,
       s"rounds must be in [1,16], got $rounds")
-    var e = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    (1 to rounds).foreach { _ =>
-      // zero-support edges are absent from edgeSupport, so the semi-join
-      // drops them without a left-outer + coalesce
-      val keep = edgeSupport(e).filter(F.col("__sup") >= (k - 2).toLong)
-      e = e.join(keep.select("a", "b"), Seq("a", "b"), "left_semi")
-        .localCheckpoint()
-    }
-    e.select(F.col("a").as("node"))
-      .unionAll(e.select(F.col("b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("degree"))
-      .orderBy("node")
+    nodeDegrees(peel(canonicalUndirected(edges, srcCol, dstCol)
+      .localCheckpoint(), rounds)(trussStep(k)))
   }
 
   /** [[kTruss]] run to FIXPOINT — the exact k-truss, for callers who
@@ -1085,9 +1056,7 @@ object Graph {
     var converged = prev == 0L
     var round = 0
     while (!converged && round < maxRounds) {
-      val keep = edgeSupport(e).filter(F.col("__sup") >= (k - 2).toLong)
-      e = e.join(keep.select("a", "b"), Seq("a", "b"), "left_semi")
-        .localCheckpoint()
+      e = peel(e, 1)(trussStep(k))
       val now = e.count()
       converged = now == prev || now == 0L
       prev = now
@@ -1098,10 +1067,7 @@ object Graph {
         s"kTrussFixpoint: no fixpoint after $maxRounds rounds " +
           s"($prev edges still shrinking) — raise maxRounds or use " +
           "kTruss(rounds=...) for the documented superset")
-    e.select(F.col("a").as("node"))
-      .unionAll(e.select(F.col("b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("degree"))
-      .orderBy("node")
+    nodeDegrees(e)
   }
 
   /** Partition quality census — grade a GIVEN community assignment
@@ -1141,14 +1107,8 @@ object Graph {
                        comm: DataFrame, nodeCol: String,
                        commCol: String): DataFrame = {
     val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    // enforce one row per node (advisor r13: a node mapped to two
-    // communities would survive .distinct() and MULTIPLY edge rows in
-    // the joins below, silently corrupting m/internal/cut/modularity) —
-    // deterministic pick: the lexicographically smallest community
-    val cm = comm.select(F.col(nodeCol).as("__n"),
-        F.coalesce(F.col(commCol).cast("string"), F.lit("__none"))
-          .as("__c"))
-      .groupBy("__n").agg(F.min("__c").as("__c"))
+    val cm = communityMap(comm, nodeCol,
+      F.coalesce(F.col(commCol).cast("string"), F.lit("__none")))
     val j = und
       .join(cm.select(F.col("__n").as("a"), F.col("__c").as("__ca")),
         Seq("a"), "left_outer")
@@ -1221,9 +1181,7 @@ object Graph {
                kMax: Int = 10): DataFrame = {
     require(kMax >= 1, s"kMax must be >= 1, got $kMax")
     val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    val deg = und.select(F.col("a").as("node"))
-      .unionAll(und.select(F.col("b").as("node")))
-      .groupBy("node").agg(F.count(F.lit(1)).as("deg"))
+    val deg = degrees(und, "a", "b", "deg")
     // bounded histograms: distinct degrees × kMax is the whole join
     val degHist = deg.groupBy("deg").agg(F.count(F.lit(1)).as("__cn"))
     val edgeMin = und
@@ -1274,16 +1232,15 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1)")
     val und = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    val adj = und.select(F.col("a").as("__v"), F.col("b").as("__u"))
-      .unionAll(und.select(F.col("b").as("__v"), F.col("a").as("__u")))
-    var c = adj.select(F.col("__v").as("node")).distinct()
+    val adj = neighbors(und)
+    var c = adj.select(F.col("__n").as("node")).distinct()
       .withColumn("katz", F.lit(1.0))
     for (_ <- 1 to iters) {
       c = adj
-        .join(c.select(F.col("node").as("__u"), F.col("katz")),
-          Seq("__u"))
+        .join(c.select(F.col("node").as("__nb"), F.col("katz")),
+          Seq("__nb"))
         .withColumn("__contrib", Quant.halfUp(F.lit(alpha) * F.col("katz"), 9))
-        .groupBy(F.col("__v").as("node"))
+        .groupBy(F.col("__n").as("node"))
         .agg(F.round(F.lit(beta) + F.sum("__contrib"), 9).as("katz"))
     }
     c.withColumn("rk", F.row_number().over(
@@ -1335,9 +1292,7 @@ object Graph {
       edges.select(F.col(srcCol).cast("long").as(srcCol),
         F.col(dstCol).cast("long").as(dstCol)), srcCol, dstCol)
     // symmetric neighbor list, built once and reused every round
-    val nbrs = e.select(F.col("a").as("__n"), F.col("b").as("__nb"))
-      .unionAll(e.select(F.col("b").as("__n"), F.col("a").as("__nb")))
-      .localCheckpoint()
+    val nbrs = neighbors(e).localCheckpoint()
     var lbl = nbrs.select(F.col("__n")).distinct()
       .select(F.col("__n"), F.col("__n").as("__l"))
       .localCheckpoint()
@@ -1356,6 +1311,23 @@ object Graph {
     }
     lbl.select(F.col("__n").as("node"), F.col("__l").as("community"))
       .orderBy("node")
+  }
+
+  /** The directed-distance ops' prelude: distinct (__s, __d) long edges
+    * without nulls or self-loops, checkpointed (every round joins them),
+    * and their node set.
+    * @return (edges, nodes) */
+  private def directedEdges(edges: DataFrame, srcCol: String,
+                            dstCol: String): (DataFrame, DataFrame) = {
+    val e = edges
+      .select(F.col(srcCol).cast("long").as("__s"),
+        F.col(dstCol).cast("long").as("__d"))
+      .filter(F.col("__s").isNotNull && F.col("__d").isNotNull &&
+        F.col("__s") =!= F.col("__d"))
+      .distinct()
+      .localCheckpoint()
+    (e, e.select(F.col("__s").as("node"))
+      .unionAll(e.select(F.col("__d").as("node"))).distinct())
   }
 
   /** k-landmark BFS distances + landmark harmonic closeness (Cohen et
@@ -1398,16 +1370,8 @@ object Graph {
     require(nLandmarks >= 1 && nLandmarks <= 64,
       s"nLandmarks must be in [1,64], got $nLandmarks")
     require(hops >= 1 && hops <= 8, s"hops must be in [1,8], got $hops")
-    val e = edges
-      .select(F.col(srcCol).cast("long").as("__s"),
-        F.col(dstCol).cast("long").as("__d"))
-      .filter(F.col("__s").isNotNull && F.col("__d").isNotNull &&
-        F.col("__s") =!= F.col("__d"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = e.select(F.col("__s").as("node"))
-      .unionAll(e.select(F.col("__d").as("node"))).distinct()
-      .localCheckpoint()
+    val (e, allNodes) = directedEdges(edges, srcCol, dstCol)
+    val nodes = allNodes.localCheckpoint()
     val landmarks = nodes
       .orderBy(F.md5(F.col("node").cast("string")), F.col("node"))
       .limit(nLandmarks)
@@ -1486,15 +1450,7 @@ object Graph {
                            dstCol: String, hops: Int = 3,
                            p: Int = 4): DataFrame = {
     require(hops >= 1 && hops <= 8, s"hops must be in [1,8], got $hops")
-    val e = edges
-      .select(F.col(srcCol).cast("long").as("__s"),
-        F.col(dstCol).cast("long").as("__d"))
-      .filter(F.col("__s").isNotNull && F.col("__d").isNotNull &&
-        F.col("__s") =!= F.col("__d"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = e.select(F.col("__s").as("node"))
-      .unionAll(e.select(F.col("__d").as("node"))).distinct()
+    val (e, nodes) = directedEdges(edges, srcCol, dstCol)
     var regs = Sketches.hllRegisters(nodes, Seq("node"), F.col("node"), p)
       .localCheckpoint()
     def level(h: Int): DataFrame =

@@ -3,9 +3,9 @@ package graft.prql
 import Ast._
 
 /** Render a parsed [[Ast.Query]] back to PRQL source the [[Parser]] accepts,
-  * such that `parse(print(q)) == q` structurally. Used by `--no-exec`
-  * debugging and by the PropertySpec parse↔print round-trip fuzz — the
-  * printer is deliberately conservative (compound sub-expressions are
+  * such that `parse(print(q)) == q` structurally. Its one user is the
+  * PrinterRoundTripSpec parse↔print round-trip fuzz — the printer is
+  * deliberately conservative (compound sub-expressions are
   * always parenthesized; parenthesizing is loss-free because the parser
   * returns the inner expression unwrapped, Parser.parseAtom's `(` branch).
   *

@@ -1,35 +1,25 @@
 package graft.sources
 
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericDatumReader, GenericFixed, GenericRecord}
-import org.apache.avro.file.DataFileReader
-import org.apache.avro.mapred.{AvroKey, FsInput}
-import org.apache.avro.mapreduce.AvroKeyInputFormat
+import org.apache.avro.generic.{GenericFixed, GenericRecord}
 import org.apache.avro.util.Utf8
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.io.NullWritable
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
 
-/** Distributed Avro scan without the spark-avro module.
+/** Avro ↔ Spark schema and value mapping for the [[AvroDataSource]] V2
+  * reader (`format("graft-avro")`, and `.avro` sources via the
+  * [[Registrar]]), without the spark-avro module.
   *
   * The reference DECLARES avro and never implements it (its DataFusion
   * branch is `unimplemented!` — /root/reference/src/main.rs:25,
   * src/backends/datafusion.rs:47-49). Spark's own avro datasource lives in
   * the external spark-avro jar, which this distribution does not bundle —
-  * but the underlying avro + avro-mapred libraries DO ship with Spark, so
-  * the scan is implemented here directly: the container format's own
-  * `AvroKeyInputFormat` (sync-marker splittable, so one large file fans
-  * out across executors like any FileInputFormat) feeds a per-partition
-  * GenericRecord→Row bridge, and the writer schema — read ONCE on the
-  * driver from the first file's header — maps structurally onto Spark
-  * types.
+  * but the underlying avro libraries DO ship with Spark, so the writer
+  * schema (read on the driver from a file header) maps structurally onto
+  * Spark types here, and each decoded record maps onto a Row.
   *
-  * Scale shape: schema discovery opens one file header (a few KB); data
-  * never touches the driver. Record conversion is per-partition with the
-  * schema re-parsed from its canonical JSON once per task, not per row.
   * Supported: all scalar types, enum/fixed, bytes, arrays, string-keyed
   * maps, nested records, null-unions, and the date / timestamp-millis/
   * micros / decimal (bytes or fixed, precision ≤ 38) logical types.
@@ -37,40 +27,6 @@ import scala.jdk.CollectionConverters._
   * fails loudly at schema time rather than miscoding values.
   */
 object AvroScan {
-
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val writerSchema = headerSchema(path, conf)
-    val sparkType = toStruct(writerSchema)
-    val schemaJson = writerSchema.toString
-    val rows = spark.sparkContext.newAPIHadoopFile(
-        path,
-        classOf[AvroKeyInputFormat[GenericRecord]],
-        classOf[AvroKey[GenericRecord]],
-        classOf[NullWritable])
-      .mapPartitions { it =>
-        val schema = new Schema.Parser().parse(schemaJson)
-        it.map { case (k, _) => toRow(k.datum(), schema) }
-      }
-    spark.createDataFrame(rows, sparkType)
-  }
-
-  /** Writer schema from the first .avro file's header (container files are
-    * self-describing; the reader never needs a user-supplied schema). */
-  private def headerSchema(path: String, conf: org.apache.hadoop.conf.Configuration): Schema = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val first =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".avro")).sortBy(_.getName)
-          .headOption.getOrElse(throw Registrar.SourceError(s"no .avro files under $path"))
-      else p
-    val in = new FsInput(first, conf)
-    try {
-      val reader = DataFileReader.openReader(in, new GenericDatumReader[GenericRecord]())
-      try reader.getSchema finally reader.close()
-    } finally in.close()
-  }
 
   private[graft] def toStruct(s: Schema): StructType = s.getType match {
     case Schema.Type.RECORD =>
@@ -124,12 +80,10 @@ object AvroScan {
   private def logicalName(s: Schema): String =
     Option(s.getLogicalType).map(_.getName).getOrElse("")
 
-  private def toRow(rec: GenericRecord, schema: Schema): Row =
-    Row.fromSeq(schema.getFields.asScala.map(f => fromAvro(rec.get(f.pos()), f.schema())).toSeq)
-
-  /** Positional record→Row bridge for the V2 reader ([[AvroV2]]): the
+  /** Positional record→Row mapping for the V2 reader ([[AvroV2]]): the
     * record was decoded with a PRUNED reader schema, so positions are the
-    * projected positions, not the writer's. */
+    * projected positions, not the writer's. Nested records map the same
+    * way, by their own fields' positions. */
   private[sources] def recordToRow(rec: GenericRecord, fieldSchemas: Array[Schema]): Row = {
     val vals = new Array[Any](fieldSchemas.length)
     var i = 0
@@ -176,7 +130,9 @@ object AvroScan {
         v.asInstanceOf[java.util.Map[Any, Any]].asScala.map { case (k, mv) =>
           k.toString -> fromAvro(mv, s.getValueType)
         }.toMap
-      case Schema.Type.RECORD => toRow(v.asInstanceOf[GenericRecord], s)
+      case Schema.Type.RECORD =>
+        recordToRow(v.asInstanceOf[GenericRecord],
+          s.getFields.asScala.map(_.schema()).toArray)
       case _ => v match { // BOOLEAN, INT, LONG, FLOAT, DOUBLE pass through
         case u: Utf8 => u.toString
         case other => other

@@ -19,12 +19,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 Avro connector (`format("graft-avro")` / `.avro` via the
-  * [[Registrar]]): the 100 TB-shaped version of [[AvroScan]].
+  * [[Registrar]]), the one avro reader; [[AvroScan]] holds its schema and
+  * value mapping.
   *
-  * Why V2 instead of the hadoop-RDD bridge: at scale the two things that
-  * matter for a row-format scan are (1) NOT decoding columns the query
-  * doesn't read and (2) fanning one large file out across executors. Both
-  * need connector integration:
+  * At scale the two things that matter for a row-format scan are (1) NOT
+  * decoding columns the query doesn't read and (2) fanning one large file
+  * out across executors. Both need connector integration:
   *
   *  - **Column pruning** ([[SupportsPushDownRequiredColumns]]): Catalyst
   *    hands the scan its required schema; the reader resolves the file
@@ -84,7 +84,7 @@ final class AvroScanBuilder(path: String, fullSchema: StructType,
     * avro decodes every writer field — so widen each required top-level
     * field back to its full table type. Spark projects the nested subset
     * post-scan (it reads `Scan.readSchema()`, not its own request), and the
-    * positional record→Row bridge stays aligned with the reader schema at
+    * positional record→Row mapping stays aligned with the reader schema at
     * every nesting level. Pruning a nested-pruned schema as-is crashed the
     * converter (ArrayIndexOutOfBounds) or mis-mapped type-coincident
     * sibling fields. */

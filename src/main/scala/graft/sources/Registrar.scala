@@ -67,7 +67,7 @@ object Registrar {
       // with this distribution, but the avro container libraries are, so
       // the scan is implemented here: the [[AvroDataSource]] V2 connector
       // (column pruning pushed into the avro reader schema + sync-marker
-      // byte-range splits); [[AvroScan.read]] is the hadoop-RDD fallback.
+      // byte-range splits), the one avro reader.
       spark.read.format(classOf[AvroDataSource].getName).load(path)
     case other => throw SourceError(s"unsupported source type: ${other.getOrElse("(none)")} ($path)")
   }

@@ -56,20 +56,8 @@ class AvroScanSpec extends AnyFunSuite {
     schema
   }
 
-  test("avro round-trip: schema mapping and values, via the Registrar path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro").toFile
-    writeFixture(dir)
-    val df = Registrar.read(spark, new java.io.File(dir, "part-0.avro").getPath)
-    val st = df.schema
-    assert(st("id").dataType == LongType && !st("id").nullable)
-    assert(st("score").dataType == DoubleType && st("score").nullable)
-    assert(st("tags").dataType == ArrayType(StringType, containsNull = false))
-    assert(st("meta").dataType.isInstanceOf[StructType])
-    assert(st("kind").dataType == StringType)
-    assert(st("payload").dataType == BinaryType)
-    assert(st("ts").dataType == TimestampType)
-    assert(st("d").dataType == DateType)
-    assert(st("counts").dataType == MapType(StringType, LongType, valueContainsNull = false))
+  /** The two fixture records, full width, as [[writeFixture]] wrote them. */
+  private def assertFixtureRows(df: org.apache.spark.sql.DataFrame): Unit = {
     val rows = df.orderBy("id").collect()
     assert(rows.length == 2)
     val r1 = rows(0)
@@ -84,8 +72,25 @@ class AvroScanSpec extends AnyFunSuite {
       java.time.LocalDate.ofEpochDay(19701))
     assert(r1.getAs[scala.collection.Map[String, Long]]("counts").toMap ==
       Map("a" -> 1L, "b" -> 2L))
+  }
+
+  test("avro round-trip: schema mapping and values, via the Registrar path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-avro").toFile
+    writeFixture(dir)
+    val df = Registrar.read(spark, new java.io.File(dir, "part-0.avro").getPath)
+    val st = df.schema
+    assert(st("id").dataType == LongType && !st("id").nullable)
+    assert(st("score").dataType == DoubleType && st("score").nullable)
+    assert(st("tags").dataType == ArrayType(StringType, containsNull = false))
+    assert(st("meta").dataType.isInstanceOf[StructType])
+    assert(st("kind").dataType == StringType)
+    assert(st("payload").dataType == BinaryType)
+    assert(st("ts").dataType == TimestampType)
+    assert(st("d").dataType == DateType)
+    assert(st("counts").dataType == MapType(StringType, LongType, valueContainsNull = false))
+    assertFixtureRows(df)
     // directory path resolves via the first file's header schema
-    assert(AvroScan.read(spark, dir.getPath).count() == 2)
+    assert(spark.read.format("graft-avro").load(dir.getPath).count() == 2)
     // and the relational layer composes on top like any other source
     df.createOrReplaceTempView("avro_docs")
     assert(spark.sql("SELECT sum(id) s FROM avro_docs WHERE score IS NOT NULL")
@@ -126,13 +131,8 @@ class AvroScanSpec extends AnyFunSuite {
       Seq(("one", 1L), ("two", 2L)))
     // count(*): empty required schema still iterates every record
     assert(df.count() == 2)
-    // full-width read through V2 equals the hadoop-RDD bridge path
-    // (binary column hex'd: Array[Byte].toString is identity-based)
-    val bridge = AvroScan.read(spark, new java.io.File(dir, "part-0.avro").getPath)
-    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
-      d.withColumn("payload", F.hex(F.col("payload")))
-        .orderBy("id").collect().map(_.toString).toSeq
-    assert(rows(df) == rows(bridge))
+    // the full-width read decodes every field of both records
+    assertFixtureRows(df)
   }
 
   test("V2 connector: nested projection survives Spark's nested schema pruning") {
@@ -141,7 +141,7 @@ class AvroScanSpec extends AnyFunSuite {
     val df = Registrar.read(spark, new java.io.File(dir, "part-0.avro").getPath)
     // nestedSchemaPruning (default on) hands the scan `meta: struct<n>`;
     // the builder must widen back to the full struct — the positional
-    // reader bridge crashed (ArrayIndexOutOfBounds) or mis-mapped
+    // reader mapping crashed (ArrayIndexOutOfBounds) or mis-mapped
     // type-coincident siblings when the pruned struct was used as-is
     assert(df.select(F.col("meta.n")).orderBy("n").collect().map(_.getInt(0)).toSeq
       == Seq(1, 2))

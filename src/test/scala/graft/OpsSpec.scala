@@ -5124,6 +5124,19 @@ class OpsSpec extends AnyFunSuite {
     assert(b == ((3L, 4L, 0L, -0.34375)), b)
   }
 
+  test("modularity: a node listed under two communities counts once, in " +
+      "the smallest") {
+    import graft.ops.Graph
+    val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("d", "e"))
+      .toDF("src", "dst")
+    // "a" also maps to c9: the edge joins must not multiply its two edges
+    val dup = Seq(("a", "c9"), ("a", "c1"), ("b", "c1"), ("c", "c1"),
+      ("d", "c2"), ("e", "c2")).toDF("node", "comm")
+    val g = Graph.modularity(edges, "src", "dst", dup, "node", "comm")
+      .as[(Long, Long, Long, Double)].head()
+    assert(g == ((2L, 4L, 4L, 0.375)), g)
+  }
+
   test("ljungBox: alternating series gives LB=12 at h=2") {
     import graft.ops.Stats
     val s = Seq((1L, 1L), (2L, 2L), (3L, 1L), (4L, 2L), (5L, 1L),
