@@ -20,8 +20,6 @@ from pathlib import Path
 import duckdb
 import pyarrow.parquet as pq
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
 
 def norm(v):
     if v is None:
@@ -58,10 +56,9 @@ def rows_of(table):
 def main(out_dir, sf_dir):
     oracle = json.load(open(Path(out_dir) / "oracle_sql.json"))
     con = duckdb.connect()
-    for t in TABLES:
-        p = Path(sf_dir) / f"{t}.parquet"
-        if p.exists():
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    # one view per <table>.parquet in the dir, as Registrar.loadParquetDir
+    for p in sorted(Path(sf_dir).glob("*.parquet")):
+        con.execute(f"CREATE VIEW {p.stem} AS SELECT * FROM read_parquet('{p}')")
     passed, failed = [], []
     for name in sorted(oracle):
         qdir = Path(out_dir) / name

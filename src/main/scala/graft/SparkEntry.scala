@@ -7,13 +7,18 @@ import graft.prql.Graft
 import graft.ops.{AsOf, Curation, Dedup, EventOps, Multimodal, RangeJoin, Sampling, Similarity, TextOps}
 import graft.sources.Registrar
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query entries and their oracles (SURVEY.md §7).
   *
   * Every parity entry below goes through the PRQL compiler
   * (graft.prql.{Parser, Lowering}) — the engine under test — against the
   * parquet tables in the scale-factor dir. Each has a DuckDB-dialect oracle
   * in [[oracleSql]] with identical column names and a total ordering, so the
   * driver's hash compare is deterministic.
+  *
+  * Every entry gets its tables from one catalog, `Registrar.loadParquetDir`'s
+  * memoized per-(session, dir) frames: PRQL entries compile against it and
+  * operator entries name a table with `Registrar.table(s, dir, "<t>")`, so
+  * building an entry fires no schema-inference job.
   */
 object SparkEntry {
 
@@ -46,7 +51,7 @@ object SparkEntry {
       : (DataFrame, DataFrame) = {
     val mdHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       c => F.conv(F.substring(F.md5(c), 1, 7), 16, 10).cast("long")
-    val base = s.read.parquet(s"$dir/documents.parquet")
+    val base = Registrar.table(s, dir, "documents")
       .filter(F.col("doc_id") % 21 === 0)
       .select(F.col("doc_id"),
         F.substring(F.col("text"), 1, 1500).as("text"))
@@ -283,6 +288,18 @@ object SparkEntry {
       |sort day
       |derive [num_items_last_week = lag 7 num_items]
       |take 30""".stripMargin
+
+  /** The entries `SPARK_GRAFT_ONLY` (comma-separated names) selects: all of
+    * them when it is unset or empty. A name that is not an entry fails,
+    * listing every such name, instead of quietly selecting nothing. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val names = only.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- all.keySet
+    require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names no entry: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (names.isEmpty) all else all.filter(e => names(e._1))
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -614,22 +631,22 @@ object SparkEntry {
 
     // --- extensions: training-data pipeline operators (builder prompt) ---
     "x01_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
+      Dedup.exact(Registrar.table(s, dir, "documents"), "doc_id", "text")
         .select("doc_id", "fp", "lang", "n_chars")
         .orderBy("doc_id")),
 
     "x02_minhash_pairs" -> ((s, dir) =>
-      Dedup.minhashPairs(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.minhashPairs(Registrar.table(s, dir, "documents"),
           "doc_id", "text", threshold = 0.5)
         .orderBy("a", "b")),
 
     "x03_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.simhashPairs(Registrar.table(s, dir, "documents"),
           "doc_id", "text", maxHamming = 6)
         .orderBy("a", "b")),
 
     "x04_ngram_jaccard" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val cands = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.3)
       Dedup.ngramJaccard(cands.select("a", "b"), docs, "doc_id", "text")
         .filter(F.col("jaccard") >= 0.3)
@@ -641,12 +658,12 @@ object SparkEntry {
     // scaladoc); ~94% recall at cos 0.4 pinned in OpsSpec with the explicit
     // 4-plane config, single-table round-1 config caught ~5%
     "x05_embed_neardup" -> ((s, dir) =>
-      Similarity.nearDupPairs(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.nearDupPairs(Registrar.table(s, dir, "embeddings"),
           "vec_id", "embedding", threshold = 0.4, nTables = 16)
         .orderBy("a", "b")),
 
     "x06_knn_brute" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       Similarity.bruteKnn(emb, emb.filter(F.col("vec_id") < 10), "vec_id", "embedding", k = 5)
         .orderBy("query_id", "rk")
@@ -655,40 +672,40 @@ object SparkEntry {
     // 16 tables × 4 planes — measured recall vs bruteKnn pinned in OpsSpec
     // (round-1's single 6-plane table measured <5%)
     "x07_knn_lsh" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.lshKnn(emb, emb.filter(F.col("vec_id") < 50), "vec_id", "embedding",
           k = 3, nPlanes = 4, nTables = 16)
         .orderBy("query_id", "rk")
     }),
 
     "x08_text_quality" -> ((s, dir) =>
-      TextOps.withQuality(s.read.parquet(s"$dir/documents.parquet"), "text")
+      TextOps.withQuality(Registrar.table(s, dir, "documents"), "text")
         .select("doc_id", "n_tokens", "punct_ratio", "stopword_ratio", "mean_token_len")
         .orderBy("doc_id")),
 
     "x09_lang_id" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .select(F.col("doc_id"), TextOps.langId(F.col("text")).as("pred_lang"))
         .orderBy("doc_id")),
 
     "x10_fingerprint" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .select(F.col("doc_id"), TextOps.fingerprint(F.col("text")).as("fp"))
         .orderBy("doc_id")),
 
     "x11_token_counts" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .select(F.col("doc_id"),
           TextOps.tokenCount(F.col("text")).as("n_ws_tokens"),
           TextOps.bpeishTokenCount(F.col("text")).as("n_bpeish_tokens"))
         .orderBy("doc_id")),
 
     "x12_events_hourly" -> ((s, dir) =>
-      EventOps.hourlyRollup(s.read.parquet(s"$dir/events.parquet"))
+      EventOps.hourlyRollup(Registrar.table(s, dir, "events"))
         .orderBy("hour", "event_type")),
 
     "x13_sessions" -> ((s, dir) =>
-      EventOps.sessionStats(s.read.parquet(s"$dir/events.parquet"))
+      EventOps.sessionStats(Registrar.table(s, dir, "events"))
         .orderBy("user_id", "session_seq")),
 
     // verified projection is HASHABLE (round-1 red row: the driver's pandas
@@ -699,7 +716,7 @@ object SparkEntry {
     // kind/width/height are xxhash64-derived synthetic metadata DuckDB can't
     // recompute — covered by OpsSpec instead.
     "x14_media_features" -> ((s, dir) => {
-      val mf = Multimodal.mediaFeatures(s.read.parquet(s"$dir/documents.parquet"))(s)
+      val mf = Multimodal.mediaFeatures(Registrar.table(s, dir, "documents"))(s)
       val bins = (0 until 16).map { j =>
         F.round(F.element_at(F.col("features"), j + 1).cast("double") *
           F.greatest(F.col("n_bytes"), F.lit(1))).cast("bigint").as(f"b$j%02d")
@@ -709,17 +726,17 @@ object SparkEntry {
     }),
 
     "x19_top_tokens" -> ((s, dir) =>
-      TextOps.topTokens(s.read.parquet(s"$dir/documents.parquet"), "text", 50)),
+      TextOps.topTokens(Registrar.table(s, dir, "documents"), "text", 50)),
 
     "x21_length_quantiles" -> ((s, dir) =>
-      TextOps.lengthQuantiles(s.read.parquet(s"$dir/documents.parquet"), "text",
+      TextOps.lengthQuantiles(Registrar.table(s, dir, "documents"), "text",
         Seq(0.5, 0.9, 0.99))),
 
     // the static skew-salting path through the oracle gate: result must be
     // identical to a plain one-phase groupBy
     "x20_salted_rollup" -> ((s, dir) =>
       graft.ops.Scale.saltedSumCount(
-          s.read.parquet(s"$dir/events.parquet"),
+          Registrar.table(s, dir, "events"),
           Seq("event_type"), "value", saltFactor = 8)
         .orderBy("event_type")),
 
@@ -727,7 +744,7 @@ object SparkEntry {
       implicit val sp = s
       Multimodal.sampleFrames(
           Multimodal.resize(
-            Multimodal.synthesizeMedia(s.read.parquet(s"$dir/documents.parquet")),
+            Multimodal.synthesizeMedia(Registrar.table(s, dir, "documents")),
             maxW = 640, maxH = 480).toDF())
         .toDF().select("doc_id", "frame_idx", "ts_ms")
         .orderBy("doc_id", "frame_idx")
@@ -749,7 +766,7 @@ object SparkEntry {
       val grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))),
         i => F.md5(t.substr(i, F.lit(k))))
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 10 === 0)
         .select(F.col("doc_id"), grams.as("hs"))
         .select(F.col("doc_id"), F.explode(F.array_sort(F.array_distinct(
@@ -780,7 +797,7 @@ object SparkEntry {
         x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
       val sigs = OracleAB.map { case (a, b) =>
         F.array_min(F.transform(F.col("hs"), h => (h * a + b) % OracleP)) }
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 10 === 0)
         .select(F.col("doc_id"), hs.as("hs"))
         .select(F.col("doc_id"),
@@ -805,7 +822,7 @@ object SparkEntry {
           (acc, h) => acc + F.shiftright(h, i).bitwiseAND(F.lit(1L)))
         F.when(ones * 2 > n, F.lit(1L << i)).otherwise(F.lit(0L))
       }.reduce(_ + _)
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 5 === 0)
         .select(F.col("doc_id"), th.as("th"))
         .select(F.col("doc_id"), sig.as("sig"))
@@ -821,7 +838,7 @@ object SparkEntry {
     // fixed-math oracle twin (minhash has x43, simhash x44, winnowing x42).
     "x45_lsh_bucket" -> ((s, dir) => {
       val planes = Similarity.hyperplanes(4, 64, 42L)
-      s.read.parquet(s"$dir/embeddings.parquet")
+      Registrar.table(s, dir, "embeddings")
         .select(F.col("vec_id"),
           Similarity.lshBucket(F.col("embedding"), planes).as("bucket"))
         .orderBy("vec_id")
@@ -834,7 +851,7 @@ object SparkEntry {
     // integers; the right side is pre-deduped to one error per (user, µs)
     // so tie resolution can't differ between engines.
     "x46_asof_join" -> ((s, dir) => {
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = Registrar.table(s, dir, "events")
       val e = raw
         .select(F.col("event_id"), F.col("user_id"), F.col("event_type"),
           EventOps.tsUs(raw).as("ts_us"))
@@ -850,7 +867,7 @@ object SparkEntry {
     // CCNet-style unigram log-likelihood quality score over the corpus's
     // own unigram model
     "x47_unigram_logp" -> ((s, dir) =>
-      TextOps.unigramLogProb(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.unigramLogProb(Registrar.table(s, dir, "documents"),
           "doc_id", "text")
         .orderBy("doc_id")),
 
@@ -858,7 +875,7 @@ object SparkEntry {
     // can match several bands; band [50, 1000) bounds the data's max)
     "x48_range_join" -> ((s, dir) => {
       import s.implicits._
-      val ev = s.read.parquet(s"$dir/events.parquet").select("event_id", "value")
+      val ev = Registrar.table(s, dir, "events").select("event_id", "value")
       val bands = RangeBands.toDF("band", "lo", "hi")
       RangeJoin.rangeJoin(ev, "value", bands, "lo", "hi", binWidth = 10.0)
         .select(F.col("event_id"), F.col("band"), F.col("value"))
@@ -868,7 +885,7 @@ object SparkEntry {
     // fastText-style linear quality classifier at the fixed 64-bucket
     // seeded weight table (x45's literal-table pattern)
     "x49_classifier" -> ((s, dir) =>
-      TextOps.classifierScore(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.classifierScore(Registrar.table(s, dir, "documents"),
           "text", ClassifierW, bias = -0.1)
         .select("doc_id", "quality_score")
         .orderBy("doc_id")),
@@ -879,7 +896,7 @@ object SparkEntry {
     // (kept); the mod-15 slice re-adds rows at higher ids, so odd
     // multiples of 15 are within-batch dups (lower id survives)
     "x50_dedup_delta" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       def batchSlice(idOffset: Long, mod: Int) =
         docs.filter(F.col("doc_id") % mod === 0)
           .select((F.col("doc_id") + idOffset).as("doc_id"),
@@ -894,7 +911,7 @@ object SparkEntry {
     // bigram PMI collocations over the corpus (counts gate + order; the
     // float score never decides rows)
     "x51_pmi" -> ((s, dir) =>
-      TextOps.pmiCollocations(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.pmiCollocations(Registrar.table(s, dir, "documents"),
           "text", minCount = 10)
         .orderBy("w1", "w2")),
 
@@ -902,7 +919,7 @@ object SparkEntry {
     // deterministic non-Latin suffixes by doc_id band (x22 fixed-input
     // pattern) to exercise every range + the priority tie-break
     "x52_scripts" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val seeded = docs.withColumn("text", F.concat(F.col("text"),
         F.when(F.col("doc_id") % 4 === 1, F.lit(" Привет мир"))
           .when(F.col("doc_id") % 4 === 2, F.lit(" 中文文本"))
@@ -920,7 +937,7 @@ object SparkEntry {
     // far undersized (4096 bits for ~550 keys) so bloom false positives
     // actually occur and the exact re-verify anti-join is exercised
     "x53_dedup_delta_bloom" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       def batchSlice(idOffset: Long, mod: Int) =
         docs.filter(F.col("doc_id") % mod === 0)
           .select((F.col("doc_id") + idOffset).as("doc_id"),
@@ -936,7 +953,7 @@ object SparkEntry {
     // already lowercase/clean, so the entry seeds a deterministic messy
     // suffix (case, punctuation runs, digits — the x52 fixed-input pattern)
     "x54_normalize" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val messy = F.concat(F.col("text"), F.lit(" MiXeD--Case!! "),
         F.upper(F.substring(F.col("text"), 1, 8)), F.lit("  ,42 "))
       docs.select(F.col("doc_id"), TextOps.normalizeText(messy).as("norm"))
@@ -946,7 +963,7 @@ object SparkEntry {
     // Gopher-style quality rule gate: per-rule booleans + keep, thresholds
     // chosen to split the corpus on every rule at sf0.01
     "x55_gopher_rules" -> ((s, dir) =>
-      TextOps.withGopherRules(s.read.parquet(s"$dir/documents.parquet"), "text",
+      TextOps.withGopherRules(Registrar.table(s, dir, "documents"), "text",
           minTokens = 20, maxTokens = 80, minMeanTokLen = 3.0,
           maxMeanTokLen = 10.0, minStopHits = 2, maxDupBigramFrac = 0.2)
         .select("doc_id", "n_tokens", "mean_token_len", "stop_hits",
@@ -958,7 +975,7 @@ object SparkEntry {
     // kept) union onto the corpus; exactBy(bowFingerprint) keeps the
     // lowest id per distinct token SET
     "x56_bow_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val reversed = docs.select((F.col("doc_id") + 1000000L).as("doc_id"),
         F.array_join(F.reverse(F.split(F.col("text"), "\\s+")), " ").as("text"))
       val extended = docs.filter(F.col("doc_id") % 7 === 0)
@@ -976,7 +993,7 @@ object SparkEntry {
     // can't replay) — the banding/threshold math is pinned by x43's oracle
     // and by the OpsSpec cross-pair equality with minhashPairs
     "x57_minhash_delta" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val delta = docs.filter(F.col("doc_id") % 10 === 0)
         .select((F.col("doc_id") + 1000000L).as("doc_id"),
           F.concat(F.col("text"), F.lit(" almost identical tail")).as("text"))
@@ -991,7 +1008,7 @@ object SparkEntry {
     // the same IEEE ops in both engines; natural ≥0.4 pairs (max pairwise
     // cos in testdata is 0.513) contribute when co-celled
     "x58_semdedup" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
         .select("vec_id", "embedding")
       val base = emb.unionAll(emb.filter(F.col("vec_id") % 5 === 0)
@@ -1004,7 +1021,7 @@ object SparkEntry {
     // at 5-gram granularity); the corpus's seeded exact/near dups give 71
     // docs a non-zero dup fraction at sf0.01 — no constructed input needed
     "x59_dup_spans" -> ((s, dir) =>
-      Dedup.dupSpans(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.dupSpans(Registrar.table(s, dir, "documents"),
           "doc_id", "text", n = 5, minDf = 2)
         .orderBy("doc_id")),
 
@@ -1013,7 +1030,7 @@ object SparkEntry {
     // normalized fingerprint ignores case), mod-5 text-edited (changed),
     // mod-9 re-added at +1e6 (added)
     "x61_corpus_diff" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+      val docs = Registrar.table(s, dir, "documents").select("doc_id", "text")
       val newSnap = docs.filter(F.col("doc_id") % 7 =!= 0)
         .select(F.col("doc_id"),
           F.when(F.col("doc_id") % 10 === 3, F.upper(F.col("text")))
@@ -1029,7 +1046,7 @@ object SparkEntry {
     // per query (the x06 brute pattern with the label inequality in the
     // join condition)
     "x62_hard_negatives" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       Similarity.hardNegatives(emb, emb.filter(F.col("vec_id") < 10),
           "vec_id", "label", "embedding", k = 5)
@@ -1041,7 +1058,7 @@ object SparkEntry {
     // engine-neutral hash, recon_err as the raw flat sequential sum both
     // engines compute identically
     "x63_pq_codes" -> ((s, dir) =>
-      Similarity.pqQuantize(s.read.parquet(s"$dir/embeddings.parquet")
+      Similarity.pqQuantize(Registrar.table(s, dir, "embeddings")
           .withColumn("embedding", F.col("embedding").cast("array<double>")),
           "embedding", PqCodebooks)
         .select(F.col("vec_id"),
@@ -1054,7 +1071,7 @@ object SparkEntry {
     // tables; candidates pay m lookups, never floats — distance addition
     // is per-subspace-then-s-ascending in BOTH engines so ranks replay
     "x64_pq_search" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       val codes = Similarity.pqQuantize(emb, "embedding", PqCodebooks)
         .select("vec_id", "codes")
@@ -1067,7 +1084,7 @@ object SparkEntry {
     // [8][8][8] residual codebook, nprobe=2 of 4 — the full FAISS-style
     // prune-then-ADC path, every stage replayed by the oracle
     "x65_ivfpq_search" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       val idx = Similarity.ivfpqBuild(emb, "vec_id", "embedding",
         SemCentroids, PqCodebooks)
@@ -1083,7 +1100,7 @@ object SparkEntry {
     // empty paths — then keep_first marks the canonical-URL survivor
     "x66_url_canon" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val url = F.concat(
         F.when(F.col("doc_id") % 2 === 0, F.lit("https://")).otherwise(F.lit("HTTP://")),
         F.upper(F.col("source")), F.lit(".Example.com"),
@@ -1108,7 +1125,7 @@ object SparkEntry {
     // benchmark = every 50th doc, so those docs score 1.0 and everything
     // else scores its incidental 8-gram overlap
     "x67_contamination_score" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       Dedup.contaminationScore(docs, docs.filter(F.col("doc_id") % 50 === 0),
           "doc_id", "text", shingleSize = 8)
         .orderBy("doc_id")
@@ -1120,7 +1137,7 @@ object SparkEntry {
     // LEARNED rotation (opqFit: Procrustes + per-subspace k-means) is
     // pinned by OpsSpec orthogonality/determinism/recon-improvement floors
     "x69_opq_search" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       val codes = Similarity.opqQuantize(emb, "embedding", OpqRotation, PqCodebooks)
         .select("vec_id", "codes")
@@ -1139,7 +1156,7 @@ object SparkEntry {
     // a subset of raw %5, so the importance semantics are unchanged); x71
     // below is the production xxhash64 path over the FULL corpus.
     "x70_dsir_weights" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 5 === 0)
       TextOps.dsirWeights(docs, docs.filter(F.col("doc_id") % 50 === 0),
           "doc_id", "text", nBuckets = 1024, hash = "md5")
@@ -1151,7 +1168,7 @@ object SparkEntry {
     // copies lose their duplicated 5-gram spans to the lowest-id owner
     // while unique prose survives
     "x73_remove_dup_spans" -> ((s, dir) =>
-      Dedup.removeDupSpans(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.removeDupSpans(Registrar.table(s, dir, "documents"),
           "doc_id", "text")
         .orderBy("doc_id")),
 
@@ -1160,7 +1177,7 @@ object SparkEntry {
     // flattens mega-clusters, preserves tails; every stage SQL-replayable
     // (the x58 argmin CTE + the x27 hash-ranked window)
     "x72_cluster_cap" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
         .select("vec_id", "embedding")
       Similarity.clusterCap(emb, "vec_id", "embedding", SemCentroids, cap = 40)
@@ -1174,7 +1191,7 @@ object SparkEntry {
     // hash-INVARIANT and must equal x70's exactly, and both paths must
     // rank the target domain above off-target.
     "x71_dsir_weights_prod" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       TextOps.dsirWeights(docs, docs.filter(F.col("doc_id") % 50 === 0),
           "doc_id", "text", nBuckets = 1024)
         .orderBy("doc_id")
@@ -1186,7 +1203,7 @@ object SparkEntry {
     // are twice as long, so they WIN their cluster — x01/x56's keep-first
     // would have kept the original
     "x74_keep_best" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
         .select("doc_id", "text")
       val bloated = docs.filter(F.col("doc_id") % 4 === 0)
         .select((F.col("doc_id") + 1000000).as("doc_id"),
@@ -1201,7 +1218,7 @@ object SparkEntry {
     // per-doc tf/dl as pure array projections (the corpus never explodes),
     // corpus stats as ONE 1-row broadcast aggregate
     "x75_bm25" -> ((s, dir) =>
-      TextOps.bm25(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.bm25(Registrar.table(s, dir, "documents"),
           "doc_id", "text", Seq("hash", "join", "spark"))
         .orderBy("doc_id")),
 
@@ -1209,7 +1226,7 @@ object SparkEntry {
     // Jensen-Shannon contributions, top-40 as the "where did the
     // vocabulary shift" evidence table
     "x76_token_divergence" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       TextOps.tokenDivergence(
         docs.filter(F.col("doc_id") % 2 === 0),
         docs.filter(F.col("doc_id") % 2 =!= 0), "text", topK = 40)
@@ -1220,7 +1237,7 @@ object SparkEntry {
     // of a 50k-token budget; src0 upweighted 5x, src1 2.5x, src2 dropped,
     // the rest default 1.0
     "x77_mixture_plan" -> ((s, dir) =>
-      Sampling.mixturePlan(s.read.parquet(s"$dir/documents.parquet"),
+      Sampling.mixturePlan(Registrar.table(s, dir, "documents"),
           "source", "text",
           Map("src0" -> 5.0, "src1" -> 2.5, "src2" -> 0.0), budget = 50000L)
         .orderBy("source")),
@@ -1230,7 +1247,7 @@ object SparkEntry {
     // mod-7 slice, every doc scored by avg negative log-likelihood —
     // low = fluent under the train distribution
     "x78_kn_bigram" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       TextOps.knBigramNll(docs, docs.filter(F.col("doc_id") % 7 === 0),
           "doc_id", "text")
         .orderBy("doc_id")
@@ -1243,7 +1260,7 @@ object SparkEntry {
     // docs a lorem-ipsum sentence (page-kill), mod-11 docs a braced code
     // line (page-kill)
     "x79_c4_filter" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       // coalesce text before staging: concat_ws SKIPS nulls while the
       // oracle's `||` would propagate them — '' on both sides keeps a
       // NULL-text document producing identical staged pages (ADVICE r8)
@@ -1272,7 +1289,7 @@ object SparkEntry {
     // posexploded to scalar (vec_id, j, value) rows: the driver compare
     // hashes pandas cells, and an array<double> cell crashed it in r8
     "x80_pca_project" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       Similarity.pcaProject(emb, "embedding", PcaMean, OpqRotation.take(16))
         .select(F.col("vec_id"),
@@ -1287,7 +1304,7 @@ object SparkEntry {
     // iteration is a NearestCell projection + one partial-aggregated
     // (cell, coordinate) rollup, only k*dim rows ever reach the driver
     "x81_kmeans_lloyd" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
         .select("vec_id", "embedding")
       Similarity.kmeansAssign(emb, "vec_id", "embedding", SemCentroids, iters = 2)
@@ -1298,7 +1315,7 @@ object SparkEntry {
     // tokens vs cumulative distinct types — the "is this source still
     // adding vocabulary" signal a mixture planner reads
     "x82_vocab_growth" -> ((s, dir) =>
-      TextOps.vocabGrowth(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.vocabGrowth(Registrar.table(s, dir, "documents"),
           "doc_id", "text", bucketSize = 25)
         .orderBy("bucket")),
 
@@ -1308,7 +1325,7 @@ object SparkEntry {
     // greedy non-overlapping rewrite. Output = the merge table a
     // tokenizer ships
     "x83_bpe_merges" -> ((s, dir) =>
-      TextOps.bpeMerges(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.bpeMerges(Registrar.table(s, dir, "documents"),
           "text", numMerges = 8)
         .orderBy("rank")),
 
@@ -1318,7 +1335,7 @@ object SparkEntry {
     // needed), corpus side scores through its fused encode->decode
     // reconstruction, query side stays exact
     "x84_sq8_search" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       val (mn, mx) = Similarity.sqFit(emb, "embedding", 64)
       Similarity.sqSearch(emb, emb.filter(F.col("vec_id") < 5), "vec_id", "embedding",
@@ -1331,7 +1348,7 @@ object SparkEntry {
     // driver-side on the bounded pool — 4 picks at lambda=0.7, every
     // argmax on 6-dp-rounded (score, id)
     "x85_mmr_rerank" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       Similarity.mmrRerank(emb, emb.filter(F.col("vec_id") === 0), "vec_id", "embedding",
           k = 4, pool = 8, lambda = 0.7)
@@ -1345,7 +1362,7 @@ object SparkEntry {
     // seeding pattern). '.' separators ride the seeds so the shared
     // sentences segment identically in every host document
     "x86_sentence_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val seeded = docs.select(F.col("doc_id"),
         F.concat(
           F.coalesce(F.col("text"), F.lit("")),
@@ -1366,7 +1383,7 @@ object SparkEntry {
     // any engine), comparison-chain assignment, per-shard stats
     "x87_shard_plan" -> ((s, dir) =>
       graft.ops.Scale.rangeShardPlan(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", nShards = 8)
+          Registrar.table(s, dir, "documents"), "doc_id", nShards = 8)
         .orderBy("shard")),
 
     // DISTRIBUTED logistic-regression training (two full-batch GD rounds
@@ -1374,7 +1391,7 @@ object SparkEntry {
     // kmeansLloyd iteration contract for a classifier: one job per round,
     // nBuckets+1 gradient rows to the driver, 6-dp weight quantization
     "x88_logreg_train" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
         .withColumn("y", F.when(F.col("lang") === "en", 1.0).otherwise(0.0))
       TextOps.trainQualityClassifierDF(docs, "text", "y",
           nBuckets = 64, iters = 2, lr = 0.5)
@@ -1391,7 +1408,7 @@ object SparkEntry {
     // x89; the production x07 (16 tables, auto recall) stays rows-only
     // with its OpsSpec recall floor.
     "x89_lsh_knn_twin" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       Similarity.lshKnn(emb, emb.filter(F.col("vec_id") < 50), "vec_id", "embedding",
           k = 3, nPlanes = 4, nTables = 1)
@@ -1407,7 +1424,7 @@ object SparkEntry {
     // The production x17 (k-means-fit centroids) stays rows-only with its
     // OpsSpec recall floor + nprobe=nlist ≡ brute equivalence.
     "x90_ivf_knn_twin" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       Similarity.queryIvf(
           Similarity.ivfIndexAt(emb, "vec_id", "embedding", SemCentroids),
@@ -1421,7 +1438,7 @@ object SparkEntry {
     // TakeOrderedAndProject, no shuffle
     "x91_weighted_sample" -> ((s, dir) =>
       Sampling.weightedSample(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           F.col("text"), F.col("n_chars"), n = 150)
         .select("doc_id", "source", "n_chars")
         .orderBy("doc_id")),
@@ -1433,9 +1450,9 @@ object SparkEntry {
     // supplier is a sink and the dangling-mass redistribution path runs
     // on ~6% of the nodes each round, not as a degenerate no-op
     "x92_pagerank" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/orders.parquet")
+      val e = Registrar.table(s, dir, "orders")
         .select("o_orderkey", "o_custkey")
-        .join(s.read.parquet(s"$dir/lineitem.parquet")
+        .join(Registrar.table(s, dir, "lineitem")
             .select("l_orderkey", "l_suppkey"),
           F.col("o_orderkey") === F.col("l_orderkey"))
         .select(F.col("o_custkey").as("src"),
@@ -1452,7 +1469,7 @@ object SparkEntry {
     // branch. The sketch is ONE scan + <=256 mergeable rows per source;
     // the exact column is the full (source, token) shuffle it spares
     "x93_hll_distinct" -> ((s, dir) => {
-      val toks = s.read.parquet(s"$dir/documents.parquet")
+      val toks = Registrar.table(s, dir, "documents")
         .select(F.col("source"),
           F.explode(F.split(F.lower(F.trim(F.col("text"))), "\\s+")).as("t"))
         .filter(F.length(F.col("t")) > 0)
@@ -1470,7 +1487,7 @@ object SparkEntry {
     // buys at 100 TB
     "x94_zorder_plan" -> ((s, dir) =>
       graft.ops.Scale.zorderShardPlan(
-          s.read.parquet(s"$dir/lineitem.parquet")
+          Registrar.table(s, dir, "lineitem")
             .select("l_partkey", "l_suppkey"),
           "l_partkey", "l_suppkey", bits = 16, nShards = 8)
         .orderBy("shard")),
@@ -1481,7 +1498,7 @@ object SparkEntry {
     // when the heavy hitters dodge collisions. The sketch answers ANY
     // later point query without re-aggregating the corpus
     "x95_cms_heavy_hitters" -> ((s, dir) => {
-      val toks = s.read.parquet(s"$dir/documents.parquet")
+      val toks = Registrar.table(s, dir, "documents")
         .select(F.explode(F.split(F.lower(F.trim(F.col("text"))), "\\s+")).as("t"))
         .filter(F.length(F.col("t")) > 0)
       val counters = graft.ops.Sketches.cmsCounters(toks, F.col("t"))
@@ -1503,7 +1520,7 @@ object SparkEntry {
     // stays end-to-end
     "x99_exact_jaccard_join" -> ((s, dir) =>
       Dedup.exactJaccardPairs(
-          s.read.parquet(s"$dir/documents.parquet")
+          Registrar.table(s, dir, "documents")
             .filter(F.col("doc_id") % 7 === 0),
           "doc_id", "text", threshold = 0.5)
         .orderBy("a", "b")),
@@ -1515,7 +1532,7 @@ object SparkEntry {
     // sort anywhere
     "x98_shard_checksums" -> ((s, dir) =>
       graft.ops.Scale.shardChecksums(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           "doc_id", Seq("text", "source", "lang"), nShards = 8)
         .orderBy("shard")),
 
@@ -1525,7 +1542,7 @@ object SparkEntry {
     // replaces exact per-group percentile buffering at 100 TB
     "x97_sample_quantiles" -> ((s, dir) =>
       Sampling.sampleQuantiles(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           Seq("source"), "n_chars", F.col("doc_id"), Seq(0.25, 0.5, 0.75, 0.95))
         .orderBy("source", "q")),
 
@@ -1534,7 +1551,7 @@ object SparkEntry {
     // event stream shuffles once; frontiers reuse the partitioning)
     "x96_funnel" -> ((s, dir) =>
       graft.ops.EventOps.funnelReach(
-          s.read.parquet(s"$dir/events.parquet"),
+          Registrar.table(s, dir, "events"),
           Seq("view", "click", "purchase"))
         .orderBy("step")),
 
@@ -1543,7 +1560,7 @@ object SparkEntry {
     // / v_k above; the mergeable-with-set-operations complement of the
     // x93 HLL registers (KMV sketches intersect/Jaccard, HLL only unions)
     "x100_kmv_distinct" -> ((s, dir) => {
-      val toks = s.read.parquet(s"$dir/documents.parquet")
+      val toks = Registrar.table(s, dir, "documents")
         .select(F.col("source"), F.explode(F.filter(
           F.split(F.lower(F.trim(F.col("text"))), "\\s+"),
           t => F.length(t) > 0)).as("t"))
@@ -1568,7 +1585,7 @@ object SparkEntry {
     // substitute d=1, 3-char append d=3), so the entry verifies real
     // catches at each distance, not a vacuous empty join
     "x101_edit_pairs" -> ((s, dir) => {
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 3 === 0)
         .select(F.col("doc_id"), F.lower(F.trim(F.col("text"))).as("k"))
       val mut = base.filter(F.col("doc_id") % 15 === 0)
@@ -1589,7 +1606,7 @@ object SparkEntry {
     // user-keyed window + a |types|^2-bounded rollup
     "x102_transitions" -> ((s, dir) =>
       graft.ops.EventOps.transitionMatrix(
-          s.read.parquet(s"$dir/events.parquet"))
+          Registrar.table(s, dir, "events"))
         .orderBy("prev_type", "next_type")),
 
     // robust per-type outliers: (value - median) / IQR with EVERY quantile
@@ -1597,7 +1614,7 @@ object SparkEntry {
     // corrupt 1e30 reading cannot eat the detector), flagged at |score|>=3
     "x103_robust_outliers" -> ((s, dir) =>
       graft.ops.EventOps.robustOutliers(
-          s.read.parquet(s"$dir/events.parquet"), cut = 3.0)
+          Registrar.table(s, dir, "events"), cut = 3.0)
         .orderBy("event_id")),
 
     // per-node triangle counts on the supplier co-purchase graph (edges =
@@ -1605,7 +1622,7 @@ object SparkEntry {
     // orientation bounds the wedge join at m^1.5 on ANY degree skew — the
     // clustering signal behind community-quality / spam-farm detection
     "x104_triangles" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.triangleCounts(
           graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
             minCount = 6),
@@ -1619,7 +1636,7 @@ object SparkEntry {
     // lvl derived from key nullness so the oracle needs no engine-specific
     // grouping_id
     "x105_rollup_census" -> ((s, dir) =>
-      s.read.parquet(s"$dir/orders.parquet")
+      Registrar.table(s, dir, "orders")
         .select(F.year(F.col("o_orderdate")).as("yr"),
           F.col("o_orderpriority").as("pri"), F.col("o_totalprice"))
         .rollup("yr", "pri")
@@ -1635,7 +1652,7 @@ object SparkEntry {
     // terms quantized to 9 dp before the unordered sum (pageRank rule)
     "x106_token_entropy" -> ((s, dir) =>
       TextOps.tokenEntropy(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           Seq("source", "lang"), "text")
         .orderBy("source", "lang")),
 
@@ -1646,7 +1663,7 @@ object SparkEntry {
     // builtins whose accumulation differs across engines)
     "x107_ols_regression" -> ((s, dir) =>
       graft.ops.Stats.olsFit(
-          s.read.parquet(s"$dir/lineitem.parquet"),
+          Registrar.table(s, dir, "lineitem"),
           Seq("l_returnflag"), F.col("l_quantity"), F.col("l_extendedprice"))
         .orderBy("l_returnflag")),
 
@@ -1654,7 +1671,7 @@ object SparkEntry {
     // (no eager distinct scan), absent cells coalesced to 0 to match the
     // oracle's FILTER counts
     "x108_event_pivot" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val types = Seq("click", "error", "purchase", "signup", "view")
       ev.withColumn("day",
           F.date_format(graft.ops.EventOps.tsStamp(ev), "yyyy-MM-dd"))
@@ -1669,7 +1686,7 @@ object SparkEntry {
     // contingencies from two bounded rollups, per-row double chi2
     "x109_chi2_tokens" -> ((s, dir) =>
       TextOps.chi2Tokens(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           "lang", "doc_id", "text", minDf = 5, topK = 50)
         .orderBy(F.col("chi2").desc, F.col("class"), F.col("token"))),
 
@@ -1679,7 +1696,7 @@ object SparkEntry {
     // positions replayed integer-for-integer in DuckDB
     "x114_frame_sample_fixed" -> ((s, dir) => {
       implicit val sp = s
-      val md = s.read.parquet(s"$dir/documents.parquet").select(
+      val md = Registrar.table(s, dir, "documents").select(
         F.col("doc_id"),
         F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
           (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 7), 16, 10)
@@ -1696,7 +1713,7 @@ object SparkEntry {
     // seen" for crawl-depth decisions; vocab-bounded rollups
     "x115_unseen_mass" -> ((s, dir) =>
       TextOps.unseenMass(
-          s.read.parquet(s"$dir/documents.parquet"), Seq("source"), "text")
+          Registrar.table(s, dir, "documents"), Seq("source"), "text")
         .orderBy("source")),
 
     // DISTRIBUTED sorted-neighborhood blocking: global (key, id) adjacency
@@ -1705,7 +1722,7 @@ object SparkEntry {
     // proof that the sharded construction equals the global order
     "x113_sorted_neighborhood" -> ((s, dir) =>
       Dedup.sortedNeighborhoodPairs(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           "doc_id", F.lower(F.trim(F.col("text"))), window = 3, nShards = 8)
         .orderBy("a", "b")),
 
@@ -1715,7 +1732,7 @@ object SparkEntry {
     // exact truth the x100 KMV sketches approximate at scale
     "x110_slice_jaccard" -> ((s, dir) =>
       TextOps.sliceJaccard(
-          s.read.parquet(s"$dir/documents.parquet"), "source", "text")
+          Registrar.table(s, dir, "documents"), "source", "text")
         .orderBy("a", "b")),
 
     // key-skew census + salt planning on the lineitem supplier key: share
@@ -1723,7 +1740,7 @@ object SparkEntry {
     // pre-job diagnostic that catches the straggler key at 100 TB
     "x111_skew_census" -> ((s, dir) =>
       graft.ops.Scale.skewCensus(
-          s.read.parquet(s"$dir/lineitem.parquet"),
+          Registrar.table(s, dir, "lineitem"),
           F.col("l_suppkey"), parallelism = 32, topK = 20)
         .orderBy(F.col("n_rows").desc, F.col("key"))),
 
@@ -1733,7 +1750,7 @@ object SparkEntry {
     // sweep-line pass
     "x112_session_concurrency" -> ((s, dir) =>
       graft.ops.EventOps.activeSessionsPerHour(
-          s.read.parquet(s"$dir/events.parquet"))
+          Registrar.table(s, dir, "events"))
         .orderBy("hour")),
 
     // Pearson correlation matrix from ONE sufficient-statistics pass:
@@ -1742,7 +1759,7 @@ object SparkEntry {
     // accumulation is not replayable), no second scan
     "x116_corr_pairs" -> ((s, dir) =>
       graft.ops.Stats.corrPairs(
-          s.read.parquet(s"$dir/lineitem.parquet"),
+          Registrar.table(s, dir, "lineitem"),
           Seq("l_returnflag"),
           Seq("l_quantity", "l_extendedprice", "l_discount"))
         .orderBy("l_returnflag", "col_a", "col_b")),
@@ -1752,7 +1769,7 @@ object SparkEntry {
     // numbers per group, explicit t / Welch–Satterthwaite df expression
     // tree (no engine t-test builtin)
     "x117_welch_ttest" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Stats.welchTTest(
           ev.withColumn("cohort", F.pmod(F.col("user_id"), F.lit(4L))),
           Seq("cohort"), F.col("event_type"), F.col("value"),
@@ -1766,7 +1783,7 @@ object SparkEntry {
     // group list against a sequence-exploded bin frame, never the corpus
     "x118_histogram" -> ((s, dir) =>
       graft.ops.Stats.histogram(
-          s.read.parquet(s"$dir/lineitem.parquet"),
+          Registrar.table(s, dir, "lineitem"),
           Seq("l_returnflag"), F.col("l_extendedprice"),
           lo = 0.0, hi = 60000.0, bins = 12)
         .orderBy("l_returnflag", "bin")),
@@ -1776,7 +1793,7 @@ object SparkEntry {
     // computed entirely on the <=256-row register tables; the sketch-space
     // answer to x110's exact per-token self-join
     "x119_hll_overlap" -> ((s, dir) => {
-      val toks = s.read.parquet(s"$dir/documents.parquet")
+      val toks = Registrar.table(s, dir, "documents")
         .select(F.col("source"),
           F.explode(F.split(F.lower(F.trim(F.col("text"))), "\\s+")).as("t"))
         .filter(F.length(F.col("t")) > 0)
@@ -1789,7 +1806,7 @@ object SparkEntry {
     // (doc, start) equi-joins — no regex scan, no full-stream window
     "x120_phrase_search" -> ((s, dir) =>
       TextOps.phraseSearch(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           "doc_id", "text", "table part")
         .orderBy("doc_id")),
 
@@ -1798,7 +1815,7 @@ object SparkEntry {
     // min-doc window — linear, no pair join
     "x121_ngram_novelty" -> ((s, dir) =>
       TextOps.ngramNovelty(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           "doc_id", "text", n = 3)
         .orderBy("doc_id")),
 
@@ -1807,7 +1824,7 @@ object SparkEntry {
     // reduce seeded at the frame head (DuckDB list_reduce semantics) —
     // deterministic evaluation order, unlike a weighted sum
     "x122_ewma_smooth" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(F.col("event_type"),
           F.to_date(graft.ops.EventOps.tsStamp(ev)).as("day"))
         .agg(F.count(F.lit(1)).as("n"))
@@ -1822,7 +1839,7 @@ object SparkEntry {
     // a post-aggregate window
     "x123_retention" -> ((s, dir) =>
       graft.ops.EventOps.retentionCohorts(
-          s.read.parquet(s"$dir/events.parquet"), "user_id", "ts",
+          Registrar.table(s, dir, "events"), "user_id", "ts",
           maxOffsetDays = 14)
         .orderBy("cohort_day", "offset")),
 
@@ -1830,7 +1847,7 @@ object SparkEntry {
     // / by total quantity) per returnflag: rank-only ensemble, 9-dp
     // contributions before the keyed rollup, fused top-10
     "x124_rrf_fuse" -> ((s, dir) => {
-      val agg = s.read.parquet(s"$dir/lineitem.parquet")
+      val agg = Registrar.table(s, dir, "lineitem")
         .groupBy(F.col("l_returnflag").as("q"), F.col("l_suppkey").as("item"))
         .agg(F.count(F.lit(1)).as("n"), F.sum("l_quantity").as("sq"))
       val wA = Window.partitionBy("q").orderBy(F.col("n").desc, F.col("item"))
@@ -1847,7 +1864,7 @@ object SparkEntry {
     // quality readout, log2 gains as ln-division (the x106 rule), 9-dp
     // terms before the per-query sum
     "x125_ndcg" -> ((s, dir) => {
-      val agg = s.read.parquet(s"$dir/lineitem.parquet")
+      val agg = Registrar.table(s, dir, "lineitem")
         .groupBy(F.col("l_returnflag").as("q"), F.col("l_suppkey").as("item"))
         .agg(F.count(F.lit(1)).as("n"), F.sum("l_quantity").as("sq"))
       val wA = Window.partitionBy("q").orderBy(F.col("n").desc, F.col("item"))
@@ -1866,7 +1883,7 @@ object SparkEntry {
     // hashSampleByGroup
     "x126_neyman_alloc" -> ((s, dir) =>
       Sampling.neymanAllocation(
-          s.read.parquet(s"$dir/lineitem.parquet"),
+          Registrar.table(s, dir, "lineitem"),
           Seq("l_returnflag", "l_linestatus"), F.col("l_extendedprice"),
           budget = 10000L)
         .orderBy("l_returnflag", "l_linestatus")),
@@ -1876,7 +1893,7 @@ object SparkEntry {
     // share via the ln/ln(10) division both engines share
     "x127_benford" -> ((s, dir) =>
       graft.ops.Stats.benfordAudit(
-          s.read.parquet(s"$dir/lineitem.parquet"),
+          Registrar.table(s, dir, "lineitem"),
           Seq("l_returnflag"), F.col("l_extendedprice"), scale = 100)
         .orderBy("l_returnflag", "digit")),
 
@@ -1884,7 +1901,7 @@ object SparkEntry {
     // returnflag — integer masses make both sums exact; the only float
     // work is two divisions
     "x128_gini" -> ((s, dir) => {
-      val m = s.read.parquet(s"$dir/lineitem.parquet")
+      val m = Registrar.table(s, dir, "lineitem")
         .groupBy(F.col("l_returnflag"), F.col("l_suppkey"))
         .agg(F.count(F.lit(1)).as("cnt"))
       graft.ops.Stats.gini(m, Seq("l_returnflag"), F.col("cnt"))
@@ -1895,7 +1912,7 @@ object SparkEntry {
     // sequential-looking recursion as its exact closed form — running sum
     // minus running min, two window aggregates, all integer
     "x129_cusum_drift" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(F.col("event_type"),
           F.to_date(graft.ops.EventOps.tsStamp(ev)).as("day"))
         .agg(F.count(F.lit(1)).as("n"))
@@ -1909,7 +1926,7 @@ object SparkEntry {
     // partial-aggregated, TakeOrdered top-k
     "x130_top_paths" -> ((s, dir) =>
       graft.ops.EventOps.topPaths(
-          s.read.parquet(s"$dir/events.parquet"), n = 3, k = 20)
+          Registrar.table(s, dir, "events"), n = 3, k = 20)
         .orderBy(F.col("n").desc, F.col("path"))),
 
     // funnel conversion LATENCY quantiles (x96's frontier chain + the
@@ -1917,7 +1934,7 @@ object SparkEntry {
     // click→purchase take at p50/p90, one step-keyed window
     "x131_funnel_latency" -> ((s, dir) =>
       graft.ops.EventOps.funnelLatency(
-          s.read.parquet(s"$dir/events.parquet"),
+          Registrar.table(s, dir, "events"),
           Seq("view", "click", "purchase"), qs = Seq(0.5, 0.9))
         .orderBy("step", "q")),
 
@@ -1926,7 +1943,7 @@ object SparkEntry {
     // pair join, broadcast item counts + 1-row total
     "x132_assoc_rules" -> ((s, dir) =>
       graft.ops.EventOps.assocRules(
-          s.read.parquet(s"$dir/events.parquet"), "user_id", "event_type",
+          Registrar.table(s, dir, "events"), "user_id", "event_type",
           minCount = 5)
         .orderBy("antecedent", "consequent")),
 
@@ -1935,7 +1952,7 @@ object SparkEntry {
     // max window over the densified register table — never re-reads raw
     // events per hour
     "x135_hll_sliding" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Sketches.hllSliding(ev,
           F.call_function("div", graft.ops.EventOps.tsUs(ev),
             F.lit(3600000000L)),
@@ -1947,7 +1964,7 @@ object SparkEntry {
     // LITERALS — shuffle-free comparison-chain scoring, no global sort
     "x136_rank_blend" -> ((s, dir) =>
       Curation.rankBlend(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id",
+          Registrar.table(s, dir, "documents"), "doc_id",
           Seq("len" -> F.col("n_chars"),
             "toks" -> TextOps.tokenCount(F.col("text"))))
         .select("doc_id", "pct_len", "pct_toks", "blend")
@@ -1958,13 +1975,13 @@ object SparkEntry {
     // counts, sufficient-stats baseline, broadcast back
     "x140_seasonal_z" -> ((s, dir) =>
       graft.ops.EventOps.seasonalZ(
-          s.read.parquet(s"$dir/events.parquet"))
+          Registrar.table(s, dir, "events"))
         .orderBy("event_type", "day", "hour")),
 
     // continuous-MLE power-law exponent over the per-customer order-count
     // distribution (Clauset et al. 2009): 9-dp ln terms, one pass
     "x141_powerlaw" -> ((s, dir) => {
-      val deg = s.read.parquet(s"$dir/orders.parquet")
+      val deg = Registrar.table(s, dir, "orders")
         .groupBy("o_custkey").agg(F.count(F.lit(1)).as("d"))
       graft.ops.Stats.powerlawAlpha(deg, F.col("d"), dmin = 2)
     }),
@@ -1974,13 +1991,13 @@ object SparkEntry {
     // log2 — the dependence audit behind stratification choices
     "x142_mutual_info" -> ((s, dir) =>
       graft.ops.Stats.mutualInfo(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           F.col("source"), F.col("lang"))),
 
     // cosine RANGE search (radius, not top-k): every neighbor >= 0.4 of
     // each query — broadcast queries, corpus scanned once, no window
     "x166_range_search" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.rangeSearch(emb, emb.filter(F.col("vec_id") < 20),
           "vec_id", "embedding", threshold = 0.4)
         .orderBy("query_id", "neighbor_id")
@@ -1990,7 +2007,7 @@ object SparkEntry {
     // selection for a labeling budget — the opposite of semDedup); every
     // pick replayed by the oracle's chained argmax CTEs
     "x168_kcenter" -> ((s, dir) =>
-      Similarity.kCenterCoreset(s.read.parquet(s"$dir/embeddings.parquet"),
+      Similarity.kCenterCoreset(Registrar.table(s, dir, "embeddings"),
           "vec_id", "embedding", k = 6)
         .orderBy("pick")),
 
@@ -1999,7 +2016,7 @@ object SparkEntry {
     // bounded single-partition window only over the reference
     "x169_quantile_norm" -> ((s, dir) =>
       graft.ops.Curation.quantileNormalize(
-          s.read.parquet(s"$dir/documents.parquet")
+          Registrar.table(s, dir, "documents")
             .select("doc_id", "source", "n_chars"),
           "source", "n_chars", "doc_id", refRate = 0.5)
         .orderBy("doc_id")),
@@ -2009,7 +2026,7 @@ object SparkEntry {
     // exact-integer until the final 6-dp rounding, CI = order statistics
     "x170_bootstrap_ci" -> ((s, dir) =>
       graft.ops.Stats.bootstrapCI(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           Seq("source"), F.col("n_chars"), F.col("doc_id"),
           b = 200, conf = 0.95)
         .orderBy("source")),
@@ -2017,7 +2034,7 @@ object SparkEntry {
     // autocorrelation of the daily event-volume series at lags 0..7 — the
     // weekly-periodicity readout, leadLagCorr against itself
     "x167_autocorr" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -2032,7 +2049,7 @@ object SparkEntry {
     // days of the window — subjects collapse to distinct-duration rows
     // before any window touches them
     "x171_kaplan_meier" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val per = ev.groupBy("user_id")
         .agg(F.min(graft.ops.EventOps.tsStamp(ev)).as("f"),
           F.max(graft.ops.EventOps.tsStamp(ev)).as("l"))
@@ -2050,7 +2067,7 @@ object SparkEntry {
     // keyed rollup, class table bounded by the QI domain
     "x172_kanonymity" -> ((s, dir) =>
       graft.ops.Curation.kAnonymityAudit(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         Seq("c_nationkey", "c_mktsegment"),
         F.floor(F.col("c_acctbal") / 1000), kMin = 5)),
 
@@ -2058,7 +2075,7 @@ object SparkEntry {
     // event_type runs per user become validity intervals — keyed
     // gaps-and-islands, every window partitioned by user
     "x174_scd2" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.EventOps.scd2(ev, "user_id", F.col("event_type"),
           F.col("event_id"))
         .orderBy("key", "valid_from")
@@ -2068,13 +2085,13 @@ object SparkEntry {
     // from a distinct-value collapse — no subject-level sort anywhere
     "x175_mannwhitney" -> ((s, dir) =>
       graft.ops.Stats.mannWhitneyU(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("lang") === "en")),
 
     // Benjamini-Hochberg over per-token 2-dof χ² (en/zh/other presence
     // table): p = exp(−χ²/2) exactly, step-up flag via one bounded window
     "x176_bh_fdr" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val grp = F.when(F.col("lang") === "en", "en")
         .when(F.col("lang") === "zh", "zh").otherwise("other")
       graft.ops.Stats.bhFdr(
@@ -2086,7 +2103,7 @@ object SparkEntry {
     // label: 10 equal-width bins + corpus ECE, pure projections
     "x177_calibration" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.calibrationBins(scored, F.col("quality_score"),
         F.col("lang") === "en", nBins = 10)
@@ -2096,7 +2113,7 @@ object SparkEntry {
     // survives at prefix dims 8/16/32/64 — one bruteKnn per rung, corpus
     // scanned, never shuffled
     "x173_matryoshka" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.matryoshkaRecall(emb, emb.filter(F.col("vec_id") < 30),
         "vec_id", "embedding", dims = Seq(8, 16, 32, 64), k = 10)
     }),
@@ -2105,7 +2122,7 @@ object SparkEntry {
     // sets: ratio margin over two bruteKnn candidate passes, best mate
     // per left vector above margin 1
     "x179_bitext_margin" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.bitextMargin(
         emb.filter(F.col("label") === 0), emb.filter(F.col("label") === 1),
         "vec_id", "embedding", k = 4, minMargin = 1.0)
@@ -2115,13 +2132,13 @@ object SparkEntry {
     // unigram log-likelihood — keyed windows only, x47 scoring machinery
     "x180_curriculum" -> ((s, dir) =>
       graft.ops.Curation.curriculumPlan(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         "doc_id", "text", "source", nBins = 5)),
 
     // MRR of the x125 popularity ranking against the top-5-by-quantity
     // truth: first-hit position per query, misses score 0
     "x181_mrr" -> ((s, dir) => {
-      val agg = s.read.parquet(s"$dir/lineitem.parquet")
+      val agg = Registrar.table(s, dir, "lineitem")
         .groupBy(F.col("l_returnflag").as("q"), F.col("l_suppkey").as("item"))
         .agg(F.count(F.lit(1)).as("n"), F.sum("l_quantity").as("sq"))
       val wA = Window.partitionBy("q").orderBy(F.col("n").desc, F.col("item"))
@@ -2137,13 +2154,13 @@ object SparkEntry {
     // — two keyed rollups, one bounded per-cohort window
     "x182_ltv_curve" -> ((s, dir) =>
       graft.ops.EventOps.ltvCurve(
-        s.read.parquet(s"$dir/events.parquet"), "purchase")),
+        Registrar.table(s, dir, "events"), "purchase")),
 
     // U-shaped attribution over the same 6-hour window as x157's
     // last-touch: 40/20/40 position weights, touchless convs → direct
     "x183_ushape" -> ((s, dir) =>
       graft.ops.EventOps.uShapeAttribution(
-        s.read.parquet(s"$dir/events.parquet"), "purchase",
+        Registrar.table(s, dir, "events"), "purchase",
         windowUs = 21600000000L)),
 
     // SRM gate over the x41 splitter: observed arm counts vs the
@@ -2152,7 +2169,7 @@ object SparkEntry {
       val w = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
       graft.ops.Stats.srmCheck(
         graft.ops.Sampling.splitAssign(
-          s.read.parquet(s"$dir/documents.parquet"), F.col("text"), w),
+          Registrar.table(s, dir, "documents"), F.col("text"), w),
         F.col("split"), w)
     }),
 
@@ -2160,13 +2177,13 @@ object SparkEntry {
     // natural vs reweighted shares + the upsample factor table
     "x185_temperature_mix" -> ((s, dir) =>
       graft.ops.Sampling.temperatureMix(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("lang"),
+        Registrar.table(s, dir, "documents"), F.col("lang"),
         alpha = 0.3)),
 
     // Pareto frontier of (n_chars, token count): the non-dominated docs —
     // salt-keyed local skyline prunes before any global window
     "x186_skyline" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       graft.ops.Stats.skyline2d(docs, "doc_id", F.col("n_chars"),
         TextOps.tokenCount(F.col("text")))
     }),
@@ -2174,14 +2191,14 @@ object SparkEntry {
     // one-way ANOVA of doc length across sources: F and η² from one
     // sufficient-statistics pass (no engine-specific F-CDF)
     "x187_anova" -> ((s, dir) =>
-      graft.ops.Stats.anovaF(s.read.parquet(s"$dir/documents.parquet"),
+      graft.ops.Stats.anovaF(Registrar.table(s, dir, "documents"),
         F.col("source"), F.col("n_chars"))),
 
     // subclassification ATE: x49-score strata (deterministic equal-width
     // bins, no global sort), en-vs-rest arms, length outcome
     "x189_stratified_effect" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.stratifiedEffect(scored, F.col("quality_score"),
         F.col("lang") === "en", F.col("n_chars"), nStrata = 5)
@@ -2190,7 +2207,7 @@ object SparkEntry {
     // Spearman ρ of length vs token count — midranks from two bounded
     // distinct-value collapses, Pearson on the rank pairs
     "x190_spearman" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       graft.ops.Stats.spearman(docs, F.col("n_chars"),
         TextOps.tokenCount(F.col("text")))
     }),
@@ -2199,7 +2216,7 @@ object SparkEntry {
     // the lang=='en' label — κ from one 4-cell collapse
     "x191_kappa" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.cohensKappa(scored,
         F.col("quality_score") >= 0.5, F.col("lang") === "en")
@@ -2209,12 +2226,12 @@ object SparkEntry {
     // effective sample size — the anchor day is a 1-row broadcast
     "x192_freshness_ess" -> ((s, dir) =>
       graft.ops.EventOps.freshnessEss(
-        s.read.parquet(s"$dir/events.parquet"), lambdaPerDay = 0.1)),
+        Registrar.table(s, dir, "events"), lambdaPerDay = 0.1)),
 
     // seasonal-naive backtest of daily volume (season=7): the baseline
     // forecast every monitor compares against, MAE/MAPE over scored days
     "x193_snaive_backtest" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -2225,7 +2242,7 @@ object SparkEntry {
     // exact least-squares single changepoint over the daily error-rate
     // series — prefix-sum SSE scan, smallest-t argmin tie-break
     "x194_changepoint" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -2238,12 +2255,12 @@ object SparkEntry {
     // the collapsed (user, day) table, distinct-counts keyed by day
     "x195_stickiness" -> ((s, dir) =>
       graft.ops.EventOps.stickiness(
-        s.read.parquet(s"$dir/events.parquet"), windowDays = 28)),
+        Registrar.table(s, dir, "events"), windowDays = 28)),
 
     // do two dedup tiers agree on WHICH docs are dups? κ between the
     // exact-text flag and the bag-of-words flag (x56's fingerprint)
     "x196_dedup_agreement" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
         .select(F.col("doc_id"),
           F.md5(F.coalesce(F.col("text"), F.lit(""))).as("__fa"),
           TextOps.bowFingerprint(F.col("text")).as("__fb"))
@@ -2258,7 +2275,7 @@ object SparkEntry {
     // CUPED: pre-period purchase value as covariate, post-period as
     // outcome, arms by user parity — everything from one stats pass
     "x197_cuped" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val dom = F.dayofmonth(graft.ops.EventOps.tsStamp(ev))
       val per = ev.groupBy("user_id")
         .agg(
@@ -2273,7 +2290,7 @@ object SparkEntry {
     // token-weighted length quantiles per source — distinct-value
     // collapse, keyed cumulative windows, literal q fan-out
     "x198_weighted_quantile" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       graft.ops.Stats.weightedQuantile(docs, Seq("source"),
         F.col("n_chars"), TextOps.tokenCount(F.col("text")),
         qs = Seq(0.25, 0.5, 0.9))
@@ -2284,7 +2301,7 @@ object SparkEntry {
     // is confounded by the quality score
     "x199_simpsons" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       val t = F.col("lang") === "en"
       val y = F.col("n_chars").cast("double")
@@ -2304,7 +2321,7 @@ object SparkEntry {
     // split-conformal interval around the chars/6 token-count predictor:
     // md5 calibration half, order-statistic q_hat, eval coverage
     "x200_conformal" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       graft.ops.Stats.conformalInterval(docs, F.col("doc_id"),
         TextOps.tokenCount(F.col("text")), F.col("n_chars") / 6.0,
         calibRate = 0.5, q = 0.9)
@@ -2314,7 +2331,7 @@ object SparkEntry {
     // equal-width score slices accumulated from the top down
     "x201_gains" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.gainsCurve(scored, F.col("quality_score"),
         F.col("lang") === "en", nBins = 10)
@@ -2324,7 +2341,7 @@ object SparkEntry {
     // lang's count by md5 rank — the data-dependent cap broadcasts
     "x202_balanced" -> ((s, dir) =>
       graft.ops.Sampling.balancedDownsample(
-        s.read.parquet(s"$dir/documents.parquet").select("doc_id", "lang"),
+        Registrar.table(s, dir, "documents").select("doc_id", "lang"),
         F.col("lang"), F.col("doc_id"))
         .orderBy("lang", "doc_id")),
 
@@ -2332,7 +2349,7 @@ object SparkEntry {
     // recall/precision of the x45 bucket generator — the eval that
     // decides nPlanes/nTables before anyone trusts the ANN path
     "x203_lsh_recall_eval" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       val planes = Similarity.hyperplanes(4, 64, 42L)
       val b = emb.select(F.col("vec_id"),
         Similarity.lshBucket(F.col("embedding"), planes).as("bucket"))
@@ -2358,14 +2375,14 @@ object SparkEntry {
     // odds ratio / relative risk of zh docs being long, Katz log CI —
     // one 4-cell collapse, conditional Haldane correction
     "x204_odds_ratio" -> ((s, dir) =>
-      graft.ops.Stats.oddsRatio(s.read.parquet(s"$dir/documents.parquet"),
+      graft.ops.Stats.oddsRatio(Registrar.table(s, dir, "documents"),
         F.col("lang") === "zh", F.col("n_chars") > 300)),
 
     // Matthews correlation of the x49 classifier at τ=0.5 — the
     // imbalance-honest single number beside x191's kappa
     "x205_mcc" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.mcc(scored, F.col("quality_score") >= 0.5,
         F.col("lang") === "en")
@@ -2375,7 +2392,7 @@ object SparkEntry {
     // halves — the standard model-monitoring drift number
     "x206_psi" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.psi(scored, F.col("quality_score"),
         F.col("doc_id") % 2 === 0, nBins = 10)
@@ -2386,7 +2403,7 @@ object SparkEntry {
     // the part it cannot
     "x207_brier" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.brierDecomposition(scored, F.col("quality_score"),
         F.col("lang") === "en", nBins = 10)
@@ -2395,7 +2412,7 @@ object SparkEntry {
     // Kendall tau between the x125 popularity and quantity rankings —
     // rank stability over the top-20 intersection, O(k^2) bounded pairs
     "x208_kendall_tau" -> ((s, dir) => {
-      val agg = s.read.parquet(s"$dir/lineitem.parquet")
+      val agg = Registrar.table(s, dir, "lineitem")
         .groupBy(F.col("l_returnflag").as("q"), F.col("l_suppkey").as("item"))
         .agg(F.count(F.lit(1)).as("n"), F.sum("l_quantity").as("sq"))
       val wA = Window.partitionBy("q").orderBy(F.col("n").desc, F.col("item"))
@@ -2410,7 +2427,7 @@ object SparkEntry {
     // jackknife SE for purchases-per-click with users as the unit —
     // pseudo-values from totals-minus-group, no resampling
     "x209_jackknife_ratio" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Stats.jackknifeRatio(ev, F.col("user_id"),
         F.when(F.col("event_type") === "purchase", 1L).otherwise(0L),
         F.when(F.col("event_type") === "click", 1L).otherwise(0L))
@@ -2419,7 +2436,7 @@ object SparkEntry {
     // minimal detectable effect on per-user purchase value at the x197
     // parity arms — pinned z literals, one stats pass
     "x210_mde_power" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val per = ev.groupBy("user_id")
         .agg(F.coalesce(F.sum(F.when(
           F.col("event_type") === "purchase", F.col("value"))), F.lit(0.0))
@@ -2431,7 +2448,7 @@ object SparkEntry {
     // sets (RBF, fixed σ²=32=d/2) — distribution-level drift the token
     // stats miss; quadratic only in the bounded sample
     "x211_mmd_drift" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.mmdDrift(emb.filter(F.col("label") === 0),
         emb.filter(F.col("label") === 1), "vec_id", "embedding",
         sigma2 = 32.0)
@@ -2444,7 +2461,7 @@ object SparkEntry {
     // property; counting over a query sample scales it, not skews it) —
     // the corpus side stays full
     "x212_hubness" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.hubnessCensus(emb, emb.filter(F.col("vec_id") % 5 === 0),
         "vec_id", "embedding", k = 10)
     }),
@@ -2454,7 +2471,7 @@ object SparkEntry {
     // much of the 64 dims is real structure
     "x213_twonn_id" -> ((s, dir) =>
       Similarity.twoNnId(
-        s.read.parquet(s"$dir/embeddings.parquet")
+        Registrar.table(s, dir, "embeddings")
           .filter(F.col("vec_id") % 5 === 0),
         "vec_id", "embedding")),
 
@@ -2462,20 +2479,20 @@ object SparkEntry {
     // sample-count variance — the weighted shard-selection classic
     "x214_pps" -> ((s, dir) =>
       graft.ops.Sampling.ppsSystematic(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id",
+        Registrar.table(s, dir, "documents"), "doc_id",
         F.col("n_chars"), n = 10)),
 
     // Wilson score interval for each lang's long-doc rate — the error
     // bar that survives small slices and extreme rates
     "x215_wilson" -> ((s, dir) =>
       graft.ops.Stats.wilsonInterval(
-        s.read.parquet(s"$dir/documents.parquet"), Seq("lang"),
+        Registrar.table(s, dir, "documents"), Seq("lang"),
         F.col("n_chars") > 300)),
 
     // rank-biased overlap (p=0.9, k=20) between the x125 rankings —
     // top-weighted, handles non-conjoint lists (kendall's blind spot)
     "x216_rbo" -> ((s, dir) => {
-      val agg = s.read.parquet(s"$dir/lineitem.parquet")
+      val agg = Registrar.table(s, dir, "lineitem")
         .groupBy(F.col("l_returnflag").as("q"), F.col("l_suppkey").as("item"))
         .agg(F.count(F.lit(1)).as("n"), F.sum("l_quantity").as("sq"))
       val wA = Window.partitionBy("q").orderBy(F.col("n").desc, F.col("item"))
@@ -2489,7 +2506,7 @@ object SparkEntry {
     // the tail-sensitive causal readout beside x189's mean ATE
     "x217_qte" -> ((s, dir) =>
       graft.ops.Stats.quantileTreatmentEffect(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("lang") === "en", F.col("n_chars"),
         qs = Seq(0.25, 0.5, 0.75, 0.9))),
 
@@ -2497,26 +2514,26 @@ object SparkEntry {
     // curve x128's gini summarizes, as 10 ladder points
     "x218_lorenz" -> ((s, dir) =>
       graft.ops.Stats.lorenzCurve(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("n_chars"),
+        Registrar.table(s, dir, "documents"), F.col("n_chars"),
         nPoints = 10)),
 
     // bigram conditional entropy vs unigram entropy: the entropy-rate
     // redundancy readout (template spam crashes the ratio toward 0)
     "x219_cond_entropy" -> ((s, dir) =>
       graft.ops.Stats.bigramCondEntropy(
-        s.read.parquet(s"$dir/documents.parquet"), "text")),
+        Registrar.table(s, dir, "documents"), "text")),
 
     // exact 1-D Wasserstein between the src0-9 and src10-19 length
     // distributions — mass-distance drift beside x165's max-gap KS
     "x220_wasserstein" -> ((s, dir) =>
       graft.ops.Stats.wasserstein1d(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.length(F.col("source")) === 4, F.col("n_chars"))),
 
     // Burrows' delta stylometry between every source pair over the
     // top-30 corpus words — the "same scraper, two names" detector
     "x221_burrows_delta" -> ((s, dir) =>
-      TextOps.burrowsDelta(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.burrowsDelta(Registrar.table(s, dir, "documents"),
         "source", "text", topK = 30)),
 
     // Heaps'-law vocabulary exponent: log-log OLS over the x82 growth
@@ -2525,7 +2542,7 @@ object SparkEntry {
     // unordered sums flipped the 6-dp hash on association order in r15.
     "x222_heaps_fit" -> ((s, dir) => {
       val growth = TextOps.vocabGrowth(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Registrar.table(s, dir, "documents"), "doc_id", "text",
         bucketSize = 25)
         .filter(F.col("cum_tokens") > 0 && F.col("cum_types") > 0)
       graft.ops.Stats.olsFitQuantized(growth, Nil,
@@ -2536,7 +2553,7 @@ object SparkEntry {
     // Nelson-Aalen cumulative hazard over the x171 lifetimes — the
     // additive sibling whose slope reads out tenure-dependent churn
     "x223_nelson_aalen" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val per = ev.groupBy("user_id")
         .agg(F.min(graft.ops.EventOps.tsStamp(ev)).as("f"),
           F.max(graft.ops.EventOps.tsStamp(ev)).as("l"))
@@ -2553,14 +2570,14 @@ object SparkEntry {
     // event-type pair — one (user, type) collapse, types² fan-out only
     "x224_audience_overlap" -> ((s, dir) =>
       graft.ops.EventOps.audienceOverlap(
-        s.read.parquet(s"$dir/events.parquet"))),
+        Registrar.table(s, dir, "events"))),
 
     // approximate-FD census over orders: which columns are real keys
     // (o_orderkey → o_custkey holds) and which "keys" lie — two-level
     // distinct-then-rollup aggregations, one per candidate pair
     "x225_fd_profile" -> ((s, dir) =>
       graft.ops.Stats.fdProfile(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         Seq("o_orderkey" -> "o_custkey",
           "o_custkey" -> "o_orderpriority",
           "o_orderpriority" -> "o_orderstatus",
@@ -2571,11 +2588,11 @@ object SparkEntry {
     // fact→dim directions read 1.0, the reverse directions read the
     // key-usage fraction — distinct collapses + one semi-join each
     "x226_inclusion" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val pt = s.read.parquet(s"$dir/part.parquet")
-      val sp = s.read.parquet(s"$dir/supplier.parquet")
-      val or = s.read.parquet(s"$dir/orders.parquet")
-      val cu = s.read.parquet(s"$dir/customer.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
+      val pt = Registrar.table(s, dir, "part")
+      val sp = Registrar.table(s, dir, "supplier")
+      val or = Registrar.table(s, dir, "orders")
+      val cu = Registrar.table(s, dir, "customer")
       graft.ops.Stats.inclusionProfile(Seq(
         ("lineitem.partkey<part", li, "l_partkey", pt, "p_partkey"),
         ("lineitem.suppkey<supplier", li, "l_suppkey", sp, "s_suppkey"),
@@ -2595,7 +2612,7 @@ object SparkEntry {
     // replays both the blocking and the score.
     "x228_jw_pairs" -> ((s, dir) =>
       Dedup.jaroWinklerPairs(
-        s.read.parquet(s"$dir/customer.parquet"), "c_custkey",
+        Registrar.table(s, dir, "customer"), "c_custkey",
         F.col("c_name"),
         F.concat_ws("|", F.col("c_nationkey"),
           F.substring(F.col("c_name"), 1, 15)), minSim = 0.985)
@@ -2606,7 +2623,7 @@ object SparkEntry {
     // codegen map work on the blocked pair list (same composite block as
     // x228)
     "x229_record_linkage" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = Registrar.table(s, dir, "customer")
       val pairs = Dedup.jaroWinklerPairs(cust, "c_custkey",
         F.col("c_name"),
         F.concat_ws("|", F.col("c_nationkey"),
@@ -2629,7 +2646,7 @@ object SparkEntry {
     // "last event ≥ 24 h before the global max". Epoch seconds are floored
     // (unix_timestamp) so DuckDB replays floor(epoch(ts)) bit-identically.
     "x230_logrank" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val per = ev.groupBy("user_id")
         .agg(F.min(F.unix_timestamp(t)).as("f"),
@@ -2648,13 +2665,13 @@ object SparkEntry {
     // mean — exact-integer sufficient statistics (cents), closed-form MoM
     "x231_shrunk_means" -> ((s, dir) =>
       graft.ops.Stats.ebShrunkMeans(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_nationkey").cast("long"), F.col("c_acctbal"))),
 
     // Holm step-down (FWER) over the same per-token chi2 table x176
     // BH-adjusts — the release-blocking sibling
     "x232_holm" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val grp = F.when(F.col("lang") === "en", "en")
         .when(F.col("lang") === "zh", "zh").otherwise("other")
       graft.ops.Stats.holmAdjust(
@@ -2665,7 +2682,7 @@ object SparkEntry {
     // McNemar paired comparison of two en-detectors (stopword hit vs
     // length rule) against the lang label — discordant counts only
     "x233_mcnemar" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val truth = F.col("lang") === "en"
       graft.ops.Stats.mcnemar(d,
         F.col("text").contains(" the ") === truth,
@@ -2676,34 +2693,34 @@ object SparkEntry {
     // above the others — k-group rank test, distinct-value collapse only
     "x234_kruskal_wallis" -> ((s, dir) =>
       graft.ops.Stats.kruskalWallis(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_mktsegment"), F.col("c_acctbal"))),
 
     // Cramér's V (plus Bergsma bias-corrected) between order priority and
     // status — dense grid, margins from the cell collapse
     "x235_cramers_v" -> ((s, dir) =>
       graft.ops.Stats.cramersV(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         F.col("o_orderpriority"), F.col("o_orderstatus"))),
 
     // pairwise Cohen's d / Hedges' g between segments on balance —
     // exact-integer cents sufficient statistics, G-row pair table
     "x236_cohens_d" -> ((s, dir) =>
       graft.ops.Stats.cohensD(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_mktsegment"), F.col("c_acctbal"))),
 
     // Brown-Forsythe variance homogeneity across segments — median
     // carried doubled in exact cents, deviations stay integer
     "x237_brown_forsythe" -> ((s, dir) =>
       graft.ops.Stats.brownForsythe(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_mktsegment"), F.col("c_acctbal"))),
 
     // diff-in-diff of event value: even users (treated) vs odd, second
     // half of the month vs first — 4-cell collapse, quantized milli-units
     "x238_diff_in_diff" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       graft.ops.Stats.diffInDiff(ev,
         F.pmod(F.col("user_id"), F.lit(2L)) === 0L,
@@ -2714,12 +2731,12 @@ object SparkEntry {
     // capture-recapture over the (source, token) collapse
     "x239_chao1" -> ((s, dir) =>
       graft.ops.TextOps.chao1Richness(
-        s.read.parquet(s"$dir/documents.parquet"), Seq("source"), "text")),
+        Registrar.table(s, dir, "documents"), Seq("source"), "text")),
 
     // Cronbach's alpha over four integer length-ish signals — do the doc
     // size proxies measure one construct; one-pass exact sums
     "x240_cronbach" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val len = F.length(F.col("text"))
       def minus(ch: String) =
         len - F.length(F.regexp_replace(F.col("text"), ch, ""))
@@ -2734,13 +2751,13 @@ object SparkEntry {
     // differ; same distinct-value collapse, G-row pair join
     "x242_dunn" -> ((s, dir) =>
       graft.ops.Stats.dunnPairs(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_mktsegment"), F.col("c_acctbal"))),
 
     // Cochran's Q over three paired en-detectors — the k-way McNemar;
     // one pass of exact integer sums
     "x243_cochran_q" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val truth = F.col("lang") === "en"
       graft.ops.Stats.cochranQ(d, Seq(
         ("stop", F.col("text").contains(" the ") === truth),
@@ -2752,20 +2769,20 @@ object SparkEntry {
     // of x235's Pearson grid
     "x244_g_test" -> ((s, dir) =>
       graft.ops.Stats.gTest(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         F.col("o_orderpriority"), F.col("o_orderstatus"))),
 
     // ICC(1): how much balance variance is BETWEEN nations — one-way
     // random effects from exact cents ANOVA sums
     "x245_icc1" -> ((s, dir) =>
       graft.ops.Stats.icc1(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_nationkey"), F.col("c_acctbal"))),
 
     // partial correlation of n_chars and e-counts controlling for raw
     // length — do the signals agree beyond tracking size
     "x246_partial_corr" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val len = F.length(F.col("text"))
       graft.ops.Stats.partialCorr(d, F.col("n_chars"),
         len - F.length(F.regexp_replace(F.col("text"), "e", "")), len)
@@ -2774,7 +2791,7 @@ object SparkEntry {
     // Durbin-Watson of daily event volume residuals around the OLS
     // trend — autocorrelation left behind by the linear fit
     "x247_durbin_watson" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val daily = ev.groupBy(F.dayofmonth(t).cast("long").as("d"))
         .agg(F.count(F.lit(1)).cast("double").as("y"))
@@ -2785,13 +2802,13 @@ object SparkEntry {
     // ordinal effect size from the x175 rank-sum identity
     "x248_cliffs_delta" -> ((s, dir) =>
       graft.ops.Stats.cliffsDelta(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("lang") === "en")),
 
     // Bowker symmetry of the event transition matrix — is any i->j flow
     // unbalanced by its reverse (one-way migration detector)
     "x249_bowker" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val w = Window.partitionBy("user_id").orderBy(t, F.col("event_id"))
       val seq2 = ev.select(F.col("event_type"),
@@ -2803,7 +2820,7 @@ object SparkEntry {
     // Wald-Wolfowitz runs test on daily event volume — streaks around
     // the exact doubled median vs noise
     "x250_runs_test" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val daily = ev.groupBy(F.dayofmonth(t).cast("long").as("d"))
         .agg(F.count(F.lit(1)).cast("double").as("y"))
@@ -2814,7 +2831,7 @@ object SparkEntry {
     // association with nation confounding held inside strata
     "x251_mantel_haenszel" -> ((s, dir) =>
       graft.ops.Stats.mantelHaenszel(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_nationkey"), F.col("c_mktsegment") === "BUILDING",
         F.col("c_acctbal") > 5000)),
 
@@ -2822,13 +2839,13 @@ object SparkEntry {
     // priority ladder (1-URGENT < ... < 5-LOW lexicographically)
     "x252_jonckheere" -> ((s, dir) =>
       graft.ops.Stats.jonckheereTerpstra(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         F.col("o_orderpriority"), F.col("o_totalprice"))),
 
     // Friedman: do the three length signals rank documents identically —
     // within-doc midranks, tie-general chi2
     "x253_friedman" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val len = F.length(F.col("text"))
       def minus(ch: String) =
         len - F.length(F.regexp_replace(F.col("text"), ch, ""))
@@ -2841,13 +2858,13 @@ object SparkEntry {
     // chi2 expected cells are < 5
     "x254_fisher_exact" -> ((s, dir) =>
       graft.ops.Stats.fisherExact(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("source") === "src0", F.col("lang") === "zh")),
 
     // k-core of the part co-purchase graph (k=80, 3 fixed peels — the
     // fixture peels through round 3; parity holds converged or not)
     "x255_kcore" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey")
       val e = li.as("x").join(li.as("y"),
         F.col("x.l_orderkey") === F.col("y.l_orderkey") &&
@@ -2861,7 +2878,7 @@ object SparkEntry {
     // deterministic price band — ordinal agreement where near-misses count
     "x256_weighted_kappa" -> ((s, dir) =>
       graft.ops.Stats.weightedKappa(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         F.substring(F.col("o_orderpriority"), 1, 1).cast("long"),
         F.least(F.lit(5L),
           F.floor(F.col("o_totalprice") / 100000.0).cast("long") + 1L))),
@@ -2870,13 +2887,13 @@ object SparkEntry {
     // the maximally outlier-immune k-group location test
     "x268_moods_median" -> ((s, dir) =>
       graft.ops.Stats.moodsMedianTest(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_mktsegment"), F.col("c_acctbal"))),
 
     // Kendall's W: how unanimously do the three length signals rank
     // documents — normalized friedman concordance
     "x269_kendall_w" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val len = F.length(F.col("text"))
       def minus(ch: String) =
         len - F.length(F.regexp_replace(F.col("text"), ch, ""))
@@ -2889,7 +2906,7 @@ object SparkEntry {
     // bucket — equal-panel multi-rater agreement from integer stats
     "x270_fleiss_kappa" -> ((s, dir) =>
       graft.ops.Stats.fleissKappa(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Registrar.table(s, dir, "lineitem"),
         F.col("l_orderkey"),
         F.floor((F.col("l_quantity") - 1) / 10), m = 4)),
 
@@ -2897,7 +2914,7 @@ object SparkEntry {
     // VARYING panel sizes real annotation tables have (every order >= 2)
     "x271_kripp_alpha" -> ((s, dir) =>
       graft.ops.Stats.krippAlphaNominal(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Registrar.table(s, dir, "lineitem"),
         F.col("l_orderkey"),
         F.floor((F.col("l_quantity") - 1) / 10))),
 
@@ -2905,21 +2922,21 @@ object SparkEntry {
     // totalprice distribution — the tail-weighted drift test
     "x272_ad_ksample" -> ((s, dir) =>
       graft.ops.Stats.adKSample(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         F.col("o_orderpriority"), F.col("o_totalprice"))),
 
     // Goodman-Kruskal lambda: how much does knowing the source cut the
     // error of guessing the language — directed nominal prediction
     "x273_gk_lambda" -> ((s, dir) =>
       graft.ops.Stats.gkLambda(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("source"), F.col("lang"))),
 
     // entropy + recursive (c,2) l-diversity per QI class — the
     // disclosure criteria distinct-l (x172) is too weak for
     "x274_l_diversity" -> ((s, dir) =>
       graft.ops.Curation.lDiversityAudit(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         Seq("c_nationkey", "c_mktsegment"),
         F.floor(F.col("c_acctbal") / 1000), lMin = 2)),
 
@@ -2927,7 +2944,7 @@ object SparkEntry {
     // $800 — the positive claim a non-significant t-test cannot make
     "x275_tost" -> ((s, dir) =>
       graft.ops.Stats.tostEquivalence(
-        s.read.parquet(s"$dir/customer.parquet"), Seq.empty,
+        Registrar.table(s, dir, "customer"), Seq.empty,
         F.col("c_mktsegment"), F.col("c_acctbal"),
         "BUILDING", "AUTOMOBILE", margin = 800.0)),
 
@@ -2935,7 +2952,7 @@ object SparkEntry {
     // balance gap: inverse-variance pooling, Cochran Q, Higgins I2
     "x276_meta_fixed" -> ((s, dir) =>
       graft.ops.Stats.metaFixedEffect(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         F.col("c_nationkey"), F.col("c_mktsegment"), F.col("c_acctbal"),
         "BUILDING", "AUTOMOBILE")),
 
@@ -2943,14 +2960,14 @@ object SparkEntry {
     // line-slot's systematic offset is charged against agreement
     "x277_icc2" -> ((s, dir) =>
       graft.ops.Stats.icc2(
-        s.read.parquet(s"$dir/lineitem.parquet"),
+        Registrar.table(s, dir, "lineitem"),
         F.col("l_orderkey"), F.col("l_linenumber"), F.col("l_quantity"),
         k = 4)),
 
     // Lin's CCC: does 6x the token count measure the SAME char length —
     // agreement with y = x, decomposed into precision r and accuracy C_b
     "x278_lins_ccc" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       graft.ops.Stats.linsCcc(
         d.select(F.length(F.col("text")).as("x"),
           (F.size(F.split(F.trim(F.col("text")), "\\s+")) * 6).as("y")),
@@ -2960,18 +2977,18 @@ object SparkEntry {
     // Newman modularity of the nation partition over the supplier
     // co-purchase graph: is sourcing nation-clustered
     "x279_modularity" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.modularity(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst",
-        s.read.parquet(s"$dir/supplier.parquet"),
+        Registrar.table(s, dir, "supplier"),
         "s_suppkey", "s_nationkey")
     }),
 
     // Ljung-Box portmanteau: is the daily event-count series white
     // noise across the first 7 lags jointly
     "x280_ljung_box" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -2982,7 +2999,7 @@ object SparkEntry {
     // PACF: how many lag features the daily series actually needs —
     // the AR-order cutoff x167's ACF geometrically blurs
     "x321_pacf" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -2993,7 +3010,7 @@ object SparkEntry {
     // turning points: is the daily series IID-random or locally
     // structured — the cheap screen before permutation methods
     "x322_turning_points" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3004,7 +3021,7 @@ object SparkEntry {
     // sample entropy: how repeatable the daily shape is as one number
     // — rising SampEn on a metric stream is early chaos
     "x323_sample_entropy" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3017,14 +3034,14 @@ object SparkEntry {
     // (shape, tails — not just location/scale) match the rest
     "x324_cvm" -> ((s, dir) =>
       graft.ops.Stats.cvmTwoSample(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("lang") === "en")),
 
     // restricted mean survival time over the x230 churn cohort: average
     // active hours per user within the first 360 h — the area under the
     // KM curve, robust where median/logRank mislead
     "x325_rmst" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val per = ev.groupBy("user_id")
         .agg(F.min(F.unix_timestamp(t)).as("f"),
@@ -3042,11 +3059,11 @@ object SparkEntry {
     // CONTRAST across edges, the nearest-neighbour complement of
     // Moran's global clustering readout
     "x326_geary_c" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.gearyC(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst",
-        s.read.parquet(s"$dir/supplier.parquet"),
+        Registrar.table(s, dir, "supplier"),
         "s_suppkey", F.col("s_acctbal"))
     }),
 
@@ -3054,20 +3071,20 @@ object SparkEntry {
     // spread vs the rest — either alone slips past x175 or x297
     "x327_lepage" -> ((s, dir) =>
       graft.ops.Stats.lepage(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("lang") === "zh")),
 
     // Brunner-Munzel stochastic superiority for de lengths vs the
     // rest — the variance-free reading x175's equal-spread U assumes
     "x328_brunner_munzel" -> ((s, dir) =>
       graft.ops.Stats.brunnerMunzel(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("lang") === "de")),
 
     // spectral entropy of the x305 daily-count periodogram: one-number
     // cycle-vs-noise verdict on the event series
     "x329_spectral_entropy" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3078,7 +3095,7 @@ object SparkEntry {
     // which supplier pair co-occurs NEXT: CN/Jaccard/Adamic-Adar/RA
     // over non-adjacent pairs of the x300 co-occurrence graph
     "x330_link_prediction" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.linkPrediction(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst", topN = 20)
@@ -3087,7 +3104,7 @@ object SparkEntry {
     // do high-degree suppliers form their own club: density of the
     // deg>k induced subgraph across the k ladder
     "x331_rich_club" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.richClub(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst", kMax = 10)
@@ -3097,7 +3114,7 @@ object SparkEntry {
     // stable (eta small) or wandering — the reversed-null companion of
     // x284's trend test
     "x332_kpss" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3109,7 +3126,7 @@ object SparkEntry {
     // on daily volume — does x193's snaive earn its keep under SQUARED
     // loss
     "x333_theils_u" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3121,7 +3138,7 @@ object SparkEntry {
     // (H>0.5) or mean-revert — the long-memory readout over the x112
     // hourly grid
     "x334_hurst" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val hourly = ev.groupBy(
           F.floor(F.unix_timestamp(t) / 3600).cast("long").as("t"))
@@ -3133,7 +3150,7 @@ object SparkEntry {
     // upper-tail dependence between per-user activity and spend: do
     // the monsters arrive together — what x116's bulk correlation hides
     "x377_tail_dependence" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val perUser = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").as("activity"),
         F.sum(F.round(F.col("value") * 100).cast("long")).as("spend_c"))
@@ -3144,7 +3161,7 @@ object SparkEntry {
     // paired t on per-user first-half vs second-half activity: each
     // user its own control — the within-subject power x117 wastes
     "x378_paired_t" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val d = F.to_date(graft.ops.EventOps.tsStamp(ev))
       val withD = ev.select(F.col("user_id"), d.as("__d"))
       val mn = withD.agg(F.min("__d").as("__m"))
@@ -3162,14 +3179,14 @@ object SparkEntry {
     // stochastic-superiority p-hat
     "x379_hodges_lehmann" -> ((s, dir) =>
       graft.ops.Stats.hodgesLehmannShift(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("n_chars"),
+        Registrar.table(s, dir, "documents"), F.col("n_chars"),
         F.col("lang") === "en")),
 
     // Cuzick trend of order value across the priority ladder (1-URGENT
     // … 5-LOW): does spend CLIMB with urgency — the ordered question
     // x234's unordered Kruskal-Wallis can't ask
     "x380_cuzick_trend" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Registrar.table(s, dir, "orders")
       graft.ops.Stats.cuzickTrend(o, F.col("o_totalprice"),
         F.substring(F.col("o_orderpriority"), 1, 1).cast("long"))
     }),
@@ -3179,14 +3196,14 @@ object SparkEntry {
     // tests — immune to the balance tail
     "x381_mood_median" -> ((s, dir) =>
       graft.ops.Stats.moodMedian(
-        s.read.parquet(s"$dir/customer.parquet"), F.col("c_acctbal"),
+        Registrar.table(s, dir, "customer"), F.col("c_acctbal"),
         F.col("c_mktsegment"), scale = 100L)),
 
     // Lin's CCC between per-user first/second-half activity: does the
     // second half AGREE with the first on the 45-degree line —
     // precision x accuracy, where x378 only tests the mean shift
     "x385_lin_ccc" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val d = F.to_date(graft.ops.EventOps.tsStamp(ev))
       val withD = ev.select(F.col("user_id"), d.as("__d"))
       val mn = withD.agg(F.min("__d").as("__m"))
@@ -3203,7 +3220,7 @@ object SparkEntry {
     // how far apart the two halves can be for ONE user, in cents —
     // the interval read next to x385's coefficient
     "x386_bland_altman" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val d = F.to_date(graft.ops.EventOps.tsStamp(ev))
       val base = ev.select(F.col("user_id"), d.as("__d"),
         F.round(F.col("value") * 100).cast("long").as("__c"))
@@ -3223,7 +3240,7 @@ object SparkEntry {
     // likely", the absolute-risk read x204's odds ratio exaggerates
     // when the outcome is common
     "x387_relative_risk" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Registrar.table(s, dir, "orders")
       graft.ops.Stats.relativeRisk(o,
         F.substring(F.col("o_orderpriority"), 1, 1) === "1",
         F.col("o_orderstatus") === "F")
@@ -3232,7 +3249,7 @@ object SparkEntry {
     // Pettitt change-point on daily volume: did the level shift, and
     // WHEN — the located break x332's KPSS only smells
     "x388_pettitt" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3243,7 +3260,7 @@ object SparkEntry {
     // Buishand range on daily spend: total cumulative drift of the
     // revenue level — the CUSUM grade next to x388's located break
     "x389_buishand" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3255,7 +3272,7 @@ object SparkEntry {
     // SNHT on hourly volume: the parametric break detector that stays
     // sharp near the series ends where x388's ranks run out of pairs
     "x390_snht" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val hourly = ev.groupBy(
           F.floor(F.unix_timestamp(t) / 3600).cast("long").as("t"))
@@ -3268,14 +3285,14 @@ object SparkEntry {
     // F-significance hides at scale (dollar quantization)
     "x391_anova_effect" -> ((s, dir) =>
       graft.ops.Stats.anovaEffectSizes(
-        s.read.parquet(s"$dir/orders.parquet"), F.col("o_totalprice"),
+        Registrar.table(s, dir, "orders"), F.col("o_totalprice"),
         F.col("o_orderpriority"), scale = 1L)),
 
     // Tukey-Kramer q per segment pair on account balance: WHICH
     // segments differ, after the omnibus test says "somewhere"
     "x392_tukey_q" -> ((s, dir) =>
       graft.ops.Stats.tukeyHsdQ(
-        s.read.parquet(s"$dir/customer.parquet"), F.col("c_acctbal"),
+        Registrar.table(s, dir, "customer"), F.col("c_acctbal"),
         F.col("c_mktsegment"), scale = 100L)),
 
     // Theil-T decomposition of doc length by source: is length
@@ -3283,14 +3300,14 @@ object SparkEntry {
     // global concentration number can't make
     "x393_theil_decomp" -> ((s, dir) =>
       graft.ops.Stats.theilDecomp(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("source"))),
 
     // Page's L across the week: does daily volume CLIMB through each
     // week — the ordered within-block profile x369's seasonal MK and
     // an unordered Friedman both dilute
     "x394_page_trend" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3302,7 +3319,7 @@ object SparkEntry {
     // FDR — estimate the null share from the flat p-tail and recover
     // the power x176's BH and x258's BY both leave on the table
     "x395_storey_q" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val grp = F.when(F.col("lang") === "en", "en")
         .when(F.col("lang") === "zh", "zh").otherwise("other")
       graft.ops.Stats.storeyQvalue(
@@ -3315,7 +3332,7 @@ object SparkEntry {
     // (dollar quantization)
     "x396_siegel_tukey" -> ((s, dir) =>
       graft.ops.Stats.siegelTukey(
-        s.read.parquet(s"$dir/orders.parquet"), F.col("o_totalprice"),
+        Registrar.table(s, dir, "orders"), F.col("o_totalprice"),
         F.substring(F.col("o_orderpriority"), 1, 1) === "1")),
 
     // Anderson-Darling of the x178 scores against Uniform: the
@@ -3323,7 +3340,7 @@ object SparkEntry {
     // thresholds, where x375's CvM weighs the body
     "x397_ad_uniform" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.adUniform(scored, F.col("quality_score"))
     }),
@@ -3332,7 +3349,7 @@ object SparkEntry {
     // who is CLOSE to the most of the graph — the bridge read degree
     // and x344's Katz both blur
     "x398_harmonic2" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.harmonic2(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst", topN = 20)
@@ -3343,7 +3360,7 @@ object SparkEntry {
     // shift number summarizes away
     "x399_decile_shift" -> ((s, dir) =>
       graft.ops.Stats.decileShift(
-        s.read.parquet(s"$dir/orders.parquet"), F.col("o_totalprice"),
+        Registrar.table(s, dir, "orders"), F.col("o_totalprice"),
         F.substring(F.col("o_orderpriority"), 1, 1) === "1",
         scale = 100L)),
 
@@ -3352,20 +3369,20 @@ object SparkEntry {
     // every cosine in the ANN stack
     "x400_dim_variance" -> ((s, dir) =>
       Similarity.dimVarianceCensus(
-        s.read.parquet(s"$dir/embeddings.parquet"), "embedding")),
+        Registrar.table(s, dir, "embeddings"), "embedding")),
 
     // cone-effect census: mean cosine to the corpus centroid + norm
     // CV — how tight the anisotropy cone is, next to x400's which-dims
     "x401_cone_census" -> ((s, dir) =>
       Similarity.coneCensus(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id",
+        Registrar.table(s, dir, "embeddings"), "vec_id",
         "embedding")),
 
     // Chatterjee's xi of per-user spend against activity: functional
     // dependence of ANY shape at ladder cost — where x368's dCor pays
     // all-pairs
     "x402_chatterjee_xi" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val perUser = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").as("activity"),
         F.sum(F.round(F.col("value") * 100).cast("long")).as("spend_c"))
@@ -3377,7 +3394,7 @@ object SparkEntry {
     // quadrant-count BULK association next to x377's tails and
     // x402's any-shape xi
     "x403_blomqvist_beta" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val perUser = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").as("activity"),
         F.sum(F.round(F.col("value") * 100).cast("long")).as("spend_c"))
@@ -3389,7 +3406,7 @@ object SparkEntry {
     // trend AND oscillation — the two-sided read x250's runs test
     // only half-covers
     "x404_bartels" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -3401,8 +3418,8 @@ object SparkEntry {
     // priority: does knowing the segment actually IMPROVE the modal
     // priority guess — error-reduction units, not chi-square ones
     "x405_gk_lambda" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val c = s.read.parquet(s"$dir/customer.parquet")
+      val o = Registrar.table(s, dir, "orders")
+      val c = Registrar.table(s, dir, "customer")
       val j = o.join(c, o("o_custkey") === c("c_custkey"))
       graft.ops.Stats.goodmanKruskalLambda(j, F.col("c_mktsegment"),
         F.col("o_orderpriority"))
@@ -3413,7 +3430,7 @@ object SparkEntry {
     // carries given the previous one
     "x406_char_entropy" -> ((s, dir) =>
       TextOps.charNgramEntropy(
-        s.read.parquet(s"$dir/documents.parquet"), "text",
+        Registrar.table(s, dir, "documents"), "text",
         F.col("lang"))),
 
     // Yuen trimmed-t: are en docs longer AFTER the tails are trimmed —
@@ -3421,7 +3438,7 @@ object SparkEntry {
     // Welch t the outliers own
     "x407_yuen" -> ((s, dir) =>
       graft.ops.Stats.yuenTest(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("n_chars"),
+        Registrar.table(s, dir, "documents"), F.col("n_chars"),
         F.col("lang") === "en", trim = 0.2)),
 
     // leave-one-out 1-NN label accuracy: the local embedding-quality
@@ -3430,14 +3447,14 @@ object SparkEntry {
     // pair scan)
     "x408_knn1_acc" -> ((s, dir) =>
       Similarity.knn1Accuracy(
-        s.read.parquet(s"$dir/embeddings.parquet")
+        Registrar.table(s, dir, "embeddings")
           .filter(F.col("vec_id") % 5 < 2), "vec_id",
         "embedding", F.col("label"))),
 
     // Poisson dispersion of daily counts per event type: is one rate
     // per day a lie — the burstiness verdict capacity math depends on
     "x409_poisson_dispersion" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(F.col("event_type"),
           F.to_date(graft.ops.EventOps.tsStamp(ev)).as("__d"))
         .agg(F.count(F.lit(1)).as("k"))
@@ -3448,8 +3465,8 @@ object SparkEntry {
     // standardized Pearson residuals of segment x priority: WHICH
     // cells drive the association x405's lambda only grades globally
     "x410_chi2_residuals" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val c = s.read.parquet(s"$dir/customer.parquet")
+      val o = Registrar.table(s, dir, "orders")
+      val c = Registrar.table(s, dir, "customer")
       val j = o.join(c, o("o_custkey") === c("c_custkey"))
       graft.ops.Stats.chiSquareResiduals(j, F.col("c_mktsegment"),
         F.col("o_orderpriority"))
@@ -3460,7 +3477,7 @@ object SparkEntry {
     // full AUCs differ here
     "x412_partial_auc" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.partialAuc(scored, F.col("quality_score"),
         F.col("lang") === "en", fMax = 0.1)
@@ -3470,7 +3487,7 @@ object SparkEntry {
     // parameterize the over-dispersion x409 detects — r-hat feeds
     // capacity simulation directly
     "x413_negbin_fit" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val day = F.to_date(graft.ops.EventOps.tsStamp(ev))
       val users = ev.select(F.col("user_id")).distinct()
       val days = ev.select(day.as("__day")).distinct()
@@ -3488,7 +3505,7 @@ object SparkEntry {
     // triangles — the weak-tie structure x331's rich club and x104's
     // triangle count both aggregate away
     "x415_edge_support" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.edgeSupportCensus(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst")
@@ -3498,7 +3515,7 @@ object SparkEntry {
     // for SemDeDup cells to find, or would k-means carve uniform fog
     "x417_hopkins" -> ((s, dir) =>
       Similarity.hopkinsStatistic(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id",
+        Registrar.table(s, dir, "embeddings"), "vec_id",
         "embedding", every = 10)),
 
     // random-pair cosine baseline: the measured similarity of two
@@ -3506,7 +3523,7 @@ object SparkEntry {
     // a claim about
     "x418_random_pair_cos" -> ((s, dir) =>
       Similarity.randomPairCosine(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id",
+        Registrar.table(s, dir, "embeddings"), "vec_id",
         "embedding")),
 
     // ROUGE-2 corpus-internal baseline: clipped multiset bigram P/R/F1
@@ -3514,7 +3531,7 @@ object SparkEntry {
     // measured overlap of two UNRELATED docs, what any ROUGE threshold
     // is implicitly a claim about; per-pair rows, exact counts
     "x424_rouge_baseline" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val ordered = docs.select(F.col("doc_id"))
         .withColumn("__h", F.md5(F.concat(F.lit("rgb:"),
           F.col("doc_id").cast("string"))))
@@ -3535,7 +3552,7 @@ object SparkEntry {
     // bigram precision geomean x brevity penalty — the eval-harness
     // scoring of candidate pairs (ROUGE's precision-side sibling)
     "x425_bleu_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val ids = docs.select("doc_id")
       val pairs = ids.select(F.col("doc_id").as("a"),
           (F.col("doc_id") + 1).as("b"))
@@ -3548,7 +3565,7 @@ object SparkEntry {
     // actually has — per-key presence, distinct values, string min/max
     "x429_json_profile" -> ((s, dir) =>
       graft.ops.Quality.jsonKeyProfile(
-        s.read.parquet(s"$dir/events.parquet"), "props")),
+        Registrar.table(s, dir, "events"), "props")),
 
     // NEAR-dup media: gear-CDC byte-chunk MinHash + banded LSH over the
     // synthesized binary payloads — chunk overlap catches the
@@ -3559,7 +3576,7 @@ object SparkEntry {
     // boundary walk by OpsSpec hand cases.
     "x430_media_neardup" -> ((s, dir) => {
       val media = graft.ops.Multimodal.synthesizeMedia(
-        s.read.parquet(s"$dir/documents.parquet"))
+        Registrar.table(s, dir, "documents"))
       graft.ops.Multimodal.mediaNearDupPairs(media, "doc_id", "media",
           threshold = 0.5)
         .orderBy("a", "b")
@@ -3583,7 +3600,7 @@ object SparkEntry {
         x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
       val sigs = OracleAB.map { case (a, b) =>
         F.array_min(F.transform(F.col("hs"), h => (h * a + b) % OracleP)) }
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 10 === 0)
         .select(F.col("doc_id"), hs.as("hs"))
         .select(F.col("doc_id"),
@@ -3598,7 +3615,7 @@ object SparkEntry {
     // C1 control (NEL), =3 a C0 control (BEL)
     "x432_encoding_defects" -> ((s, dir) => {
       val m = F.col("doc_id") % 11
-      val planted = s.read.parquet(s"$dir/documents.parquet")
+      val planted = Registrar.table(s, dir, "documents")
         .withColumn("text",
           F.when(m === 0, F.concat(F.col("text"), F.lit("\uFFFD")))
             .when(m === 1, F.concat(F.col("text"),
@@ -3616,7 +3633,7 @@ object SparkEntry {
     // read containment 1.0, origin->mirror ~1/13 -- the "drop the
     // re-hosted dump" budget readout
     "x433_source_overlap" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val mirrored = d.unionByName(
         d.filter(F.col("doc_id") % 13 === 0)
           .withColumn("source", F.concat(F.col("source"), F.lit("_m"))))
@@ -3628,7 +3645,7 @@ object SparkEntry {
     // source shard (exact integer prefix sums -- cross-engine-safe)
     "x434_packing_efficiency" -> ((s, dir) =>
       graft.ops.Curation.packingEfficiency(
-        s.read.parquet(s"$dir/documents.parquet"), "source", "doc_id",
+        Registrar.table(s, dir, "documents"), "source", "doc_id",
         "n_chars", 2048)),
 
     // Flesch/FK readability census per source: exact W/S/SY structural
@@ -3636,14 +3653,14 @@ object SparkEntry {
     // slice totals
     "x435_readability" -> ((s, dir) =>
       graft.ops.TextOps.readability(
-        s.read.parquet(s"$dir/documents.parquet"), Seq("source"), "text")),
+        Registrar.table(s, dir, "documents"), Seq("source"), "text")),
 
     // cluster-atomic split assignment over planted mirror pairs (the
     // x433 planting): a near-dup cluster lands in ONE split by
     // construction -- per-doc (rep, split) compared exactly, the
     // strongest check the md5-prefix scheme allows
     "x436_cluster_split" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val mirrors = d.filter(F.col("doc_id") % 13 === 0)
         .withColumn("doc_id", F.col("doc_id") + F.lit(10000000L))
       val pairs = d.filter(F.col("doc_id") % 13 === 0)
@@ -3660,9 +3677,9 @@ object SparkEntry {
     // grades): 3 synchronous self-voting rounds, integer-only argmax --
     // bit-exact cross-engine
     "x437_label_prop" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/orders.parquet")
+      val e = Registrar.table(s, dir, "orders")
         .select("o_orderkey", "o_custkey")
-        .join(s.read.parquet(s"$dir/lineitem.parquet")
+        .join(Registrar.table(s, dir, "lineitem")
             .select("l_orderkey", "l_suppkey"),
           F.col("o_orderkey") === F.col("l_orderkey"))
         .select(F.col("o_custkey").as("src"),
@@ -3678,7 +3695,7 @@ object SparkEntry {
     // l_orderkey%7 -- schema status + null-rate drift + 10-bin PSI on
     // the three numeric measures
     "x438_snapshot_drift" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       val cut = F.lit("1998-07-01").cast("timestamp")
       val a = li.filter(F.col("l_shipdate") < cut)
       val b = li.filter(F.col("l_shipdate") >= cut)
@@ -3698,7 +3715,7 @@ object SparkEntry {
     // l_discount 0.5 (breaks discount_range); flag_domain and
     // price_positive stay green -- one scan, one readout row per rule
     "x439_expectations" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
         .withColumn("l_quantity",
           F.when(F.col("l_orderkey") % 17 === 0,
             F.lit(null).cast("double")).otherwise(F.col("l_quantity")))
@@ -3720,7 +3737,7 @@ object SparkEntry {
     // publishable counts next to the raw ones (utility-loss audit form)
     "x440_dp_counts" -> ((s, dir) =>
       graft.ops.Curation.dpNoisyCounts(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         Seq("source", "lang"), epsilon = 0.5)),
 
     // HyperBall neighborhood function of the (symmetrized) supplier
@@ -3730,7 +3747,7 @@ object SparkEntry {
     // frac_of_max is the effective-diameter readout
     "x444_neighborhood" -> ((s, dir) => {
       val und = graft.ops.Graph.cooccurrenceEdges(
-        s.read.parquet(s"$dir/lineitem.parquet"), "l_orderkey",
+        Registrar.table(s, dir, "lineitem"), "l_orderkey",
         "l_suppkey", minCount = 6)
       val sym = und.select(F.col("src"), F.col("dst")).unionByName(
         und.select(F.col("dst").as("src"), F.col("src").as("dst")))
@@ -3744,7 +3761,7 @@ object SparkEntry {
     // x177's reliability readout; no sequential PAV pass, no driver loop
     "x446_isotonic_cal" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.isotonicCalibration(scored,
         F.col("quality_score"), F.col("lang") === "en", nBins = 10)
@@ -3756,7 +3773,7 @@ object SparkEntry {
     // complement to x444's reach sizes at k*E instead of N*E cost
     "x445_landmark_dist" -> ((s, dir) => {
       val und = graft.ops.Graph.cooccurrenceEdges(
-        s.read.parquet(s"$dir/lineitem.parquet"), "l_orderkey",
+        Registrar.table(s, dir, "lineitem"), "l_orderkey",
         "l_suppkey", minCount = 6)
       val sym = und.select(F.col("src"), F.col("dst")).unionByName(
         und.select(F.col("dst").as("src"), F.col("src").as("dst")))
@@ -3771,7 +3788,7 @@ object SparkEntry {
     // (utility-loss audit form, the x440 convention)
     "x443_dp_mean" -> ((s, dir) =>
       graft.ops.Curation.dpNoisyMean(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         Seq("source"), "n_chars", lo = 0L, hi = 2000L, epsilon = 1.0)),
 
     // k-ary randomized response over the source histogram: each row
@@ -3781,7 +3798,7 @@ object SparkEntry {
     // keep/flip compare never touches an engine exp)
     "x447_randomized_response" -> ((s, dir) =>
       graft.ops.Curation.randomizedResponse(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         "source", "doc_id", p = 0.75)),
 
     // Markov removal-effect attribution over user journeys: credit each
@@ -3790,7 +3807,7 @@ object SparkEntry {
     // to x157's positional rules and x183's U-shape
     "x454_markov_attr" -> ((s, dir) =>
       graft.ops.EventOps.markovAttribution(
-        s.read.parquet(s"$dir/events.parquet"),
+        Registrar.table(s, dir, "events"),
         Seq("click", "error", "signup", "view"), "purchase",
         rounds = 8)),
 
@@ -3808,7 +3825,7 @@ object SparkEntry {
       val sigCols = OracleAB.zipWithIndex.map { case ((a, b), j) =>
         F.array_min(F.transform(F.col("hs"),
           h => (h * a + b) % OracleP)).as(s"s$j") }
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val sigs = docs.filter(F.col("doc_id") % 10 === 0)
         .select(F.col("doc_id"), hs.as("hs"))
         .select(F.col("doc_id") +: sigCols: _*)
@@ -3854,7 +3871,7 @@ object SparkEntry {
     // group by prior-shrunk log-odds z — the principled "what makes
     // this subcorpus different" readout raw TF-IDF ratios get wrong
     "x476_fightin_words" -> ((s, dir) =>
-      TextOps.fightinWords(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.fightinWords(Registrar.table(s, dir, "documents"),
         "lang", "text", alpha0 = 10.0, perGroup = 2)),
 
     // expected events-to-conversion per state: 12-round value
@@ -3862,14 +3879,14 @@ object SparkEntry {
     // state sits from converting (x454 asks who gets credit)
     "x475_hitting_time" -> ((s, dir) =>
       graft.ops.EventOps.hittingTime(
-        s.read.parquet(s"$dir/events.parquet"), "purchase",
+        Registrar.table(s, dir, "events"), "purchase",
         iters = 12)),
 
     // per-token dispersion census (Church-Gale burstiness): Fano and
     // mean-when-present for the top-12 tokens — stopword vs topic-word
     // discrimination for list induction
     "x474_token_dispersion" -> ((s, dir) =>
-      TextOps.tokenDispersion(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.tokenDispersion(Registrar.table(s, dir, "documents"),
         "doc_id", "text", topK = 12)),
 
     // LSH banding planner calibrated on the corpus's own random-pair
@@ -3886,7 +3903,7 @@ object SparkEntry {
       val sigCols = OracleAB.zipWithIndex.map { case ((a, b), j) =>
         F.array_min(F.transform(F.col("hs"),
           h => (h * a + b) % OracleP)).as(s"s$j") }
-      val sigs = s.read.parquet(s"$dir/documents.parquet")
+      val sigs = Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 10 === 0)
         .select(F.col("doc_id").cast("string").as("__id"), hs.as("hs"))
         .select(F.col("__id") +: sigCols: _*)
@@ -3922,7 +3939,7 @@ object SparkEntry {
     // cases; chunking is on the payload TEXT's chars (byte-identical
     // for ASCII payloads — DuckDB md5 is VARCHAR-only).
     "x478_media_neardup_verify" -> ((s, dir) => {
-      val base = s.read.parquet(s"$dir/documents.parquet")
+      val base = Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 7 === 0)
         .select(F.col("doc_id"), F.col("text"))
       val variant = base.filter(F.col("doc_id") % 3 === 0)
@@ -3966,7 +3983,7 @@ object SparkEntry {
       val sigCols = OracleAB.zipWithIndex.map { case ((a, b), j) =>
         F.array_min(F.transform(F.col("hs"),
           h => (h * a + b) % OracleP)).as(s"s$j") }
-      val sigs = s.read.parquet(s"$dir/documents.parquet")
+      val sigs = Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 10 === 0)
         .select(F.col("doc_id").cast("string").as("__id"), hs.as("hs"))
         .select(F.col("__id") +: sigCols: _*)
@@ -4022,10 +4039,10 @@ object SparkEntry {
     // tables: the three true FKs read inclusion 1.0, the reverse
     // direction honestly < 1 (orders without lineitems exist)
     "x490_inclusion_audit" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val l = s.read.parquet(s"$dir/lineitem.parquet")
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val su = s.read.parquet(s"$dir/supplier.parquet")
+      val o = Registrar.table(s, dir, "orders")
+      val l = Registrar.table(s, dir, "lineitem")
+      val c = Registrar.table(s, dir, "customer")
+      val su = Registrar.table(s, dir, "supplier")
       // batched: the (l_orderkey, o_orderkey) pair is audited in BOTH
       // directions — inclusionAuditAll serves the reverse direction from
       // the same aggregate instead of recomputing both distinct sets
@@ -4043,7 +4060,7 @@ object SparkEntry {
     // tv_delta (how many rounds the chain actually needs)
     "x481_mixing_profile" -> ((s, dir) =>
       graft.ops.EventOps.mixingProfile(
-        s.read.parquet(s"$dir/events.parquet"), iters = 8)),
+        Registrar.table(s, dir, "events"), iters = 8)),
 
     // event-time disorder census (the watermark-planning readout):
     // planted deterministic arrival delay — events whose md5(event_id)
@@ -4052,7 +4069,7 @@ object SparkEntry {
     // per-user running event-time max, and the p50/p95/p99 lateness
     // a withWatermark delay would be read from
     "x482_disorder_census" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val arr = F.when(
         F.substring(F.md5(F.col("event_id").cast("string")), 1, 1)
           .isin("0", "1", "2"),
@@ -4068,7 +4085,7 @@ object SparkEntry {
     // averages away; mean_surprisal rides for the contrast
     "x483_surprisal_spans" -> ((s, dir) =>
       graft.ops.TextOps.surprisalSpans(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Registrar.table(s, dir, "documents"), "doc_id", "text",
         window = 20)),
 
     // greedy max-coverage source selection: 5 rounds, each taking the
@@ -4077,7 +4094,7 @@ object SparkEntry {
     // decision (chained-argmax oracle, the x168 convention)
     "x484_greedy_coverage" -> ((s, dir) =>
       graft.ops.Sampling.greedyCoverage(
-        s.read.parquet(s"$dir/documents.parquet"), "source", "text",
+        Registrar.table(s, dir, "documents"), "source", "text",
         k = 5, vocabSize = 64)),
 
     // filter-bias audit (the EEOC four-fifths form applied to data
@@ -4086,7 +4103,7 @@ object SparkEntry {
     // the gate would disparately erase from the mix are flagged
     "x488_filter_bias" -> ((s, dir) =>
       graft.ops.Curation.filterBiasAudit(
-        s.read.parquet(s"$dir/documents.parquet"), "source",
+        Registrar.table(s, dir, "documents"), "source",
         F.length(F.col("text")) >= 400)),
 
     // TextRank keyword extraction (Mihalcea-Tarau 2004): PageRank over
@@ -4095,7 +4112,7 @@ object SparkEntry {
     // undirected) — the composition entry proving the graph stack does
     // keyword mining; x92's oracle round structure on VARCHAR nodes
     "x486_textrank" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val toks = docs.select(F.col("doc_id"), F.explode(F.filter(
         F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
           "\\s+"), x => F.length(x) > 0)).as("tok"))
@@ -4119,7 +4136,7 @@ object SparkEntry {
     // and first-16-dim brute top-10 — exact, engine-replayable sets
     // (the x06 ranking convention: cos desc, neighbor_id tiebreak)
     "x487_truncation_recall" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       val q = emb.filter(F.col("vec_id") % 97 === 0)
       val full = Similarity.bruteKnn(emb, q, "vec_id", "embedding",
@@ -4148,8 +4165,8 @@ object SparkEntry {
     // honest violations with their blast radius (rows in violating
     // groups) — the data-profiling classic behind key/denorm sanity
     "x485_fd_audit" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val l = s.read.parquet(s"$dir/lineitem.parquet")
+      val o = Registrar.table(s, dir, "orders")
+      val l = Registrar.table(s, dir, "lineitem")
       graft.ops.Quality.fdAudit(o, Seq(
           Seq("o_orderkey") -> "o_custkey",
           Seq("o_custkey") -> "o_orderpriority"))
@@ -4164,14 +4181,14 @@ object SparkEntry {
     // long-run occupancy companion to x102/x306
     "x472_stationary" -> ((s, dir) =>
       graft.ops.EventOps.stationaryDistribution(
-        s.read.parquet(s"$dir/events.parquet"), iters = 10)),
+        Registrar.table(s, dir, "events"), iters = 10)),
 
     // water-filling token allocation: 60% budget spread max-min-fair
     // across sources under availability caps — the constrained mixture
     // plan beside x77/x185
     "x471_waterfill" -> ((s, dir) =>
       Sampling.waterfillAllocation(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("source"),
+        Registrar.table(s, dir, "documents"), F.col("source"),
         F.size(F.split(F.trim(F.col("text")), "\\s+")),
         budgetFrac = 0.6)),
 
@@ -4180,33 +4197,33 @@ object SparkEntry {
     // threshold dedup/ANN policy
     "x470_anisotropy" -> ((s, dir) =>
       Similarity.anisotropyCensus(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id",
+        Registrar.table(s, dir, "embeddings"), "vec_id",
         "embedding")),
 
     // interpolated trigram LM (Jelinek-Mercer, pinned 0.6/0.3/0.1)
     // cross-entropy per source — the n=3 sibling of x78's KN bigram
     "x469_trigram_interp" -> ((s, dir) =>
-      TextOps.trigramInterp(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.trigramInterp(Registrar.table(s, dir, "documents"),
         "doc_id", "source", "text")),
 
     // coverage curve vs vocab size (V = 4, 8, 16, 24): the knee of
     // this curve is the tokenizer-budget decision (x464's V-sweep)
     "x468_coverage_curve" -> ((s, dir) =>
-      TextOps.coverageCurve(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.coverageCurve(Registrar.table(s, dir, "documents"),
         "text", Seq(4, 8, 16, 24))),
 
     // upper-tail VaR95 + CVaR (expected shortfall) of event value per
     // type — the spend-risk readout the mean hides; distinct-value
     // ladder, ties stay in the tail together
     "x467_cvar_tail" -> ((s, dir) =>
-      graft.ops.Stats.cvarTail(s.read.parquet(s"$dir/events.parquet"),
+      graft.ops.Stats.cvarTail(Registrar.table(s, dir, "events"),
         Seq("event_type"), F.col("value"), alpha = 0.95)),
 
     // coarsened exact matching + ATT: did signup-takers spend more,
     // matched on coarsened activity (event-count, active-day buckets)?
     // The non-randomized causal readout beside x238 DiD / x197 CUPED
     "x466_cem_att" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val per = ev.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") === "signup", 1).otherwise(0))
           .as("t"),
@@ -4237,7 +4254,7 @@ object SparkEntry {
       val sigCols = OracleAB.zipWithIndex.map { case ((a, b), j) =>
         F.array_min(F.transform(F.col("hs"),
           h => (h * a + b) % OracleP)).as(s"s$j") }
-      val sigs = s.read.parquet(s"$dir/documents.parquet")
+      val sigs = Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 10 === 0)
         .select(F.col("doc_id"), hs.as("hs"))
         .select(F.col("doc_id") +: sigCols: _*)
@@ -4288,14 +4305,14 @@ object SparkEntry {
     // vocab — occurrence coverage + OOV type rate, the tokenizer-
     // sizing readout beside x82 growth / x153 fertility
     "x464_vocab_coverage" -> ((s, dir) =>
-      TextOps.vocabCoverage(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.vocabCoverage(Registrar.table(s, dir, "documents"),
         "source", "text", vocabSize = 16)),
 
     // bottom-32 containment estimate vs exact truth on the x143 pair
     // list — the estimator-error distribution that decides whether
     // sketches can replace exact shingle sets at a given threshold
     "x463_bottomk_contain" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val ids = docs.select("doc_id")
       val pairs = ids.select(F.col("doc_id").as("a"),
           (F.col("doc_id") + 1).as("b"))
@@ -4309,7 +4326,7 @@ object SparkEntry {
     // mean length / token count — one pass, total-minus-group algebra
     "x462_source_ablation" -> ((s, dir) =>
       graft.ops.Curation.leaveOneOutMeans(
-        s.read.parquet(s"$dir/documents.parquet"), "source",
+        Registrar.table(s, dir, "documents"), "source",
         Seq("n_chars" -> F.col("n_chars"),
           "n_tokens" -> F.size(F.split(F.trim(F.col("text")),
             "\\s+")).cast("long")))),
@@ -4319,7 +4336,7 @@ object SparkEntry {
     // changepoint; DECIMAL running sums, exact alarm-day replay
     "x461_page_hinkley" -> ((s, dir) =>
       graft.ops.EventOps.pageHinkley(
-        s.read.parquet(s"$dir/events.parquet"),
+        Registrar.table(s, dir, "events"),
         delta = 0.0, lambda = 50.0)),
 
     // alignment & uniformity (Wang & Isola 2020): same-label
@@ -4327,7 +4344,7 @@ object SparkEntry {
     // contrastive-space health readout
     "x460_align_uniform" -> ((s, dir) =>
       Similarity.alignmentUniformity(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id",
+        Registrar.table(s, dir, "embeddings"), "vec_id",
         "embedding", "label")),
 
     // Sinkhorn entropic OT between the en and zh length histograms on
@@ -4335,14 +4352,14 @@ object SparkEntry {
     // x206 PSI / x350 JS; 12 scaling rounds, all (cells²)-bounded
     "x459_sinkhorn" -> ((s, dir) =>
       graft.ops.Stats.sinkhorn(
-        s.read.parquet(s"$dir/documents.parquet"), "n_chars",
+        Registrar.table(s, dir, "documents"), "n_chars",
         F.col("lang") === "en", F.col("lang") === "zh",
         lo = 0L, hi = 800L, grid = 50L, reg = 2.0, iters = 12)),
 
     // B-cubed precision/recall/F1 of the langId partition vs the gold
     // lang labels — the ER/coreference companion to x310's ARI/NMI
     "x458_bcubed" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       graft.ops.Stats.bcubed(d, TextOps.langId(F.col("text")),
         F.col("lang"))
     }),
@@ -4351,7 +4368,7 @@ object SparkEntry {
     // the logged event feed — planted deterministic propensity
     // p = 0.2 + 0.6·u(md5 event_id), the logged-propensity stand-in
     "x457_ips_offpolicy" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val u = (F.conv(F.substring(F.md5(F.concat(F.lit("ips|"),
         F.col("event_id").cast("string"))), 1, 6), 16, 10)
         .cast("long").cast("double") + F.lit(0.5)) / F.lit(16777216.0)
@@ -4365,7 +4382,7 @@ object SparkEntry {
     // Gumbel-max draws (md5), true grid quantiles ride for the audit
     "x456_dp_quantile" -> ((s, dir) =>
       graft.ops.Curation.dpQuantileExp(
-        s.read.parquet(s"$dir/documents.parquet"), "n_chars",
+        Registrar.table(s, dir, "documents"), "n_chars",
         Seq(0.25, 0.5, 0.75, 0.9), lo = 0L, hi = 800L, grid = 25L,
         epsilon = 1.0)),
 
@@ -4373,7 +4390,7 @@ object SparkEntry {
     // earn their keep for a 3-NN classifier on 8 held-out test points;
     // the suffix recurrence runs as a DECIMAL window sum, never a loop
     "x455_knn_shapley" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.knnShapley(emb, emb.filter(F.col("vec_id") < 8),
         "vec_id", "embedding", "label", k = 3, topN = 20)
     }),
@@ -4399,7 +4416,7 @@ object SparkEntry {
         F.when(F.col("doc_id") % 6 === 0, F.lit("#sec-2"))
           .otherwise(F.lit("")))
       graft.ops.Curation.urlDedupCensus(
-        s.read.parquet(s"$dir/documents.parquet").select(url.as("url")),
+        Registrar.table(s, dir, "documents").select(url.as("url")),
         "url")
     }),
 
@@ -4407,9 +4424,9 @@ object SparkEntry {
     // concentrated on 4 md5-chosen seed customers -- rank = proximity
     // to the seeds, the graph-expansion primitive of seed-set curation
     "x452_ppr" -> ((s, dir) => {
-      val e = s.read.parquet(s"$dir/orders.parquet")
+      val e = Registrar.table(s, dir, "orders")
         .select("o_orderkey", "o_custkey")
-        .join(s.read.parquet(s"$dir/lineitem.parquet")
+        .join(Registrar.table(s, dir, "lineitem")
             .select("l_orderkey", "l_suppkey"),
           F.col("o_orderkey") === F.col("l_orderkey"))
         .select(F.col("o_custkey").as("src"),
@@ -4424,7 +4441,7 @@ object SparkEntry {
     // plant that drags plain OLS; md5-ranked pivot pairs, broadcast
     // model table, one inlier-count pass
     "x451_ransac" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
         .select(F.col("n_chars"),
           (TextOps.tokenCount(F.col("text")) +
             F.when(F.col("doc_id") % 17 === 0, 500L).otherwise(0L))
@@ -4439,7 +4456,7 @@ object SparkEntry {
     // O(n*d^2), never the n x n Gram matrix
     "x450_cka_quant" -> ((s, dir) => {
       val q = graft.ops.Similarity.quantize(
-        s.read.parquet(s"$dir/embeddings.parquet"), "embedding")
+        Registrar.table(s, dir, "embeddings"), "embedding")
         .withColumn("recon",
           F.transform(F.col("q"), c => c.cast("double") * F.col("scale")))
       graft.ops.Similarity.linearCka(q, F.col("embedding"),
@@ -4450,7 +4467,7 @@ object SparkEntry {
     // centered 7-row MA trend + centered day-of-week seasonal offsets +
     // remainder — the profile readout behind x140's anomaly z-scores
     "x449_decompose" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(F.col("event_type"),
           F.to_date(graft.ops.EventOps.tsStamp(ev)).as("day"))
         .agg(F.count(F.lit(1)).as("n"))
@@ -4463,7 +4480,7 @@ object SparkEntry {
     // level + trend states folded exactly over a 16-day lookback — the
     // forecast column x122's trendless EWMA lags on every ramp
     "x448_holt_trend" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(F.col("event_type"),
           F.to_date(graft.ops.EventOps.tsStamp(ev)).as("day"))
         .agg(F.count(F.lit(1)).as("n"))
@@ -4481,7 +4498,7 @@ object SparkEntry {
     // census plumbing is pinned by the x442 surrogate twin, the codec by
     // OpsSpec replay.
     "x441_compress_census" -> ((s, dir) => {
-      val planted = s.read.parquet(s"$dir/documents.parquet")
+      val planted = Registrar.table(s, dir, "documents")
         .withColumn("text", F.when(F.col("doc_id") % 9 === 0,
             F.concat(F.col("text"), F.repeat(
               F.lit(" the same boilerplate navigation block here"), 60)))
@@ -4497,7 +4514,7 @@ object SparkEntry {
     // stripped -> ratio 1.0 -> incompressible, =2 emptied -> n_empty.
     "x442_compress_census_fixed" -> ((s, dir) => {
       val m = F.col("doc_id") % 7
-      val planted = s.read.parquet(s"$dir/documents.parquet")
+      val planted = Registrar.table(s, dir, "documents")
         .withColumn("text",
           F.when(m === 0, F.concat(F.col("text"),
               F.repeat(F.lit(" "), 2000)))
@@ -4514,7 +4531,7 @@ object SparkEntry {
     // census as directed weighted edges): does flow bounce back
     // (browse<->search) or funnel one-way — min(w_uv, w_vu) mass share
     "x428_reciprocity" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val byUser = Window.partitionBy("user_id")
         .orderBy(graft.ops.EventOps.tsUs(ev).asc, F.col("event_id").asc)
       val cells = ev
@@ -4531,7 +4548,7 @@ object SparkEntry {
     // intensity (geometric mean of normalized weights) per node — the
     // strong-tie/weak-tie structure plain lcc discards
     "x427_weighted_clustering" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.weightedClustering(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst", "w")
@@ -4541,7 +4558,7 @@ object SparkEntry {
     // gram clipped P/R means, beta=2 harmonic — the tokenization-robust
     // third of the MT-metric triple (x424 ROUGE, x425 BLEU)
     "x426_chrf_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val ids = docs.select("doc_id")
       val pairs = ids.select(F.col("doc_id").as("a"),
           (F.col("doc_id") + 1).as("b"))
@@ -4556,15 +4573,15 @@ object SparkEntry {
     // contract check before any fact-dim join is trusted
     "x421_ref_integrity" -> ((s, dir) =>
       graft.ops.Quality.referentialIntegrity(
-        s.read.parquet(s"$dir/events.parquet"), "user_id",
-        s.read.parquet(s"$dir/customer.parquet"), "c_custkey")),
+        Registrar.table(s, dir, "events"), "user_id",
+        Registrar.table(s, dir, "customer"), "c_custkey")),
 
     // key-uniqueness census of the CLAIMED key (user_id, event_type)
     // over events: how badly "keyed by" fails and the worst offender's
     // multiplicity — what every downstream join on that key multiplies by
     "x422_key_uniqueness" -> ((s, dir) =>
       graft.ops.Quality.keyUniqueness(
-        s.read.parquet(s"$dir/events.parquet"),
+        Registrar.table(s, dir, "events"),
         Seq("user_id", "event_type"))),
 
     // one-pass column profile of orders (string/int/date columns — fp
@@ -4573,7 +4590,7 @@ object SparkEntry {
     // baseline
     "x423_column_profile" -> ((s, dir) =>
       graft.ops.Quality.columnProfile(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         Seq("o_custkey", "o_orderpriority", "o_orderdate"))),
 
     // exact media dedup census (NOT a stub): content-hash identical-
@@ -4581,7 +4598,7 @@ object SparkEntry {
     // bytes_saved_share; md5 kind routing (the x114 twin convention) so
     // DuckDB replays the synthesis
     "x420_media_dedup" -> ((s, dir) => {
-      val md = s.read.parquet(s"$dir/documents.parquet").select(
+      val md = Registrar.table(s, dir, "documents").select(
         F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
           (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 7), 16, 10)
             .cast("long") % 3 + 1).cast("int")).as("kind"),
@@ -4594,7 +4611,7 @@ object SparkEntry {
     // edge FILTER x415's support census motivates; a k-core keeps a
     // star hub, a k-truss never does
     "x419_ktruss" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.kTruss(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst", k = 4, rounds = 3)
@@ -4604,8 +4621,8 @@ object SparkEntry {
     // supplier co-purchase graph: is "group by nation" real structure
     // or just a label
     "x416_partition_quality" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val sup = s.read.parquet(s"$dir/supplier.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
+      val sup = Registrar.table(s, dir, "supplier")
       graft.ops.Graph.partitionQuality(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst",
@@ -4618,7 +4635,7 @@ object SparkEntry {
     // recurrent-event curve — x171's KM asks "when is the FIRST",
     // this "how many, cumulatively"
     "x414_mcf" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val p = ev.filter(F.col("event_type") === "purchase")
       graft.ops.Stats.meanCumulativeFunction(p, F.col("user_id"),
         F.datediff(F.to_date(graft.ops.EventOps.tsStamp(p)),
@@ -4628,7 +4645,7 @@ object SparkEntry {
     // zero-inflation score test on per-user-day purchase counts over
     // the dense user x day grid: excess silent days the mean hides
     "x411_zero_inflation" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val day = F.to_date(graft.ops.EventOps.tsStamp(ev))
       val users = ev.select(F.col("user_id")).distinct()
       val days = ev.select(day.as("__day")).distinct()
@@ -4646,13 +4663,13 @@ object SparkEntry {
     // exponential cannot distinguish
     "x374_weibull_fit" -> ((s, dir) =>
       graft.ops.Stats.weibullFit(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("n_chars"))),
+        Registrar.table(s, dir, "documents"), F.col("n_chars"))),
 
     // one-sample CvM of the x178 scores against Uniform(0,1): the PIT
     // shape check next to x367's mean-level calibration z
     "x375_cvm_uniform" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.cvmUniform(scored, F.col("quality_score"))
     }),
@@ -4661,7 +4678,7 @@ object SparkEntry {
     // capacity-planning curve behind x267's tail index
     "x376_mean_residual_life" -> ((s, dir) =>
       graft.ops.Stats.meanResidualLife(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("n_chars"),
+        Registrar.table(s, dir, "documents"), F.col("n_chars"),
         thresholds = Seq(50L, 100L, 200L, 300L, 400L, 500L))),
 
     // Lorenz asymmetry of document lengths: does the length
@@ -4669,13 +4686,13 @@ object SparkEntry {
     // that x128's Gini cannot say
     "x372_lorenz_asym" -> ((s, dir) =>
       graft.ops.Stats.lorenzAsymmetry(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("n_chars"))),
+        Registrar.table(s, dir, "documents"), F.col("n_chars"))),
 
     // Gwet's AC1 on the x191 rater pair: the prevalence-robust
     // agreement read next to kappa — a gap flags skewed labels
     "x373_gwet_ac1" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.gwetAc1(scored,
         F.col("quality_score") >= 0.5, F.col("lang") === "en")
@@ -4684,7 +4701,7 @@ object SparkEntry {
     // seasonal Mann-Kendall on daily volume with the weekly cycle
     // removed exactly (Mondays vs Mondays) — the trend x284 under-powers
     "x369_seasonal_mk" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -4696,7 +4713,7 @@ object SparkEntry {
     // VIF multicollinearity audit over three length covariates: can a
     // regression attribute effects between them at all
     "x370_vif" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val toks = F.size(F.filter(
         F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
           "\\s+"), x => F.length(x) > 0))
@@ -4710,7 +4727,7 @@ object SparkEntry {
     // per-event-type Mann-Kendall trend census: WHICH streams drift,
     // each with its own tie-corrected z
     "x371_trend_census" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val byTypeDay = ev.groupBy(F.col("event_type"),
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -4723,7 +4740,7 @@ object SparkEntry {
     // Youden-J and F1 optimal thresholds off the exact (TP, FP) ladder
     "x366_threshold_sweep" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.thresholdSweep(scored, F.col("quality_score"),
         F.col("lang") === "en")
@@ -4733,7 +4750,7 @@ object SparkEntry {
     // x177's ECE and x287's Hosmer-Lemeshow
     "x367_spiegelhalter" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.spiegelhalterZ(scored, F.col("quality_score"),
         F.col("lang") === "en")
@@ -4742,7 +4759,7 @@ object SparkEntry {
     // distance correlation between doc length and token count on a
     // 1-in-10 sample: dependence of ANY shape, not just linear
     "x368_distance_corr" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 10 === 0)
       val toks = F.size(F.filter(
         F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
@@ -4755,19 +4772,19 @@ object SparkEntry {
     // diversity — N2 << N1 flags a tiny working set under a long tail
     "x363_simpson_diversity" -> ((s, dir) =>
       TextOps.simpsonDiversity(
-        s.read.parquet(s"$dir/documents.parquet"), Seq("source"),
+        Registrar.table(s, dir, "documents"), Seq("source"),
         "text")),
 
     // gap memory M per event type: do long gaps follow long gaps —
     // the (B, M) plane's second axis next to x347
     "x364_gap_memory" -> ((s, dir) =>
       graft.ops.EventOps.gapMemory(
-        s.read.parquet(s"$dir/events.parquet"))),
+        Registrar.table(s, dir, "events"))),
 
     // McLeod-Li portmanteau on squared daily deviations: volatility
     // clustering the x280 level test cannot see
     "x365_mcleod_li" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -4778,7 +4795,7 @@ object SparkEntry {
     // label purity per SemDeDup cell: does geometry agree with the
     // label — the supervised read next to x312's DB/CH indices
     "x360_cell_purity" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.cellPurity(emb, "vec_id", "embedding",
         F.col("label"), SemCentroids)
     }),
@@ -4787,14 +4804,14 @@ object SparkEntry {
     // boundaries — the stability read purity alone hides
     "x361_centroid_margin" -> ((s, dir) =>
       Similarity.centroidMargin(
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        Registrar.table(s, dir, "embeddings"),
         "vec_id", "embedding", SemCentroids, ambiguous = 1.2)),
 
     // nearest-centroid-classifier confusion: can one centroid per
     // label separate the classes — the corpus-level embedding verdict
     "x362_ncc_confusion" -> ((s, dir) =>
       Similarity.nccConfusion(
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        Registrar.table(s, dir, "embeddings"),
         "vec_id", "embedding", F.col("label"))),
 
     // simplified silhouette per SemDeDup cell: bounded sign-coded
@@ -4802,27 +4819,27 @@ object SparkEntry {
     // raw ratio only hints at
     "x382_silhouette" -> ((s, dir) =>
       Similarity.simplifiedSilhouette(
-        s.read.parquet(s"$dir/embeddings.parquet"), "embedding",
+        Registrar.table(s, dir, "embeddings"), "embedding",
         SemCentroids)),
 
     // Davies-Bouldin: each cell's worst spread-to-separation ratio —
     // the geometry-only overlap verdict next to x360's label purity
     "x383_davies_bouldin" -> ((s, dir) =>
       Similarity.daviesBouldin(
-        s.read.parquet(s"$dir/embeddings.parquet"), "embedding",
+        Registrar.table(s, dir, "embeddings"), "embedding",
         SemCentroids)),
 
     // Xie-Beni: corpus inertia charged against the tightest centroid
     // pair — the one-number "should two cells merge" read
     "x384_xie_beni" -> ((s, dir) =>
       Similarity.xieBeni(
-        s.read.parquet(s"$dir/embeddings.parquet"), "embedding",
+        Registrar.table(s, dir, "embeddings"), "embedding",
         SemCentroids)),
 
     // ordinal-pattern (permutation) entropy of hourly volume: ramp->0,
     // noise->1 — monotone-distortion-proof series complexity
     "x357_perm_entropy" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val hourly = ev.groupBy(
           F.floor(F.unix_timestamp(graft.ops.EventOps.tsStamp(ev)) / 3600)
             .cast("long").as("t"))
@@ -4833,7 +4850,7 @@ object SparkEntry {
     // Hjorth activity/mobility/complexity of hourly volume: the
     // three-number spectral summary next to x305's full periodogram
     "x358_hjorth" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val hourly = ev.groupBy(
           F.floor(F.unix_timestamp(graft.ops.EventOps.tsStamp(ev)) / 3600)
             .cast("long").as("t"))
@@ -4844,7 +4861,7 @@ object SparkEntry {
     // Poincare SD1/SD2 of successive hourly volumes: short-term jitter
     // vs long-term swing — the texture x347's burstiness scalar hides
     "x359_poincare" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val hourly = ev.groupBy(
           F.floor(F.unix_timestamp(graft.ops.EventOps.tsStamp(ev)) / 3600)
             .cast("long").as("t"))
@@ -4857,7 +4874,7 @@ object SparkEntry {
     // misses
     "x354_lof" -> ((s, dir) =>
       Similarity.lofOutliers(
-        s.read.parquet(s"$dir/embeddings.parquet")
+        Registrar.table(s, dir, "embeddings")
           .filter(F.col("vec_id") % 5 < 2),
         "vec_id", "embedding", k = 5, topN = 20)),
 
@@ -4865,20 +4882,20 @@ object SparkEntry {
     // histograms: the separability ceiling next to x324's CvM test
     "x355_bhattacharyya" -> ((s, dir) =>
       graft.ops.Stats.bhattacharyya(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("lang") === "en", nBins = 20)),
 
     // cluster-sampling design effect of per-event value under user
     // clustering: how many "effective" rows the correlation leaves
     "x356_design_effect" -> ((s, dir) =>
       graft.ops.Stats.designEffect(
-        s.read.parquet(s"$dir/events.parquet"),
+        Registrar.table(s, dir, "events"),
         F.col("user_id"), F.col("value"), scale = 100L)),
 
     // Gumbel fit + KS over daily peak-hour volume: how big can a peak
     // get — the extreme-value planning readout
     "x351_gumbel_fit" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val hourly = ev.groupBy(
           F.floor(F.unix_timestamp(t) / 3600).cast("long").as("h"))
@@ -4893,20 +4910,20 @@ object SparkEntry {
     // — the shape readout a single AUC hides
     "x352_woe_iv" -> ((s, dir) =>
       graft.ops.Stats.woeIv(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("lang") === "en", nBins = 10)),
 
     // Theil's U between source and lang: how much does knowing one
     // category remove of the other's entropy — directional, normalized
     "x353_uncertainty" -> ((s, dir) =>
       graft.ops.Stats.uncertaintyCoeff(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("source"), F.col("lang"))),
 
     // kernel-free energy distance between the label-0 and label-1
     // vector sets: the bandwidth-free sibling of x211's MMD
     "x348_energy_dist" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.energyDistance(emb.filter(F.col("label") === 0),
         emb.filter(F.col("label") === 1), "vec_id", "embedding")
     }),
@@ -4914,7 +4931,7 @@ object SparkEntry {
     // near-zero-variance feature screen over the orders columns: the
     // caret gate that catches constant/quasi-constant features
     "x349_nzv_screen" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = Registrar.table(s, dir, "orders")
       graft.ops.Stats.nzvScreen(o, Seq(
         "o_orderstatus" -> F.col("o_orderstatus"),
         "o_orderpriority" -> F.col("o_orderpriority"),
@@ -4926,12 +4943,12 @@ object SparkEntry {
     // distributions: x76's fixed pair widened to the corpus map
     "x350_js_matrix" -> ((s, dir) =>
       TextOps.jsDivergenceMatrix(
-        s.read.parquet(s"$dir/documents.parquet"), "source", "text")),
+        Registrar.table(s, dir, "documents"), "source", "text")),
 
     // Lo-MacKinlay variance ratio at q=5 on daily volume: do changes
     // compound (momentum) or cancel (reversion) — x334's ratio form
     "x345_variance_ratio" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -4942,7 +4959,7 @@ object SparkEntry {
     // Taylor's law across users: how per-user daily-count variance
     // scales with the mean — cross-sectional overdispersion growth
     "x346_taylor_law" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val ud = ev.groupBy(F.col("user_id"),
           F.to_date(graft.ops.EventOps.tsStamp(ev)).as("d"))
         .agg(F.count(F.lit(1)).as("cnt"))
@@ -4953,24 +4970,24 @@ object SparkEntry {
     // bursty — the temporal texture x12's volume flattens
     "x347_burstiness_events" -> ((s, dir) =>
       graft.ops.EventOps.interArrivalBurstiness(
-        s.read.parquet(s"$dir/events.parquet"))),
+        Registrar.table(s, dir, "events"))),
 
     // mean segmental TTR: length-fair lexical diversity per doc —
     // low MSTTR with normal x24 repetition flags template text
     "x342_msttr" -> ((s, dir) =>
-      TextOps.msttr(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.msttr(Registrar.table(s, dir, "documents"),
         "doc_id", "text", segment = 25)),
 
     // Dirichlet query-likelihood scores for the x75 query: the LM
     // ranking BM25 approximates, same per-doc tf machinery
     "x343_dirichlet_ql" -> ((s, dir) =>
-      TextOps.dirichletQL(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.dirichletQL(Registrar.table(s, dir, "documents"),
         "doc_id", "text", Seq("hash", "join", "spark"), mu = 50.0)),
 
     // Katz centrality on the x300 supplier graph: attenuated all-walks
     // influence — full-score endorsements vs pageRank's split mass
     "x344_katz" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.katzCentrality(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst",
@@ -4980,7 +4997,7 @@ object SparkEntry {
     // Rayleigh circular uniformity of activity around the clock: one
     // resultant vector over the 24 hour bins, preferred-hour readout
     "x339_rayleigh" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Stats.rayleighTest(ev,
         F.hour(graft.ops.EventOps.tsStamp(ev)), period = 24)
     }),
@@ -4989,13 +5006,13 @@ object SparkEntry {
     // furthest from the corpus in per-dim-sd units — dirty-encode screen
     "x340_mahalanobis" -> ((s, dir) =>
       Similarity.mahalanobisOutliers(
-        s.read.parquet(s"$dir/embeddings.parquet"),
+        Registrar.table(s, dir, "embeddings"),
         "vec_id", "embedding", topN = 20)),
 
     // Kuiper V on the same hour wheel: rotation-invariant two-sided
     // ECDF excursion — catches the bimodal days x339's resultant cancels
     "x341_kuiper" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Stats.kuiperUniform(ev,
         F.hour(graft.ops.EventOps.tsStamp(ev)), period = 24)
     }),
@@ -5003,7 +5020,7 @@ object SparkEntry {
     // covariate balance of the en vs non-en "arms": |SMD| per length
     // covariate — the confounding check before any en-effect claim
     "x336_smd_balance" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val toks = F.size(F.filter(
         F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
           "\\s+"), x => F.length(x) > 0))
@@ -5014,7 +5031,7 @@ object SparkEntry {
     // Newcombe hybrid-score CI for the weekend-vs-weekday purchase-rate
     // DIFFERENCE — the interval behind x298's effect size
     "x337_newcombe" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Stats.newcombeDiffCi(ev,
         F.dayofweek(F.to_date(graft.ops.EventOps.tsStamp(ev)))
           .isin(1, 7),
@@ -5024,7 +5041,7 @@ object SparkEntry {
     // rake the long-doc subset (n_chars >= 300) back to corpus
     // (source x lang) margins: 5 IPF rounds, 9-dp weights
     "x338_ipf_raking" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       graft.ops.Stats.ipfRaking(docs.filter(F.col("n_chars") >= 300),
         docs, "source", "lang", rounds = 5)
     }),
@@ -5032,7 +5049,7 @@ object SparkEntry {
     // ERR cascade metric on the x181 ranking task: first hit paid like
     // MRR, later hits at diminishing (1/2)^c credit
     "x335_err" -> ((s, dir) => {
-      val agg = s.read.parquet(s"$dir/lineitem.parquet")
+      val agg = Registrar.table(s, dir, "lineitem")
         .groupBy(F.col("l_returnflag").as("q"), F.col("l_suppkey").as("item"))
         .agg(F.count(F.lit(1)).as("n"), F.sum("l_quantity").as("sq"))
       val wA = Window.partitionBy("q").orderBy(F.col("n").desc, F.col("item"))
@@ -5047,8 +5064,8 @@ object SparkEntry {
     // HITS on the customer-part bipartite graph: hub buyers vs
     // authority parts — roles degree alone cannot separate
     "x318_hits" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val o = Registrar.table(s, dir, "orders")
+      val li = Registrar.table(s, dir, "lineitem")
       val e = o.join(li, F.col("o_orderkey") === F.col("l_orderkey"))
         .select(F.col("o_custkey").as("u"), F.col("l_partkey").as("p"))
       graft.ops.Graph.hits(e, "u", "p", rounds = 2, topK = 20)
@@ -5057,7 +5074,7 @@ object SparkEntry {
     // SAX word of the daily series: the shape as a 8-symbol string —
     // joinable/groupable series fingerprints
     "x319_sax" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5068,7 +5085,7 @@ object SparkEntry {
     // matrix-profile discord: which week of the series resembles no
     // other week — the shape anomaly x302's point test can't see
     "x320_matrix_profile" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5079,7 +5096,7 @@ object SparkEntry {
     // trend/seasonal strength: how much of the daily series is line,
     // weekly cycle, or noise — the x305 peak quantified
     "x315_seasonal_strength" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5091,7 +5108,7 @@ object SparkEntry {
     // x178's ROC-AUC and x309's KS
     "x316_pr_auc" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.prAuc(scored, F.col("quality_score"),
         F.col("lang") === "en")
@@ -5100,7 +5117,7 @@ object SparkEntry {
     // cross-correlation profile: at which lag do clicks lead
     // purchases — the full lead-lag map x301 tests one point of
     "x317_ccf" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       def daily(tp: String) = ev
         .filter(F.col("event_type") === tp)
         .groupBy(F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
@@ -5113,7 +5130,7 @@ object SparkEntry {
     // internal cluster quality under the x58 centroids: inertia,
     // Davies-Bouldin, Calinski-Harabasz — no labels needed
     "x312_cluster_quality" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
         .select("vec_id", "embedding")
       Similarity.clusterQuality(emb, "vec_id", "embedding", SemCentroids)
@@ -5123,19 +5140,19 @@ object SparkEntry {
     // long-run — driver-solved power iteration on the bounded matrix
     "x313_stationary" -> ((s, dir) =>
       graft.ops.EventOps.stationaryDist(
-        s.read.parquet(s"$dir/events.parquet"), iters = 32)),
+        Registrar.table(s, dir, "events"), iters = 32)),
 
     // eta2/omega2/Cohen's f: HOW MUCH value variance event_type
     // explains — the effect-size readout x187's F only gates
     "x314_anova_effects" -> ((s, dir) =>
-      graft.ops.Stats.anovaEffects(s.read.parquet(s"$dir/events.parquet"),
+      graft.ops.Stats.anovaEffects(Registrar.table(s, dir, "events"),
         F.col("event_type"), F.col("value"), scale = 100L)),
 
     // KS separation of the x49 classifier score: the best single
     // threshold and its TPR-FPR gap, next to x178's integrated AUC
     "x309_ks_separation" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.ksSeparation(scored, F.col("quality_score"),
         F.col("lang") === "en")
@@ -5144,7 +5161,7 @@ object SparkEntry {
     // ARI + NMI: did the x09 language-ID partition find the real lang
     // structure — permutation-invariant where x283's accuracy is not
     "x310_ari_nmi" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       graft.ops.Stats.ariNmi(d, F.col("lang"),
         TextOps.langId(F.col("text")))
     }),
@@ -5153,13 +5170,13 @@ object SparkEntry {
     // terms co-occur (topic) or just share the frequency head
     "x311_umass_coherence" -> ((s, dir) =>
       TextOps.umassCoherence(
-        s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+        Registrar.table(s, dir, "documents"), "doc_id", "text",
         k = 10)),
 
     // periodogram: which cycle actually dominates the daily series —
     // the measured answer to x193/x294's assumed season=7
     "x305_periodogram" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5171,24 +5188,24 @@ object SparkEntry {
     // next action — perplexity as effective next-action count
     "x306_entropy_rate" -> ((s, dir) =>
       graft.ops.EventOps.entropyRate(
-        s.read.parquet(s"$dir/events.parquet"))),
+        Registrar.table(s, dir, "events"))),
 
     // decision-stump Gini gain: which single token best splits en vs
     // rest — the feature-selection primitive under x49's classifier
     "x307_stump_gain" -> ((s, dir) =>
-      TextOps.stumpGain(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.stumpGain(Registrar.table(s, dir, "documents"),
         F.col("lang") === "en", "doc_id", "text", minDf = 5, topK = 30)),
 
     // Cochran's C: WHICH event type owns the value variance — the
     // pointed follow-up to x303's rejected homogeneity
     "x308_cochran_c" -> ((s, dir) =>
-      graft.ops.Stats.cochranC(s.read.parquet(s"$dir/events.parquet"),
+      graft.ops.Stats.cochranC(Registrar.table(s, dir, "events"),
         F.col("event_type"), F.col("value"), scale = 100L)),
 
     // Granger lag-1: do yesterday's clicks predict today's purchases
     // beyond purchase history — predictive precedence on the day grid
     "x301_granger" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       def daily(tp: String) = ev
         .filter(F.col("event_type") === tp)
         .groupBy(F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
@@ -5201,7 +5218,7 @@ object SparkEntry {
     // Grubbs: the single most aberrant day of the event series — the
     // parametric sibling of x103's MAD screen
     "x302_grubbs" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5213,26 +5230,26 @@ object SparkEntry {
     // exact sufficient stats) — the parametric gate before x187-style
     // pooled ANOVA
     "x303_bartlett" -> ((s, dir) =>
-      graft.ops.Stats.bartlett(s.read.parquet(s"$dir/events.parquet"),
+      graft.ops.Stats.bartlett(Registrar.table(s, dir, "events"),
         F.col("event_type"), F.col("value"), scale = 100L)),
 
     // Welch ANOVA: do mean event values differ across types WITHOUT
     // assuming the equal variances x303 just tested
     "x304_welch_anova" -> ((s, dir) =>
-      graft.ops.Stats.welchAnova(s.read.parquet(s"$dir/events.parquet"),
+      graft.ops.Stats.welchAnova(Registrar.table(s, dir, "events"),
         F.col("event_type"), F.col("value"), scale = 100L)),
 
     // Ansari-Bradley: does en doc LENGTH SPREAD differ from non-en —
     // the rank-based scale sibling of x175's location test
     "x297_ansari_bradley" -> ((s, dir) =>
       graft.ops.Stats.ansariBradley(
-        s.read.parquet(s"$dir/documents.parquet"),
+        Registrar.table(s, dir, "documents"),
         F.col("n_chars"), F.col("lang") === "en")),
 
     // Cohen's h: HOW different is the weekend purchase share from the
     // weekday one — effect size next to x291's significance
     "x298_cohens_h" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Stats.cohensH(ev,
         F.dayofweek(F.to_date(graft.ops.EventOps.tsStamp(ev)))
           .isin(1, 7),
@@ -5243,12 +5260,12 @@ object SparkEntry {
     // character mass hoarded by a few docs — decomposable Gini sibling
     "x299_inequality" -> ((s, dir) =>
       graft.ops.Stats.inequality(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("n_chars"))),
+        Registrar.table(s, dir, "documents"), F.col("n_chars"))),
 
     // local clustering census over the x104 co-purchase graph: whose
     // neighborhood is a clique, plus the global transitivity
     "x300_clustering" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.localClustering(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst")
@@ -5257,7 +5274,7 @@ object SparkEntry {
     // MAP over the x181 ranking task: order-sensitive retrieval score
     // between MRR (first hit) and NDCG (graded gain)
     "x293_map_eval" -> ((s, dir) => {
-      val agg = s.read.parquet(s"$dir/lineitem.parquet")
+      val agg = Registrar.table(s, dir, "lineitem")
         .groupBy(F.col("l_returnflag").as("q"),
           F.col("l_suppkey").as("item"))
         .agg(F.count(F.lit(1)).as("n"), F.sum("l_quantity").as("sq"))
@@ -5275,7 +5292,7 @@ object SparkEntry {
     // MASE of the x193 seasonal-naive forecast: does weekly seasonality
     // beat the one-step naive, scale-free
     "x294_mase" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5286,18 +5303,18 @@ object SparkEntry {
     // Yule's K + Honore's R: curve-free repetitiveness constants next
     // to the x222 Heaps fit — template/boilerplate drift alarm
     "x295_yules_k" -> ((s, dir) =>
-      TextOps.yulesK(s.read.parquet(s"$dir/documents.parquet"), "text")),
+      TextOps.yulesK(Registrar.table(s, dir, "documents"), "text")),
 
     // HHI of the document source mix: is the corpus a few sources in a
     // trench coat (eff_n = equivalent equal-share source count)
     "x296_hhi" -> ((s, dir) =>
       graft.ops.Stats.concentration(
-        s.read.parquet(s"$dir/documents.parquet"), F.col("source"))),
+        Registrar.table(s, dir, "documents"), F.col("source"))),
 
     // Jarque-Bera: is the daily event-count distribution Gaussian
     // enough for the 3-sigma alerting the x140 seasonal-z assumes
     "x289_jarque_bera" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5308,7 +5325,7 @@ object SparkEntry {
     // Breusch-Pagan: does the x107 daily trend's residual variance
     // drift with t — are its OLS error bars trustworthy
     "x290_breusch_pagan" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5319,7 +5336,7 @@ object SparkEntry {
     // two-sample Poisson rate: weekend vs weekday events per active
     // day — the conditional-binomial z on four exact longs
     "x291_poisson_2rate" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val d = F.to_date(graft.ops.EventOps.tsStamp(ev))
       graft.ops.Stats.poissonTwoRate(ev,
         F.dayofweek(d).isin(1, 7), d)
@@ -5328,7 +5345,7 @@ object SparkEntry {
     // overdispersion census: which event types are burstier than
     // Poisson across their active days (VMR per type)
     "x292_overdispersion" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Stats.overdispersion(ev, F.col("event_type"),
         F.to_date(graft.ops.EventOps.tsStamp(ev)))
     }),
@@ -5337,7 +5354,7 @@ object SparkEntry {
     // noise — chi2 over the same decile bins
     "x287_hosmer_lemeshow" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.hosmerLemeshow(scored, F.col("quality_score"),
         F.col("lang") === "en", nBins = 10)
@@ -5346,7 +5363,7 @@ object SparkEntry {
     // OLS influence census on the daily trend: which days drive the
     // fitted line — leverage, residual, Cook's D, the 4/n screen
     "x288_ols_influence" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5357,7 +5374,7 @@ object SparkEntry {
     // 1-bit sign quantization + Hamming candidate scan with exact-
     // cosine rerank: the 32x memory point of the compression ladder
     "x286_binary_hamming" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
       Similarity.binaryHammingSearch(emb,
           emb.filter(F.col("vec_id") < 5), "vec_id", "embedding",
@@ -5368,7 +5385,7 @@ object SparkEntry {
     // Mann-Kendall: is the daily event-count series monotonically
     // trending — the significance sibling of x188's Theil-Sen slope
     "x284_mann_kendall" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5379,7 +5396,7 @@ object SparkEntry {
     // Chow test: did the daily-count trend line break at the fixed
     // mid-window day 19738
     "x285_chow" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5391,7 +5408,7 @@ object SparkEntry {
     // per-class P/R/F1 census of the x09 language-ID against the
     // labeled lang — the classifier report for the heuristic
     "x283_prf_census" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       graft.ops.Stats.prfCensus(d, F.col("lang"),
         TextOps.langId(F.col("text")))
     }),
@@ -5400,7 +5417,7 @@ object SparkEntry {
     // better than chance WITH error bars, not just a point estimate
     "x282_delong_auc" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.delongAucCi(scored, F.col("quality_score"),
         F.col("lang") === "en")
@@ -5409,18 +5426,18 @@ object SparkEntry {
     // Moran's I: do co-purchased suppliers carry similar balances —
     // network autocorrelation of a node attribute
     "x281_morans_i" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.moransI(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst",
-        s.read.parquet(s"$dir/supplier.parquet"),
+        Registrar.table(s, dir, "supplier"),
         "s_suppkey", F.col("s_acctbal"))
     }),
 
     // exponential goodness-of-fit of pooled inter-event gaps — is the
     // traffic memoryless; exact two-sided KS steps at the MLE lambda
     "x266_exp_fit" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val seq2 = ev.select(F.col("user_id"),
         F.unix_timestamp(t).as("u"), F.col("event_id"))
@@ -5436,13 +5453,13 @@ object SparkEntry {
     // how heavy is the purchase-size tail
     "x267_hill" -> ((s, dir) =>
       graft.ops.Stats.hillTailIndex(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         F.col("o_totalprice"), k = 100)),
 
     // Stuart-Maxwell: did the 3-bucket event-type MIX drift between
     // consecutive events — marginal homogeneity, closed 2x2-inverse form
     "x263_stuart_maxwell" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val w = Window.partitionBy("user_id").orderBy(t, F.col("event_id"))
       val seq2 = ev.select(F.col("event_type"),
@@ -5458,7 +5475,7 @@ object SparkEntry {
     // exact sign test: are spaces more numerous than e's on the same
     // docs — BigInt binomial tails, no approximation
     "x264_sign_test" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val len = F.length(F.col("text"))
       def minus(ch: String) =
         len - F.length(F.regexp_replace(F.col("text"), ch, ""))
@@ -5468,7 +5485,7 @@ object SparkEntry {
     // exact McNemar on the x233 detector pair — valid at small
     // discordant counts where the chi2 form misleads
     "x265_mcnemar_exact" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val truth = F.col("lang") === "en"
       graft.ops.Stats.mcnemarExact(d,
         F.col("text").contains(" the ") === truth,
@@ -5479,14 +5496,14 @@ object SparkEntry {
     // distribution leak vs the corpus — TV distance per class
     "x262_tcloseness" -> ((s, dir) =>
       graft.ops.Curation.tClosenessAudit(
-        s.read.parquet(s"$dir/customer.parquet"),
+        Registrar.table(s, dir, "customer"),
         Seq("c_nationkey", "c_mktsegment"),
         F.floor(F.col("c_acctbal") / 1000), tMax = 0.3)),
 
     // Benjamini-Yekutieli over the x176 chi2 token table — FDR under
     // arbitrary dependence via the harmonic penalty
     "x258_by_fdr" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val grp = F.when(F.col("lang") === "en", "en")
         .when(F.col("lang") === "zh", "zh").otherwise("other")
       graft.ops.Stats.byFdr(
@@ -5498,7 +5515,7 @@ object SparkEntry {
     // concordant/discordant counts from the bounded grid
     "x259_ordinal_assoc" -> ((s, dir) =>
       graft.ops.Stats.ordinalAssociation(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         F.substring(F.col("o_orderpriority"), 1, 1).cast("long"),
         F.least(F.lit(5L),
           F.floor(F.col("o_totalprice") / 100000.0).cast("long") + 1L))),
@@ -5507,14 +5524,14 @@ object SparkEntry {
     // priority scores — exact integer moments
     "x260_cochran_armitage" -> ((s, dir) =>
       graft.ops.Stats.cochranArmitage(
-        s.read.parquet(s"$dir/orders.parquet"),
+        Registrar.table(s, dir, "orders"),
         F.substring(F.col("o_orderpriority"), 1, 1).cast("long"),
         F.col("o_orderstatus") === "F")),
 
     // Page's L: do the three length signals rise in the hypothesized
     // order (dots < e's < spaces) within each document
     "x261_page_l" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
       val len = F.length(F.col("text"))
       def minus(ch: String) =
         len - F.length(F.regexp_replace(F.col("text"), ch, ""))
@@ -5527,7 +5544,7 @@ object SparkEntry {
     // population from two independent fingerprint families (BoW md5 vs
     // normalized-prefix md5)
     "x257_capture_recapture" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       def pairsOf(keyCol: org.apache.spark.sql.Column) = {
         val keyed = docs.select(F.col("doc_id").as("id"), keyCol.as("fp"))
         keyed.as("x").join(keyed.as("y"),
@@ -5548,7 +5565,7 @@ object SparkEntry {
     // later event beats the one it displaced) — 3 MM rounds on the
     // type×type win matrix, 9-dp quantize-then-iterate
     "x241_bradley_terry" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val t = graft.ops.EventOps.tsStamp(ev)
       val w = Window.partitionBy("user_id").orderBy(t, F.col("event_id"))
       val seq2 = ev.select(F.col("user_id"), F.col("event_type"),
@@ -5562,7 +5579,7 @@ object SparkEntry {
     // always-valid mSPRT of the running click rate vs theta0=0.2 —
     // the peeking-proof experiment monitor, emitted every 500 events
     "x227_msprt" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       graft.ops.Stats.msprt(ev,
         graft.ops.EventOps.tsStamp(ev), F.col("event_id"),
         F.when(F.col("event_type") === "click", 1.0).otherwise(0.0),
@@ -5572,7 +5589,7 @@ object SparkEntry {
     // Theil-Sen robust trend of daily event volume: median pairwise
     // slope over the 30-point rollup — outlier days cannot move it
     "x188_theil_sen" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5584,7 +5601,7 @@ object SparkEntry {
     // the threshold-free separation readout
     "x178_auc" -> ((s, dir) => {
       val scored = TextOps.classifierScore(
-        s.read.parquet(s"$dir/documents.parquet"), "text", ClassifierW,
+        Registrar.table(s, dir, "documents"), "text", ClassifierW,
         bias = -0.1)
       graft.ops.Stats.aucExact(scored, F.col("quality_score"),
         F.col("lang") === "en")
@@ -5595,7 +5612,7 @@ object SparkEntry {
     // pair fan-out bounded by source count (the x110 argument), one
     // rounded division per cell
     "x165_ks_drift" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val grid = (0 to 600 by 50).map(_.toLong)
       val cdf = docs.groupBy("source")
         .agg((Seq(F.count(F.lit(1)).as("__n")) ++ grid.map(g =>
@@ -5621,7 +5638,7 @@ object SparkEntry {
     // dedup byte-savings report per source: how many chars the exact-dup
     // pass would remove — the capacity argument for running it
     "x163_dedup_savings" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
         .select(F.col("doc_id"), F.col("source"), F.col("n_chars"),
           F.md5(F.coalesce(F.col("text"), F.lit(""))).as("fp"))
       d.withColumn("first", F.min("doc_id").over(Window.partitionBy("fp")))
@@ -5641,7 +5658,7 @@ object SparkEntry {
     // corrPairs explode trick)
     "x164_gopher_ablation" -> ((s, dir) => {
       val g = TextOps.withGopherRules(
-        s.read.parquet(s"$dir/documents.parquet"), "text",
+        Registrar.table(s, dir, "documents"), "text",
         minTokens = 20, maxTokens = 80, minMeanTokLen = 3.0,
         maxMeanTokLen = 10.0, minStopHits = 2, maxDupBigramFrac = 0.2)
       val rules = Seq("r_ntok", "r_toklen", "r_stop", "r_rep")
@@ -5665,7 +5682,7 @@ object SparkEntry {
     // rank) — the robust center between winsorize and the median
     "x161_trimmed_mean" -> ((s, dir) =>
       graft.ops.Stats.trimmedMean(
-          s.read.parquet(s"$dir/events.parquet"),
+          Registrar.table(s, dir, "events"),
           Seq("event_type"), F.col("value"), F.col("event_id"), trim = 0.1)
         .orderBy("event_type")),
 
@@ -5674,7 +5691,7 @@ object SparkEntry {
     // on the same (user, session) partitioning
     "x162_entry_conversion" -> ((s, dir) => {
       val sess = graft.ops.EventOps.sessionize(
-        s.read.parquet(s"$dir/events.parquet"))
+        Registrar.table(s, dir, "events"))
       val us = graft.ops.EventOps.tsUs(sess)
       val part = Window.partitionBy("user_id", "session_seq")
       sess
@@ -5699,7 +5716,7 @@ object SparkEntry {
     // stubbed
     "x160_frame_dedup" -> ((s, dir) => {
       implicit val sp = s
-      val md = s.read.parquet(s"$dir/documents.parquet").select(
+      val md = Registrar.table(s, dir, "documents").select(
         F.col("doc_id"),
         F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
           (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 7), 16, 10)
@@ -5721,7 +5738,7 @@ object SparkEntry {
     // docs get a code-ish tail): symbol density + keyword hits + ident
     // count, one codegen projection — the code-subcorpus routing gate
     "x159_code_detect" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
         .withColumn("t2", F.when(F.col("doc_id") % 4 === 0,
           F.concat(F.col("text"), F.lit(
             " def compute_value(x): return x1 + myVar;} import os")))
@@ -5736,7 +5753,7 @@ object SparkEntry {
     // bounds as plan literals, shuffle-free clip) — summary row makes the
     // clipping itself the verified value
     "x156_winsorize" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Stats.winsorize(li, F.col("l_extendedprice"),
           F.col("l_orderkey") * 10 + F.col("l_linenumber"),
           pLo = 0.01, pHi = 0.99)
@@ -5753,7 +5770,7 @@ object SparkEntry {
     // stale touches credit 'direct'
     "x157_attribution" -> ((s, dir) =>
       graft.ops.EventOps.lastTouchAttribution(
-          s.read.parquet(s"$dir/events.parquet"), "purchase",
+          Registrar.table(s, dir, "events"), "purchase",
           windowUs = 21600000000L)
         .orderBy("touch_type")),
 
@@ -5761,7 +5778,7 @@ object SparkEntry {
     // projection — the prose-complexity quality gate
     "x158_readability" -> ((s, dir) =>
       TextOps.withReadability(
-          s.read.parquet(s"$dir/documents.parquet"), "text")
+          Registrar.table(s, dir, "documents"), "text")
         .select("doc_id", "n_words", "n_sentences", "n_syllables", "flesch")
         .orderBy("doc_id")),
 
@@ -5769,7 +5786,7 @@ object SparkEntry {
     // and per BPE-ish piece from EXACT integer sums — the "how expensive
     // is this language for my tokenizer" readout behind vocab sizing
     "x153_fertility" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .select(F.col("lang"), F.col("n_chars"),
           TextOps.tokenCount(F.col("text")).as("ws"),
           TextOps.bpeishTokenCount(F.col("text")).as("bp"))
@@ -5788,7 +5805,7 @@ object SparkEntry {
     // already appeared on a smaller doc_id — the provenance-level dedup
     // report (which source is feeding me copies?)
     "x154_dup_rate" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
         .select(F.col("doc_id"), F.col("source"),
           F.md5(F.coalesce(F.col("text"), F.lit(""))).as("fp"))
       d.withColumn("first", F.min("doc_id").over(Window.partitionBy("fp")))
@@ -5805,7 +5822,7 @@ object SparkEntry {
     // gaps over the per-user (µs, event_id) order, p50/p90 by the integer
     // rank selection over one type-keyed window
     "x155_dwell_quantiles" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val us = graft.ops.EventOps.tsUs(ev)
       val byUser = Window.partitionBy("user_id")
         .orderBy(us.asc, F.col("event_id").asc)
@@ -5830,7 +5847,7 @@ object SparkEntry {
     // visible: assign orders to 8 workers, re-assign with w7 removed —
     // ONLY w7's keys move (a mod-N routing would move 7/8 of them)
     "x151_rendezvous" -> ((s, dir) => {
-      val ord = s.read.parquet(s"$dir/orders.parquet").select("o_orderkey")
+      val ord = Registrar.table(s, dir, "orders").select("o_orderkey")
       val shards = (0 until 8).map(i => s"w$i")
       val a8 = graft.ops.Scale.rendezvousAssign(ord, F.col("o_orderkey"), shards)
         .select(F.col("o_orderkey"), F.col("shard").as("s8"))
@@ -5849,14 +5866,14 @@ object SparkEntry {
     // total orders
     "x152_rfm" -> ((s, dir) =>
       graft.ops.EventOps.rfmScores(
-          s.read.parquet(s"$dir/events.parquet"))
+          Registrar.table(s, dir, "events"))
         .orderBy("user_id")),
 
     // language-ID confusion matrix vs declared labels: the classifier
     // audit for the x09 heuristic — per (declared, predicted) census +
     // per-declared-language share, windows over the tiny matrix
     "x149_lang_confusion" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Registrar.table(s, dir, "documents")
         .select(F.col("lang"), TextOps.langId(F.col("text")).as("pred"))
       d.groupBy("lang", "pred").agg(F.count(F.lit(1)).as("n"))
         .withColumn("share", F.round(F.col("n").cast("double") /
@@ -5869,7 +5886,7 @@ object SparkEntry {
     // the padding-waste readout on x33's packing
     "x150_packing_efficiency" -> ((s, dir) => {
       val packed = Curation.packSequences(
-        s.read.parquet(s"$dir/documents.parquet")
+        Registrar.table(s, dir, "documents")
           .withColumn("n_tokens", TextOps.tokenCount(F.col("text"))),
         "source", "doc_id", "n_tokens", maxTokens = 512)
       packed.groupBy("source", "bin")
@@ -5889,14 +5906,14 @@ object SparkEntry {
     // cross the id-keyed boundary by construction)
     "x146_split_leakage" -> ((s, dir) =>
       Curation.splitLeakage(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+          Registrar.table(s, dir, "documents"), "doc_id", "text",
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         .orderBy("split_a", "split_b")),
 
     // Zipf-exponent census per source over token frequencies: the
     // "natural text vs key-value spam" tail readout, grouped power-law MLE
     "x147_zipf_by_source" -> ((s, dir) => {
-      val deg = s.read.parquet(s"$dir/documents.parquet")
+      val deg = Registrar.table(s, dir, "documents")
         .select(F.col("source"), F.explode(F.filter(
           F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), "\\s+"),
           t => F.length(t) > 0)).as("t"))
@@ -5909,7 +5926,7 @@ object SparkEntry {
     // dedup report "how much of the corpus sits in clusters of size k" —
     // components → size census → size-of-sizes rollup
     "x148_cluster_sizes" -> ((s, dir) => {
-      val ids = s.read.parquet(s"$dir/documents.parquet").select("doc_id")
+      val ids = Registrar.table(s, dir, "documents").select("doc_id")
       val pairs = ids.select(F.col("doc_id").as("a"), (F.col("doc_id") + 1).as("b"))
         .filter(F.col("a") % 10 < 3)
         .join(ids.select(F.col("doc_id").as("b")), Seq("b"), "leftsemi")
@@ -5925,7 +5942,7 @@ object SparkEntry {
     // source even when Jaccard is low) — pair-list-bounded, both
     // directions + sizes
     "x143_containment" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val ids = docs.select("doc_id")
       val pairs = ids.select(F.col("doc_id").as("a"), (F.col("doc_id") + 1).as("b"))
         .filter(F.col("a") % 7 === 0)
@@ -5938,7 +5955,7 @@ object SparkEntry {
     // frontier chain plus one integer µs predicate per join
     "x144_funnel_within" -> ((s, dir) =>
       graft.ops.EventOps.funnelReachWithin(
-          s.read.parquet(s"$dir/events.parquet"),
+          Registrar.table(s, dir, "events"),
           Seq("view", "click", "purchase"), withinUs = 21600000000L)
         .orderBy("step")),
 
@@ -5946,7 +5963,7 @@ object SparkEntry {
     // suppliers co-occur with hubs? Symmetrized endpoint-degree Pearson,
     // exact integer sums
     "x145_assortativity" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Registrar.table(s, dir, "lineitem")
       graft.ops.Graph.degreeAssortativity(
         graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
           minCount = 6), "src", "dst")
@@ -5956,7 +5973,7 @@ object SparkEntry {
     // Pearson r at every lag in -3..3 from lag-shifted equi-joins of the
     // tiny per-day series, per-lag 1-row results in one job
     "x137_lead_lag" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Registrar.table(s, dir, "events")
       val daily = ev.groupBy(F.col("event_type"),
           F.datediff(F.to_date(graft.ops.EventOps.tsStamp(ev)),
             F.lit("1970-01-01").cast("date")).as("t"))
@@ -5973,7 +5990,7 @@ object SparkEntry {
     // (user, session) partitioning, |types|²-bounded census
     "x138_entry_exit" -> ((s, dir) =>
       graft.ops.EventOps.entryExitCensus(
-          s.read.parquet(s"$dir/events.parquet"))
+          Registrar.table(s, dir, "events"))
         .orderBy("entry_type", "exit_type")),
 
     // token burstiness (variance-to-mean ratio across docs, zeros folded
@@ -5981,7 +5998,7 @@ object SparkEntry {
     // vocabulary — vocab-bounded census, 1-row doc count broadcast
     "x139_burstiness" -> ((s, dir) =>
       TextOps.tokenBurstiness(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           "doc_id", "text", minDf = 5, topK = 50)),
 
     // corpus-wide keep-first line dedup (Lee et al. at line granularity):
@@ -5990,7 +6007,7 @@ object SparkEntry {
     // on the first mod-3 doc), a unique tail elsewhere; testdata's own
     // seeded exact-dup docs lose their body line to the earlier copy
     "x68_line_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val seeded = docs.select(F.col("doc_id"),
         F.concat(
           F.lit("Shared banner\n"),
@@ -6007,7 +6024,7 @@ object SparkEntry {
     // everything else ×1.0 (identity) — every factor regime in one entry
     "x60_upsample" -> ((s, dir) =>
       graft.ops.Sampling.upsampleByGroup(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           F.col("source"), F.col("text"),
           factors = Map("src0" -> 2.5, "src1" -> 0.4, "src2" -> 0.0),
           defaultFactor = 1.0)
@@ -6020,7 +6037,7 @@ object SparkEntry {
     // N >= 33) and a header on doc_id < 5 (df = 5 at every sf — kept).
     // Compared via md5 of the cleaned text, not the long string itself.
     "x39_strip_boilerplate" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val seeded = docs.withColumn("text", F.concat(
         F.when(F.col("doc_id") < 5, F.lit("rare header line\n")).otherwise(F.lit("")),
         F.col("text"),
@@ -6035,7 +6052,7 @@ object SparkEntry {
     // int8 scalar quantization of the embedding store (codes as CSV so the
     // hash compare is engine-neutral; scale/max_err are exact IEEE doubles)
     "x40_quantize" -> ((s, dir) =>
-      graft.ops.Similarity.quantize(s.read.parquet(s"$dir/embeddings.parquet"), "embedding")
+      graft.ops.Similarity.quantize(Registrar.table(s, dir, "embeddings"), "embedding")
         .select(F.col("vec_id"), F.col("scale"),
           F.concat_ws(",", F.transform(F.col("q"), _.cast("string"))).as("q_csv"),
           F.col("max_err"))
@@ -6043,25 +6060,25 @@ object SparkEntry {
 
     // deterministic train/val/test assignment by content hash
     "x41_split_assign" -> ((s, dir) =>
-      graft.ops.Sampling.splitAssign(s.read.parquet(s"$dir/documents.parquet"),
+      graft.ops.Sampling.splitAssign(Registrar.table(s, dir, "documents"),
           F.col("text"), Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         .select("doc_id", "split")
         .orderBy("doc_id")),
 
     // one-pass per-column profile of the documents table
     "x38_profile" -> ((s, dir) =>
-      graft.ops.Curation.profile(s.read.parquet(s"$dir/documents.parquet"))
+      graft.ops.Curation.profile(Registrar.table(s, dir, "documents"))
         .orderBy("col_name")),
 
     // top-5 TF-IDF terms per doc; rank on integer keys, never the float
     "x37_tfidf" -> ((s, dir) =>
-      TextOps.topTfidfTerms(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.topTfidfTerms(Registrar.table(s, dir, "documents"),
           "doc_id", "text", k = 5)
         .orderBy("doc_id", "rk")),
 
     // overlapping character windows (chunk 200, overlap 50 → step 150)
     "x36_chunk" -> ((s, dir) =>
-      TextOps.chunk(s.read.parquet(s"$dir/documents.parquet"), "text",
+      TextOps.chunk(Registrar.table(s, dir, "documents"), "text",
           chunkChars = 200, overlapChars = 50)
         .select(F.col("doc_id"), F.col("chunk_idx"), F.length(F.col("chunk")).as("chunk_len"))
         .orderBy("doc_id", "chunk_idx")),
@@ -6070,7 +6087,7 @@ object SparkEntry {
     // bin = tokens-before / 512
     "x33_pack_sequences" -> ((s, dir) =>
       graft.ops.Curation.packSequences(
-          s.read.parquet(s"$dir/documents.parquet")
+          Registrar.table(s, dir, "documents")
             .withColumn("n_tokens", TextOps.tokenCount(F.col("text"))),
           "source", "doc_id", "n_tokens", maxTokens = 512)
         .select("doc_id", "source", "n_tokens", "bin")
@@ -6079,7 +6096,7 @@ object SparkEntry {
     // per-source median gate: keep each source's upper half by n_chars
     "x34_group_quantile" -> ((s, dir) =>
       graft.ops.Curation.filterByGroupQuantile(
-          s.read.parquet(s"$dir/documents.parquet"), "source", "n_chars", q = 0.5)
+          Registrar.table(s, dir, "documents"), "source", "n_chars", q = 0.5)
         .select("doc_id", "source", "n_chars")
         .orderBy("doc_id")),
 
@@ -6089,7 +6106,7 @@ object SparkEntry {
     // reproduce — the duration/frame-count/timestamp logic is then exact
     "x32_frame_math" -> ((s, dir) => {
       implicit val sp = s
-      val media = s.read.parquet(s"$dir/documents.parquet").select(
+      val media = Registrar.table(s, dir, "documents").select(
         F.col("doc_id"),
         F.when(F.pmod(F.col("doc_id"), F.lit(3)) === 2, "video")
           .otherwise("image").as("kind"),
@@ -6103,14 +6120,14 @@ object SparkEntry {
     // nprobe=4 of 8 cells: measured recall 0.85 vs bruteKnn (OpsSpec pins
     // the floor at 0.80; round 2's nprobe=2 measured only 0.53)
     "x17_knn_ivf" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Registrar.table(s, dir, "embeddings")
       Similarity.ivfKnn(emb, emb.filter(F.col("vec_id") < 20), "vec_id", "embedding",
           k = 3, nlist = 8, nprobe = 4)
         .orderBy("query_id", "rk")
     }),
 
     "x16_winnow_pairs" -> ((s, dir) =>
-      Dedup.winnowPairs(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.winnowPairs(Registrar.table(s, dir, "documents"),
           "doc_id", "text", minShared = 5)
         .orderBy("a", "b")),
 
@@ -6122,7 +6139,7 @@ object SparkEntry {
     // sets exactly unless the hash collides (~N²/2⁶⁴ — absent here), so the
     // intersect/union ratio is the identical rational number in both engines.
     "x22_ngram_jaccard_fixed" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val ids = docs.select("doc_id")
       val pairs = ids.select(F.col("doc_id").as("a"), (F.col("doc_id") + 1).as("b"))
         .filter(F.col("a") % 7 === 0)
@@ -6135,7 +6152,7 @@ object SparkEntry {
     // edges (d,d+1) for d%10 in 0..2) — the pairs→clusters stage of the
     // dedup pipeline; DuckDB verifies via recursive-CTE reachability
     "x23_components" -> ((s, dir) => {
-      val ids = s.read.parquet(s"$dir/documents.parquet").select("doc_id")
+      val ids = Registrar.table(s, dir, "documents").select("doc_id")
       val pairs = ids.select(F.col("doc_id").as("a"), (F.col("doc_id") + 1).as("b"))
         .filter(F.col("a") % 10 < 3)
         .join(ids.select(F.col("doc_id").as("b")), Seq("b"), "leftsemi")
@@ -6145,7 +6162,7 @@ object SparkEntry {
     // pairs → components → drop non-representatives: the full "smaller
     // corpus" end of the dedup pipeline, on x23's deterministic pair graph
     "x35_dedup_by_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       val ids = docs.select("doc_id")
       val pairs = ids.select(F.col("doc_id").as("a"), (F.col("doc_id") + 1).as("b"))
         .filter(F.col("a") % 10 < 3)
@@ -6157,14 +6174,14 @@ object SparkEntry {
 
     // Gopher/C4-style within-document repetition signals
     "x24_repetition" -> ((s, dir) =>
-      TextOps.withRepetition(s.read.parquet(s"$dir/documents.parquet"), "text")
+      TextOps.withRepetition(Registrar.table(s, dir, "documents"), "text")
         .select("doc_id", "dup_line_fraction", "dup_bigram_fraction")
         .orderBy("doc_id")),
 
     // eval-set decontamination: 8-gram overlap vs the doc_id%50==0
     // "benchmark" slice (benchmark members flag themselves — expected)
     "x25_decontaminate" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Registrar.table(s, dir, "documents")
       Dedup.contamination(docs, docs.filter(F.col("doc_id") % 50 === 0),
           "doc_id", "text", shingleSize = 8, minShared = 5)
         .orderBy("doc_id")
@@ -6174,7 +6191,7 @@ object SparkEntry {
     // partitionings, and runs — unlike df.sample)
     "x26_hash_sample" -> ((s, dir) =>
       graft.ops.Sampling.hashSample(
-          s.read.parquet(s"$dir/documents.parquet"), F.col("text"), rate = 0.1)
+          Registrar.table(s, dir, "documents"), F.col("text"), rate = 0.1)
         .select("doc_id", "lang", "n_chars")
         .orderBy("doc_id")),
 
@@ -6182,7 +6199,7 @@ object SparkEntry {
     // per source — rank filter compiles to WindowGroupLimit
     "x27_cap_per_group" -> ((s, dir) =>
       graft.ops.Sampling.capPerGroup(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           F.col("source"), F.col("text"), maxPerGroup = 10,
           tieBreak = Seq(F.col("doc_id")))
         .select("doc_id", "source")
@@ -6192,7 +6209,7 @@ object SparkEntry {
     // hash (src0 all, src1 half, src2 quarter, rest 5%)
     "x28_mixture_sample" -> ((s, dir) =>
       graft.ops.Sampling.hashSampleByGroup(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           F.col("source"), F.col("text"),
           rates = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25),
           defaultRate = 0.05)
@@ -6202,13 +6219,13 @@ object SparkEntry {
     // per-label centroids + cosine-to-own-centroid outlier score
     "x29_centroid_scores" -> ((s, dir) =>
       Similarity.centroidScores(
-          s.read.parquet(s"$dir/embeddings.parquet"),
+          Registrar.table(s, dir, "embeddings"),
           "vec_id", "label", "embedding")
         .orderBy("vec_id")),
 
     // C4-style PII scrubbing: emails/URLs/long digit runs → placeholders
     "x30_redact" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Registrar.table(s, dir, "documents")
         .select(F.col("doc_id"), TextOps.redact(F.col("text")).as("redacted"))
         .orderBy("doc_id")),
 
@@ -6217,7 +6234,7 @@ object SparkEntry {
     // x01/x27); this entry proves the COMPOSITION is replayable
     "x31_curate" -> ((s, dir) =>
       graft.ops.Curation.curate(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Registrar.table(s, dir, "documents"),
           "doc_id", "text", "source",
           minTokens = 5, maxDupLineFrac = 0.9, sampleRate = 0.5, capPerSource = 8)
         .select("doc_id", "source", "n_chars")

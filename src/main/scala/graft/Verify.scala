@@ -12,10 +12,8 @@ object Verify {
     // local-iteration subset: SPARK_GRAFT_ONLY=x90,x91 dumps (and lists in
     // oracle_sql.json) just those entries so scripts/oracle_check.py can
     // gate one new operator without replaying the whole suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def wanted(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(q => wanted(q._1)).foreach { case (name, fn) =>
+    val selected = SparkEntry.selected()
+    selected.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         // the driver compare hashes pandas cells: an array/struct/map
@@ -49,7 +47,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(o => wanted(o._1))
+    val json = SparkEntry.oracleSql.filter(o => selected.contains(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -129,6 +129,15 @@ object Registrar {
       }.toMap
     })
 
+  /** One table of a testdata dir: the memoized [[loadParquetDir]] frame, so
+    * an entry's construction fires no schema-inference job. A table the dir
+    * does not hold (or a missing dir) fails naming what was found. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val tables = loadParquetDir(spark, dir)
+    tables.getOrElse(name, throw SourceError(
+      s"no table $name in $dir; found: ${tables.keys.toSeq.sorted.mkString("[", ", ", "]")}"))
+  }
+
   private val dirCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Map[String, DataFrame]]()
 }

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import graft.sources.Registrar
 
 /** Scale-stress for the bench's heavy hitters (VERDICT r2 next-round #1).
   *
@@ -58,6 +59,13 @@ object StressBench {
           F.lpad(F.col("c_custkey").cast("string"), 9, "0")))
     }.reduce(_ union _)
 
+  /** K disjoint copies of two key columns, copy i offset by i·KeyStride:
+    * a graph built from them has K disjoint components, so its nodes,
+    * edges and wedges all scale ×K. */
+  def replicateKeys(df: DataFrame, k: Int, a: String, b: String): DataFrame =
+    (0 until k).map(i => df.select((F.col(a) + F.lit(i * KeyStride)).as(a),
+      (F.col(b) + F.lit(i * KeyStride)).as(b))).reduce(_ union _)
+
   def replicateEmb(emb: DataFrame, k: Int): DataFrame =
     (0 until k).map { i =>
       emb.select(
@@ -77,8 +85,8 @@ object StressBench {
     spark.sparkContext.setLogLevel("WARN")
 
     import graft.ops.{Dedup, Similarity}
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val docs0 = Registrar.table(spark, sfDir, "documents")
+    val emb0 = Registrar.table(spark, sfDir, "embeddings")
     // JIT/codegen warm-up on the small paths
     Similarity.bruteKnn(emb0, emb0.limit(5), "vec_id", "embedding", k = 3)
       .write.format("noop").mode("overwrite").save()
@@ -89,7 +97,7 @@ object StressBench {
       val docs = replicateDocs(docs0, k).persist()
       val emb = replicateEmb(emb0, k).persist()
       val events = replicateEvents(
-        spark.read.parquet(s"$sfDir/events.parquet"), k).persist()
+        Registrar.table(spark, sfDir, "events"), k).persist()
       val nDocs = docs.count(); val nEmb = emb.count(); events.count()
       val queries: Seq[(String, () => DataFrame)] = Seq(
         "x16_winnow_pairs" -> (() => Dedup.winnowPairs(docs, "doc_id", "text", minShared = 5)),
@@ -248,12 +256,8 @@ object StressBench {
         // scale ×K; wall must stay ~linear through the two-shuffle census
         // + orientation machinery
         "x104_triangles" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_suppkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_suppkey") + F.lit(i * KeyStride)).as("l_suppkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_suppkey")
           graft.ops.Graph.triangleCounts(
             graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
               minCount = 6),
@@ -264,12 +268,8 @@ object StressBench {
         // anti-join are fully parallel keyed shuffles — wall must stay
         // ~linear (the x104 shape, one extra distinct)
         "x398_harmonic2" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_suppkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_suppkey") + F.lit(i * KeyStride)).as("l_suppkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_suppkey")
           graft.ops.Graph.harmonic2(
             graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey", "l_suppkey",
               minCount = 6),
@@ -295,12 +295,8 @@ object StressBench {
         // self-join this op replaced (VERDICT r13 #2) would have paid
         // 2000² = 4M hub wedge rows per run regardless of K
         "x415_edge_support" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_suppkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_suppkey") + F.lit(i * KeyStride)).as("l_suppkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_suppkey")
           val edges = graft.ops.Graph.cooccurrenceEdges(li,
             "l_orderkey", "l_suppkey", minCount = 6)
           val hub = spark.range(1, 2001).select(
@@ -316,12 +312,8 @@ object StressBench {
         // PRE-COMBINED map-side (partial max-merge) — wall must stay
         // ~linear in K with no single-reducer blowup at the hub
         "x444_neighborhood" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_suppkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_suppkey") + F.lit(i * KeyStride)).as("l_suppkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_suppkey")
           val und = graft.ops.Graph.cooccurrenceEdges(li,
             "l_orderkey", "l_suppkey", minCount = 6)
             .select("src", "dst")
@@ -339,12 +331,8 @@ object StressBench {
         // table against KxE edges — wall must stay ~linear in K, and
         // the hub collapses map-side in the min-merge like x444
         "x445_landmark_dist" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_suppkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_suppkey") + F.lit(i * KeyStride)).as("l_suppkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_suppkey")
           val und = graft.ops.Graph.cooccurrenceEdges(li,
             "l_orderkey", "l_suppkey", minCount = 6)
             .select("src", "dst")
@@ -427,12 +415,8 @@ object StressBench {
         // planted hub: the x415/x104 oriented-wedge ladder with weights
         // threaded through — the hub generates zero wedges, ~linear
         "x427_weighted_clust" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_suppkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_suppkey") + F.lit(i * KeyStride)).as("l_suppkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_suppkey")
           val edges = graft.ops.Graph.cooccurrenceEdges(li,
             "l_orderkey", "l_suppkey", minCount = 6)
           val hub = spark.range(1, 2001).select(
@@ -446,12 +430,8 @@ object StressBench {
         // SHRINKING edge set (the hub's star edges close no triangles
         // and die in round 1) — wall ~linear in K
         "x419_ktruss" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_suppkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_suppkey") + F.lit(i * KeyStride)).as("l_suppkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_suppkey")
           val edges = graft.ops.Graph.cooccurrenceEdges(li,
             "l_orderkey", "l_suppkey", minCount = 6)
           val hub = spark.range(1, 2001).select(
@@ -566,7 +546,7 @@ object StressBench {
         // 5 — grid rows grow ×K, per-group suffix windows carry ×K rows;
         // wall must stay ~linear
         "x252_jonckheere" -> (() => {
-          val o0 = spark.read.parquet(s"$sfDir/orders.parquet")
+          val o0 = Registrar.table(spark, sfDir, "orders")
             .select("o_orderkey", "o_orderpriority", "o_totalprice")
           val o = (0 until k).map(i => o0.select(
               (F.col("o_orderkey") + F.lit(i * KeyStride)).as("o_orderkey"),
@@ -582,7 +562,7 @@ object StressBench {
         // ×K rows; wall must stay ~linear (the documented scale knob for
         // a heavy corpus is a coarser `scale` quantization)
         "x272_ad_ksample" -> (() => {
-          val o0 = spark.read.parquet(s"$sfDir/orders.parquet")
+          val o0 = Registrar.table(spark, sfDir, "orders")
             .select("o_orderkey", "o_orderpriority", "o_totalprice")
           // +0.01·i = one CENT per replica: survives the op's ×100
           // quantization, so the distinct-value domain truly grows ×K
@@ -599,12 +579,8 @@ object StressBench {
         // disjoint-copies shape; wall must stay ~linear through the
         // distinct + 3 checkpointed peel rounds
         "x255_kcore" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_partkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_partkey") + F.lit(i * KeyStride)).as("l_partkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_partkey")
           val e = li.as("x").join(li.as("y"),
             F.col("x.l_orderkey") === F.col("y.l_orderkey") &&
               F.col("x.l_partkey") < F.col("y.l_partkey"))
@@ -619,7 +595,7 @@ object StressBench {
         // nation-only key would instead hit the maxBucket abort here.)
         "x228_jw_pairs" -> (() => {
           val cust = replicateCust(
-            spark.read.parquet(s"$sfDir/customer.parquet"), k)
+            Registrar.table(spark, sfDir, "customer"), k)
           graft.ops.Dedup.jaroWinklerPairs(cust, "c_custkey",
             F.col("c_name"), F.concat_ws("|", F.col("c_nationkey"),
               F.substring(F.col("c_name"), 1, 15)), minSim = 0.985)
@@ -629,29 +605,22 @@ object StressBench {
         // work one keyed join + rollup — wall must stay ~linear through
         // the 4 checkpointed half-rounds
         "x318_hits" -> (() => {
-          val o0 = spark.read.parquet(s"$sfDir/orders.parquet")
+          val o0 = Registrar.table(spark, sfDir, "orders")
             .select("o_orderkey", "o_custkey")
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
+          val li0 = Registrar.table(spark, sfDir, "lineitem")
             .select("l_orderkey", "l_partkey")
           val e0 = o0.join(li0,
               F.col("o_orderkey") === F.col("l_orderkey"))
             .select(F.col("o_custkey").as("u"), F.col("l_partkey").as("p"))
-          val e = (0 until k).map(i => e0.select(
-              (F.col("u") + F.lit(i * KeyStride)).as("u"),
-              (F.col("p") + F.lit(i * KeyStride)).as("p")))
-            .reduce(_ union _)
+          val e = replicateKeys(e0, k, "u", "p")
           graft.ops.Graph.hits(e, "u", "p", rounds = 2, topK = 20)
         }),
         // link prediction on K DISJOINT copies of the supplier
         // co-occurrence graph: wedges, candidate pairs and the degree
         // dims all ×K — wall must stay ~linear (the x104/x255 shape)
         "x330_linkpred" -> (() => {
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .select("l_orderkey", "l_suppkey")
-          val li = (0 until k).map(i => li0.select(
-              (F.col("l_orderkey") + F.lit(i * KeyStride)).as("l_orderkey"),
-              (F.col("l_suppkey") + F.lit(i * KeyStride)).as("l_suppkey")))
-            .reduce(_ union _)
+          val li = replicateKeys(Registrar.table(spark, sfDir, "lineitem"),
+            k, "l_orderkey", "l_suppkey")
           graft.ops.Graph.linkPrediction(
             graft.ops.Graph.cooccurrenceEdges(li, "l_orderkey",
               "l_suppkey", minCount = 6), "src", "dst", topN = 20)
@@ -661,19 +630,16 @@ object StressBench {
         // the per-round vote census all ×K — the r18 argmax experiment's
         // decision ladder (VERDICT r18 #5)
         "x437_label_prop" -> (() => {
-          val o0 = spark.read.parquet(s"$sfDir/orders.parquet")
+          val o0 = Registrar.table(spark, sfDir, "orders")
             .select("o_orderkey", "o_custkey")
-          val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
+          val li0 = Registrar.table(spark, sfDir, "lineitem")
             .select("l_orderkey", "l_suppkey")
           val e0 = o0.join(li0,
               F.col("o_orderkey") === F.col("l_orderkey"))
             .select(F.col("o_custkey").as("src"),
               (F.col("l_suppkey") + 100000L).as("dst"))
             .distinct()
-          val e = (0 until k).map(i => e0.select(
-              (F.col("src") + F.lit(i * KeyStride)).as("src"),
-              (F.col("dst") + F.lit(i * KeyStride)).as("dst")))
-            .reduce(_ union _)
+          val e = replicateKeys(e0, k, "src", "dst")
           graft.ops.Graph.labelPropagation(e, "src", "dst", rounds = 4)
         }),
         // JS matrix over K× the corpus with the SAME source set: the

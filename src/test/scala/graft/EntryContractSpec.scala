@@ -30,17 +30,36 @@ class EntryContractSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("every entry output column is scalar-typed (driver-hashable)") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val bad = fn(spark, dir).schema.fields.filter(f => f.dataType match {
-          case _: ArrayType | _: MapType | _: StructType => true
-          case _ => false
-        })
-        bad.map(f => s"$name(${f.name}: ${f.dataType.simpleString})")
+    // The same loop also guards the table catalog: an entry reads its tables
+    // with `Registrar.table`, whose frames carry their footer schemas, so its
+    // construction starts no `parquet at ...` schema-inference job.
+    val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (df, sites) = SparkTest.jobSitesDuring(fn(spark, dir))
+      val bad = df.schema.fields.filter(f => f.dataType match {
+        case _: ArrayType | _: MapType | _: StructType => true
+        case _ => false
+      })
+      (name, bad.map(f => s"$name(${f.name}: ${f.dataType.simpleString})"),
+        sites.count(_.startsWith("parquet at")))
     }
+    val offenders = built.flatMap(_._2)
     assert(offenders.isEmpty,
       s"non-scalar entry outputs — reshape with posexplode/concat_ws as " +
         s"x80/x63/x69 do: ${offenders.mkString(", ")}")
+    val inferring = built.collect { case (name, _, n) if n > 0 => s"$name ($n)" }
+    assert(inferring.isEmpty,
+      s"entries whose construction infers a parquet schema — read tables with " +
+        s"Registrar.table(s, dir, name): ${inferring.mkString(", ")}")
+  }
+
+  test("SPARK_GRAFT_ONLY selects the named entries and fails on an unknown name") {
+    assert(SparkEntry.selected(None).keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.selected(Some(" ")).keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.selected(Some("x92_pagerank, q01_take_sort")).keySet ==
+      Set("x92_pagerank", "q01_take_sort"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("x92_pagerank,x92_pagernak,q99")))
+    assert(e.getMessage.contains("q99, x92_pagernak"), e.getMessage)
   }
 
   test("every oracleSql key has a matching queries entry") {

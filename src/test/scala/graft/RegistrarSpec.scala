@@ -99,6 +99,20 @@ class RegistrarSpec extends AnyFunSuite {
     assert(messages.exists(m => m != null && m.contains(bogus.toString)), e.toString)
   }
 
+  test("table is the catalog's memoized frame") {
+    val catalog = Registrar.loadParquetDir(spark, dir)
+    tables.foreach(t => assert(Registrar.table(spark, dir, t) eq catalog(t), t))
+  }
+
+  test("an absent table or a missing dir fails naming the table and the dir") {
+    val e = intercept[Registrar.SourceError](Registrar.table(spark, dir, "nope"))
+    assert(e.getMessage.contains("nope") && e.getMessage.contains(dir) &&
+      e.getMessage.contains("orders"), e.getMessage)
+    val missing = Files.createTempDirectory("graft-registrar").resolve("missing").toString
+    val m = intercept[Registrar.SourceError](Registrar.table(spark, missing, "orders"))
+    assert(m.getMessage.contains("orders") && m.getMessage.contains(missing), m.getMessage)
+  }
+
   /** A two-row parquet file with a nanosecond timestamp column, which Spark
     * itself cannot write. */
   def writeNanosFile(dir: JPath): String = {

@@ -18,16 +18,25 @@ object SparkTest {
   /** Spark jobs started on the shared session while `body` runs, counted
     * after the listener bus has drained. */
   def jobsDuring[T](body: => T): (T, Int) = {
+    val (out, sites) = jobSitesDuring(body)
+    (out, sites.size)
+  }
+
+  /** The call site of each Spark job started on the shared session while
+    * `body` runs (its last stage's name, e.g. `parquet at Foo.scala:12`;
+    * empty for a job over no partitions, which has no stage). */
+  def jobSitesDuring[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        sites.add(if (js.stageInfos.isEmpty) "" else js.stageInfos.maxBy(_.stageId).name)
     }
     session.sparkContext.addSparkListener(listener)
     try {
       val out = body
       org.apache.spark.GraftListeners.drain(session.sparkContext)
-      (out, jobs.get)
+      (out, sites.toArray(Array.empty[String]).toSeq)
     } finally session.sparkContext.removeSparkListener(listener)
   }
 }
