@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.expressions.Window
 import graft.prql.Graft
@@ -34,6 +34,47 @@ object SparkEntry {
   private val OracleAB: Seq[(Long, Long)] =
     (0 until 16).map(j => (2L * j + 1, 7919L * j + 13))
 
+  /** OracleAB's 16 Carter-Wegman mins over the `hs` hash array. */
+  private def oracleMins: Seq[Column] = OracleAB.map { case (a, b) =>
+    F.array_min(F.transform(F.col("hs"), h => (h * a + b) % OracleP)) }
+
+  /** The engine-neutral 28-bit element hash: md5's first 7 hex digits. */
+  private def md5Hash28(c: Column): Column =
+    F.conv(F.substring(F.md5(c), 1, 7), 16, 10).cast("long")
+
+  /** The first `n` chars of the lowercased, whitespace-collapsed text. */
+  private def normalizedPrefix(n: Int): Column =
+    F.substring(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), 1, n)
+
+  /** The x43 MinHash signature `s0`..`s15` of every 10th document next to
+    * `id`: md5 hashes of the distinct 5-char shingles of its first 500
+    * normalized chars, then [[oracleMins]]. Shared by x43, x465, x473,
+    * x477 and x479. */
+  private def md5ShingleSigs(s: SparkSession, dir: String, id: Column): DataFrame = {
+    val t = F.col("__t")
+    val shingles = F.array_distinct(F.transform(
+      F.sequence(F.lit(1), F.greatest(F.length(t) - 4, F.lit(1))),
+      i => t.substr(i, F.lit(5))))
+    val texts = Registrar.table(s, dir, "documents")
+      .filter(F.col("doc_id") % 10 === 0)
+      .select(id, normalizedPrefix(500).as("__t"))
+    val key = F.col(texts.columns.head)
+    texts.select(key, F.transform(shingles, md5Hash28(_)).as("hs"))
+      .select(key +: oracleMins.zipWithIndex.map { case (m, j) => m.as(s"s$j") }: _*)
+  }
+
+  /** md5 hashes `hs` of the fixed 64-char chunks of each row's first 2048
+    * `text` chars, next to `id` (x431, x478). */
+  private def md5ChunkHashes(df: DataFrame, id: String): DataFrame = {
+    val t = F.col("__t")
+    val nChunks = F.greatest(
+      F.floor((F.length(t) + F.lit(63)).cast("double") / F.lit(64.0))
+        .cast("int"), F.lit(1))
+    df.select(F.col(id), F.substring(F.col("text"), 1, 2048).as("__t"))
+      .select(F.col(id), F.transform(F.transform(F.sequence(F.lit(0), nChunks - 1),
+        i => t.substr(i * 64 + 1, F.lit(64))), md5Hash28(_)).as("hs"))
+  }
+
   /** Strong-mixing Carter-Wegman seeds for the weighted-MinHash oracle
     * entry (x480): multipliers ~1e9 so (a·h + b) mod p wraps many times
     * over the 28-bit md5 element hashes — OracleAB's tiny odd
@@ -49,8 +90,6 @@ object SparkEntry {
     * materialized pair set. */
   private def weightedPairsEntry(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val mdHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => F.conv(F.substring(F.md5(c), 1, 7), 16, 10).cast("long")
     val base = Registrar.table(s, dir, "documents")
       .filter(F.col("doc_id") % 21 === 0)
       .select(F.col("doc_id"),
@@ -62,7 +101,7 @@ object SparkEntry {
     val corpus = base.unionByName(variant)
     val pairs = graft.ops.Dedup.weightedMinhashPairs(corpus, "doc_id",
       "text", numHashes = 16, bands = 4, threshold = 0.5,
-      maxBucket = 1000, maxWeight = 8, elementHash = mdHash,
+      maxBucket = 1000, maxWeight = 8, elementHash = md5Hash28,
       seeds = WeightedMinhashAB).localCheckpoint()
     (pairs, corpus)
   }
@@ -762,12 +801,13 @@ object SparkEntry {
     // throughput — x16 is the production-path (xxhash64) winnowing bench.
     "x42_winnow_fixed" -> ((s, dir) => {
       val k = 10; val w = 6
-      val t = F.substring(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), 1, 400)
+      val t = F.col("__t")
       val grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))),
         i => F.md5(t.substr(i, F.lit(k))))
       Registrar.table(s, dir, "documents")
         .filter(F.col("doc_id") % 10 === 0)
+        .select(F.col("doc_id"), normalizedPrefix(400).as("__t"))
         .select(F.col("doc_id"), grams.as("hs"))
         .select(F.col("doc_id"), F.explode(F.array_sort(F.array_distinct(
           F.transform(
@@ -788,20 +828,9 @@ object SparkEntry {
       // lose no coverage, and per-shingle md5 + 14 passes over unbounded
       // text made it the most expensive entry in the suite; x02 is the
       // production minhash benchmark
-      val t = F.substring(
-        F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), 1, 500)
-      val shingles = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - 4, F.lit(1))),
-        i => t.substr(i, F.lit(5))))
-      val hs = F.transform(shingles,
-        x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
-      val sigs = OracleAB.map { case (a, b) =>
-        F.array_min(F.transform(F.col("hs"), h => (h * a + b) % OracleP)) }
-      Registrar.table(s, dir, "documents")
-        .filter(F.col("doc_id") % 10 === 0)
-        .select(F.col("doc_id"), hs.as("hs"))
-        .select(F.col("doc_id"),
-          F.concat_ws(",", sigs.map(_.cast("string")): _*).as("sig_csv"))
+      md5ShingleSigs(s, dir, F.col("doc_id"))
+        .select(F.col("doc_id"), F.concat_ws(",",
+          OracleAB.indices.map(j => F.col(s"s$j").cast("string")): _*).as("sig_csv"))
         .orderBy("doc_id")
     }),
 
@@ -814,8 +843,7 @@ object SparkEntry {
       val toks = F.filter(
         F.split(F.lower(F.trim(F.col("text"))), "\\s+"),
         x => F.length(x) > 0)
-      val th = F.transform(toks,
-        x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
+      val th = F.transform(toks, md5Hash28(_))
       val n = F.size(F.col("th"))
       val sig = (0 until 28).map { i =>
         val ones = F.aggregate(F.col("th"), F.lit(0L),
@@ -3589,24 +3617,12 @@ object SparkEntry {
     // OpsSpec pins it by hand instead) + md5-derived 28-bit chunk hashes
     // + the shared OracleAB constants. x430 is the production byte-CDC
     // path.
-    "x431_chunk_minhash_fixed" -> ((s, dir) => {
-      val t = F.substring(F.col("text"), 1, 2048)
-      val nChunks = F.greatest(
-        F.floor((F.length(t) + F.lit(63)).cast("double") / F.lit(64.0))
-          .cast("int"), F.lit(1))
-      val chunks = F.transform(F.sequence(F.lit(0), nChunks - 1),
-        i => t.substr(i * 64 + 1, F.lit(64)))
-      val hs = F.transform(chunks,
-        x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
-      val sigs = OracleAB.map { case (a, b) =>
-        F.array_min(F.transform(F.col("hs"), h => (h * a + b) % OracleP)) }
-      Registrar.table(s, dir, "documents")
-        .filter(F.col("doc_id") % 10 === 0)
-        .select(F.col("doc_id"), hs.as("hs"))
+    "x431_chunk_minhash_fixed" -> ((s, dir) =>
+      md5ChunkHashes(Registrar.table(s, dir, "documents")
+          .filter(F.col("doc_id") % 10 === 0), "doc_id")
         .select(F.col("doc_id"),
-          F.concat_ws(",", sigs.map(_.cast("string")): _*).as("sig_csv"))
-        .orderBy("doc_id")
-    }),
+          F.concat_ws(",", oracleMins.map(_.cast("string")): _*).as("sig_csv"))
+        .orderBy("doc_id")),
 
     // encoding-defect census per source, with PLANTED defects (doc_id %
     // 11 routing -- the planted-variant convention: the synthetic corpus
@@ -3815,21 +3831,8 @@ object SparkEntry {
     // est >= 0.5 rolled up by (source, source) — which source pairs
     // share near-identical documents (the mirror/scraper detector)
     "x477_syndication" -> ((s, dir) => {
-      val t = F.substring(
-        F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), 1, 500)
-      val shingles = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - 4, F.lit(1))),
-        i => t.substr(i, F.lit(5))))
-      val hs = F.transform(shingles,
-        x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
-      val sigCols = OracleAB.zipWithIndex.map { case ((a, b), j) =>
-        F.array_min(F.transform(F.col("hs"),
-          h => (h * a + b) % OracleP)).as(s"s$j") }
       val docs = Registrar.table(s, dir, "documents")
-      val sigs = docs.filter(F.col("doc_id") % 10 === 0)
-        .select(F.col("doc_id"), hs.as("hs"))
-        .select(F.col("doc_id") +: sigCols: _*)
-        .localCheckpoint()
+      val sigs = md5ShingleSigs(s, dir, F.col("doc_id")).localCheckpoint()
       val bands = (0 until 4).map { bnd =>
         val key = F.concat_ws(",", (0 until 4).map(r =>
           F.col(s"s${4 * bnd + r}").cast("string")): _*)
@@ -3893,20 +3896,7 @@ object SparkEntry {
     // similarity sample: expected false-candidate and miss rates per
     // (bands, rows) split of the 16-component signature at t = 0.5
     "x473_lsh_planner" -> ((s, dir) => {
-      val t = F.substring(
-        F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), 1, 500)
-      val shingles = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - 4, F.lit(1))),
-        i => t.substr(i, F.lit(5))))
-      val hs = F.transform(shingles,
-        x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
-      val sigCols = OracleAB.zipWithIndex.map { case ((a, b), j) =>
-        F.array_min(F.transform(F.col("hs"),
-          h => (h * a + b) % OracleP)).as(s"s$j") }
-      val sigs = Registrar.table(s, dir, "documents")
-        .filter(F.col("doc_id") % 10 === 0)
-        .select(F.col("doc_id").cast("string").as("__id"), hs.as("hs"))
-        .select(F.col("__id") +: sigCols: _*)
+      val sigs = md5ShingleSigs(s, dir, F.col("doc_id").cast("string").as("__id"))
       val ordered = sigs
         .withColumn("__h", F.md5(F.concat(F.lit("lshp:"), F.col("__id"))))
         .withColumn("__rn", F.row_number().over(Window.orderBy(
@@ -3947,20 +3937,8 @@ object SparkEntry {
           F.col("text").substr(F.lit(1),
             F.greatest(F.floor(F.length(F.col("text")) * 4 / 5)
               .cast("int"), F.lit(1))).as("text"))
-      val corpus = base.unionByName(variant)
-      val t = F.substring(F.col("text"), 1, 2048)
-      val nChunks = F.greatest(
-        F.floor((F.length(t) + F.lit(63)).cast("double") / F.lit(64.0))
-          .cast("int"), F.lit(1))
-      val chunks = F.transform(F.sequence(F.lit(0), nChunks - 1),
-        i => t.substr(i * 64 + 1, F.lit(64)))
-      val hs = F.transform(chunks,
-        x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
-      val sig = F.array(OracleAB.map { case (a, b) =>
-        F.array_min(F.transform(F.col("hs"),
-          h => (h * a + b) % OracleP)) }: _*)
-      val sigged = corpus.select(F.col("doc_id"), hs.as("hs"))
-        .select(F.col("doc_id"), sig.as("__sig"))
+      val sigged = md5ChunkHashes(base.unionByName(variant), "doc_id")
+        .select(F.col("doc_id"), F.array(oracleMins: _*).as("__sig"))
         .repartition(F.col("doc_id"))
       graft.ops.Dedup.candidatePairsFromSignatures(sigged, "doc_id",
           bands = 4, rows = 4, threshold = 0.5, maxBucket = 1000)
@@ -3973,20 +3951,7 @@ object SparkEntry {
     // corpus-calibrated plan — the auto-banding decision minhashPairsAuto
     // executes, as an oracle-checked readout
     "x479_banding_autoplan" -> ((s, dir) => {
-      val t = F.substring(
-        F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), 1, 500)
-      val shingles = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - 4, F.lit(1))),
-        i => t.substr(i, F.lit(5))))
-      val hs = F.transform(shingles,
-        x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
-      val sigCols = OracleAB.zipWithIndex.map { case ((a, b), j) =>
-        F.array_min(F.transform(F.col("hs"),
-          h => (h * a + b) % OracleP)).as(s"s$j") }
-      val sigs = Registrar.table(s, dir, "documents")
-        .filter(F.col("doc_id") % 10 === 0)
-        .select(F.col("doc_id").cast("string").as("__id"), hs.as("hs"))
-        .select(F.col("__id") +: sigCols: _*)
+      val sigs = md5ShingleSigs(s, dir, F.col("doc_id").cast("string").as("__id"))
       val ordered = sigs
         .withColumn("__h", F.md5(F.concat(F.lit("lshp:"), F.col("__id"))))
         .withColumn("__rn", F.row_number().over(Window.orderBy(
@@ -4244,21 +4209,7 @@ object SparkEntry {
     // (the scale path), NEVER all-pairs.
     "x465_dedup_sweep" -> ((s, dir) => {
       import s.implicits._
-      val t = F.substring(
-        F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), 1, 500)
-      val shingles = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - 4, F.lit(1))),
-        i => t.substr(i, F.lit(5))))
-      val hs = F.transform(shingles,
-        x => F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"))
-      val sigCols = OracleAB.zipWithIndex.map { case ((a, b), j) =>
-        F.array_min(F.transform(F.col("hs"),
-          h => (h * a + b) % OracleP)).as(s"s$j") }
-      val sigs = Registrar.table(s, dir, "documents")
-        .filter(F.col("doc_id") % 10 === 0)
-        .select(F.col("doc_id"), hs.as("hs"))
-        .select(F.col("doc_id") +: sigCols: _*)
-        .localCheckpoint()
+      val sigs = md5ShingleSigs(s, dir, F.col("doc_id")).localCheckpoint()
       val bands = (0 until 4).map { bnd =>
         val key = F.concat_ws(",", (0 until 4).map(r =>
           F.col(s"s${4 * bnd + r}").cast("string")): _*)
@@ -4457,8 +4408,11 @@ object SparkEntry {
     "x450_cka_quant" -> ((s, dir) => {
       val q = graft.ops.Similarity.quantize(
         Registrar.table(s, dir, "embeddings"), "embedding")
-        .withColumn("recon",
-          F.transform(F.col("q"), c => c.cast("double") * F.col("scale")))
+        // linearCka's size filter is pushed below this projection with
+        // `scale` inlined, so no lambda here may read it
+        .withColumn("recon", F.zip_with(F.col("q"),
+          F.array_repeat(F.col("scale"), F.size(F.col("q"))),
+          (c, sc) => c.cast("double") * sc))
       graft.ops.Similarity.linearCka(q, F.col("embedding"),
         F.col("recon"))
     }),

@@ -601,20 +601,18 @@ object Similarity {
 
   /** Per-query ADC lookup table: ||q_s − c_{s,j}||² for every (subspace,
     * codeword), flat m·k array — each entry an i-ascending sequential sum
-    * (the replayable order). HOF cost is per QUERY row only. */
+    * (the replayable order). HOF cost is per QUERY row only. The m query
+    * slices are cut outside the lambdas, so `qvec` is read m times there
+    * and a computed query vector stays one bound column. */
   private def pqLut(qvec: Column, codebooks: Array[Array[Array[Double]]]): Column = {
     val m = codebooks.length
-    val kk = codebooks(0).length
     val dsub = codebooks(0)(0).length
-    val cbLit = F.array(codebooks.flatten.map(cw => F.array(cw.map(F.lit): _*)): _*)
-    F.transform(F.sequence(F.lit(0), F.lit(m * kk - 1)), idx => {
-      val s = F.floor(idx / kk).cast("int")
-      val cw = F.element_at(cbLit, idx + F.lit(1))
-      F.aggregate(
-        F.zip_with(F.slice(qvec, s * dsub + F.lit(1), F.lit(dsub)), cw,
-          (x, y) => (x - y) * (x - y)),
-        F.lit(0.0d), (acc, v) => acc + v)
-    })
+    val qSubs = F.array((0 until m).map(s => F.slice(qvec, F.lit(s * dsub + 1), F.lit(dsub))): _*)
+    val cbLit = F.array(codebooks.map(sub =>
+      F.array(sub.map(cw => F.array(cw.map(F.lit): _*)): _*)): _*)
+    F.flatten(F.zip_with(qSubs, cbLit, (qs, cws) => F.transform(cws, cw =>
+      F.aggregate(F.zip_with(qs, cw, (x, y) => (x - y) * (x - y)),
+        F.lit(0.0d), (acc, v) => acc + v))))
   }
 
   /** ADC distance: m LUT lookups added s-ascending — one native codegen'd
@@ -2271,12 +2269,7 @@ object Similarity {
                      centroids: Array[Array[Double]],
                      ambiguous: Double = 1.2): DataFrame = {
     require(centroids.length >= 2, "need k >= 2 centroids")
-    val centLit = F.array(centroids.map(c =>
-      F.array(c.map(F.lit): _*)): _*)
-    val d2s = F.transform(centLit, c => F.round(F.aggregate(
-      F.zip_with(F.col(vecCol).cast("array<double>"), c,
-        (x, y) => (x - y) * (x - y)),
-      F.lit(0.0), (acc, t) => acc + t), 9))
+    val d2s = centroidD2s(vecCol, centroids)
     val sorted = F.array_sort(d2s)
     val withM = emb.select(F.col(idCol), F.col(vecCol))
       .withColumn("__d2s", d2s)
@@ -2300,14 +2293,14 @@ object Similarity {
   /** Per-point squared distances to every centroid, 9-dp, as an array
     * column in centroid order — the shared projection under
     * [[centroidMargin]] / [[simplifiedSilhouette]] / [[daviesBouldin]] /
-    * [[xieBeni]]. */
+    * [[xieBeni]]. A float vector widens to double per element, inside
+    * the lambda, not as one array cast per centroid. */
   private def centroidD2s(vecCol: String,
                           centroids: Array[Array[Double]]): Column = {
     val centLit = F.array(centroids.map(c =>
       F.array(c.map(F.lit): _*)): _*)
     F.transform(centLit, c => F.round(F.aggregate(
-      F.zip_with(F.col(vecCol).cast("array<double>"), c,
-        (x, y) => (x - y) * (x - y)),
+      F.zip_with(F.col(vecCol), c, (x, y) => (x - y) * (x - y)),
       F.lit(0.0), (acc, t) => acc + t), 9))
   }
 

@@ -382,9 +382,6 @@ object TextOps {
       else {
         def bucket(g: Column): Column =
           (F.conv(F.substring(F.md5(g), 1, 7), 16, 10).cast("long") % nBuckets).cast("int")
-        // bind the token array to a column BEFORE the transform lambda:
-        // inlined, element_at(toks, i+2) re-splits the text per element —
-        // O(len²)/doc (the knBigramNll fix, same shape)
         val toks = F.col("__ts")
         val bi = F.transform(
           F.slice(toks, F.lit(1), F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -702,13 +699,7 @@ object TextOps {
       s"KN discount must be in (0,1), got $discount")
     def toks(col: Column): Column =
       F.filter(F.split(F.lower(F.trim(col)), "\\s+"), t => F.length(t) > 0)
-    // adjacent-pair stream: (w1, w2) structs via transform over the prefix.
-    // The token array MUST be bound to a column first: with the split()
-    // expression inlined, `element_at(ts, i+2)` re-tokenizes the whole text
-    // once per element inside the transform lambda — O(len²) per document
-    // (measured 8.3 s → 4.6 s on the x78 entry at sf0.1 when bound).
-    // CollapseProject keeps the projection split because the alias is used
-    // twice and split() is not cheap, so `__ts` is a real array buffer.
+    // adjacent-pair stream: (w1, w2) structs via transform over the prefix
     def bigrams(df: DataFrame, keep: Seq[Column]): DataFrame = {
       val ts = F.col("__ts")
       val bi = F.transform(
@@ -1324,9 +1315,7 @@ object TextOps {
                    n: Int = 3): DataFrame = {
     require(n >= 1 && n <= 8, s"n must be in [1,8], got $n")
     import org.apache.spark.sql.expressions.Window
-    val toks = F.filter(
-      F.split(F.lower(F.trim(F.coalesce(F.col(textCol), F.lit("")))), "\\s+"),
-      t => F.length(t) > 0)
+    val toks = F.col("__toks")
     // guard the start sequence: Spark's sequence(1, m) runs DESCENDING for
     // m < 1 (auto-negative step), so short docs must take the empty branch
     val m = F.size(toks) - (n - 1)
@@ -1335,8 +1324,10 @@ object TextOps {
         i => F.concat_ws(" ", F.slice(toks, i, F.lit(n)))))
       .otherwise(F.array())
     val dg = Scale.spreadNarrowScan(docs)
-      .select(F.col(idCol).as("__id"),
-        F.explode(F.array_distinct(grams)).as("__gram"))
+      .select(F.col(idCol).as("__id"), F.filter(
+        F.split(F.lower(F.trim(F.coalesce(F.col(textCol), F.lit("")))), "\\s+"),
+        t => F.length(t) > 0).as("__toks"))
+      .select(F.col("__id"), F.explode(F.array_distinct(grams)).as("__gram"))
     val w = Window.partitionBy("__gram")
     dg.withColumn("__first", F.min("__id").over(w))
       .groupBy("__id")

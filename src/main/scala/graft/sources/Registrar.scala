@@ -116,9 +116,11 @@ object Registrar {
     * per (session, dir): the dirs are immutable test fixtures, and without
     * the cache every compiled query re-lists the dir and re-reads each
     * parquet footer on the driver — small, but repeated by every query of
-    * a suite. */
+    * a suite. A dir that does not exist is not memoized, so one made later
+    * in the session is listed when it is next looked up. */
   def loadParquetDir(spark: SparkSession, dir: String): Map[String, DataFrame] =
-    dirCache.computeIfAbsent((spark, dir), { case (s, d) =>
+    if (!new File(dir).isDirectory) Map.empty
+    else dirCache.computeIfAbsent((spark, dir), { case (s, d) =>
       val files = Option(new File(d).listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.endsWith(".parquet"))
       files.map { f =>

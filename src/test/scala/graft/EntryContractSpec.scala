@@ -24,6 +24,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * zero (x222 was red for two rounds on exactly this); the local gate
   * (`scripts/oracle_check.py`) is sign-aware since r17, so a violation
   * surfaces in the verify run rather than at the driver.
+  *
+  * LAMBDA authoring contract: a lambda (`transform`, `filter`,
+  * `aggregate`, `zip_with`, ...) reads only its own variables, attributes
+  * and literals. Higher-order functions are interpreted once per array
+  * element and subexpression elimination does not reach into them, so a
+  * tokenize, normalize, cast or vector op written inside a lambda reruns
+  * for every element (x121 re-split each document once per trigram).
+  * Bind such a value in a projection below the lambda, and keep a second
+  * reference to it outside the lambda: `CollapseProject` inlines a binding
+  * that its consumer references once, and a filter pushed below the
+  * projection inlines every binding it reads. `SparkTest.lambdaInvariants`
+  * checks every entry's final and eager plans.
   */
 class EntryContractSpec extends AnyFunSuite {
   private val spark = SparkTest.session
@@ -34,22 +46,52 @@ class EntryContractSpec extends AnyFunSuite {
     // with `Registrar.table`, whose frames carry their footer schemas, so its
     // construction starts no `parquet at ...` schema-inference job.
     val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (df, sites) = SparkTest.jobSitesDuring(fn(spark, dir))
+      val ((df, sites), eager) = SparkTest.plansDuring(SparkTest.jobSitesDuring(fn(spark, dir)))
+      val invariant = (df.queryExecution.optimizedPlan +: eager)
+        .flatMap(SparkTest.lambdaInvariants).map(_.sql).distinct
       val bad = df.schema.fields.filter(f => f.dataType match {
         case _: ArrayType | _: MapType | _: StructType => true
         case _ => false
       })
       (name, bad.map(f => s"$name(${f.name}: ${f.dataType.simpleString})"),
-        sites.count(_.startsWith("parquet at")))
+        sites.count(_.startsWith("parquet at")), invariant.map(e => s"$name: $e"))
     }
     val offenders = built.flatMap(_._2)
     assert(offenders.isEmpty,
       s"non-scalar entry outputs — reshape with posexplode/concat_ws as " +
         s"x80/x63/x69 do: ${offenders.mkString(", ")}")
-    val inferring = built.collect { case (name, _, n) if n > 0 => s"$name ($n)" }
+    val inferring = built.collect { case (name, _, n, _) if n > 0 => s"$name ($n)" }
     assert(inferring.isEmpty,
       s"entries whose construction infers a parquet schema — read tables with " +
         s"Registrar.table(s, dir, name): ${inferring.mkString(", ")}")
+    val perElement = built.flatMap(_._4)
+    assert(perElement.isEmpty,
+      s"${built.count(_._4.nonEmpty)} entries evaluate lambda-invariant work once per " +
+        s"array element — bind it below the lambda: ${perElement.mkString("\n")}")
+  }
+
+  test("the lambda guard flags a per-row value read inside a lambda") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.{functions => F}
+    val docs = graft.sources.Registrar.table(spark, dir, "documents")
+    def invariants(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      SparkTest.lambdaInvariants(df.queryExecution.optimizedPlan).map(_.sql)
+    // TextOps.ngramNovelty's trigram census as it was, then as it is
+    def trigrams(toks: Column): Column = {
+      val m = F.size(toks) - 2
+      F.explode(F.array_distinct(F.when(m >= 1, F.transform(F.sequence(F.lit(1), m),
+        i => F.concat_ws(" ", F.slice(toks, i, F.lit(3))))).otherwise(F.array())))
+    }
+    val split = F.filter(F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
+      "\\s+"), t => F.length(t) > 0)
+    val inline = invariants(docs.select(F.col("doc_id"), trigrams(split)))
+    assert(inline.exists(_.startsWith("filter(split(lower(trim(coalesce(text")), inline)
+    assert(invariants(docs.select(F.col("doc_id"), split.as("toks"))
+      .select(F.col("doc_id"), trigrams(F.col("toks")))).isEmpty)
+    // bound, but read only inside the lambda: CollapseProject inlines it
+    val once = invariants(docs.select(F.upper(F.col("text")).as("u"), F.col("doc_id"))
+      .select(F.transform(F.array(F.col("doc_id")), i => F.concat(F.col("u"), i))))
+    assert(once == Seq("upper(text)"), once)
   }
 
   test("SPARK_GRAFT_ONLY selects the named entries and fails on an unknown name") {

@@ -3399,6 +3399,29 @@ class OpsSpec extends AnyFunSuite {
       1L -> ((2L, 2L, 1.0)),
       2L -> ((2L, 0L, 0.0)),
       3L -> ((4L, 3L, 0.75))), out.toString)
+    // null and blank text, tab/newline separators, a repeated gram, n = 1 and 8
+    val more = Seq[(Long, String)](
+      (1L, null),                    // null text -> no grams, dropped
+      (2L, " \t \n "),                // whitespace only -> dropped
+      (3L, "A b\tc\nd "),             // case-folded, any whitespace splits
+      (4L, "a b c a b c"),           // a b c twice: counted once
+      (5L, "b c d x y z q r")        // 8 tokens
+    ).toDF("doc_id", "text")
+    def novelty(n: Int) = TextOps.ngramNovelty(more, "doc_id", "text", n)
+      .as[(Long, Long, Long, Double)].collect()
+      .map(t => t._1 -> ((t._2, t._3, t._4))).toMap
+    // doc 3: abc, bcd; doc 4: abc, bca, cab (abc seen); doc 5: bcd seen
+    assert(novelty(3) == Map(
+      3L -> ((2L, 2L, 1.0)),
+      4L -> ((3L, 2L, 0.666667)),
+      5L -> ((6L, 5L, 0.833333))), novelty(3).toString)
+    // unigrams: doc 4 adds none; doc 5 adds x y z q r
+    assert(novelty(1) == Map(
+      3L -> ((4L, 4L, 1.0)),
+      4L -> ((3L, 0L, 0.0)),
+      5L -> ((8L, 5L, 0.625))), novelty(1).toString)
+    // only doc 5 has 8 tokens: one gram, novel
+    assert(novelty(8) == Map(5L -> ((1L, 1L, 1.0))), novelty(8).toString)
   }
 
   test("kCenterCoreset: planted geometry — farthest point each round, min-id ties") {

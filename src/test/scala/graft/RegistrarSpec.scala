@@ -113,6 +113,15 @@ class RegistrarSpec extends AnyFunSuite {
     assert(m.getMessage.contains("orders") && m.getMessage.contains(missing), m.getMessage)
   }
 
+  test("a dir made after a failed lookup is found on the next lookup") {
+    val later = Files.createTempDirectory("graft-registrar").resolve("later")
+    intercept[Registrar.SourceError](Registrar.table(spark, later.toString, "region"))
+    Files.createDirectories(later)
+    Files.copy(java.nio.file.Paths.get(dir, "region.parquet"), later.resolve("region.parquet"))
+    assert(outcome(Registrar.table(spark, later.toString, "region")) ==
+      outcome(Registrar.table(spark, dir, "region")))
+  }
+
   /** A two-row parquet file with a nanosecond timestamp column, which Spark
     * itself cannot write. */
   def writeNanosFile(dir: JPath): String = {
