@@ -28,7 +28,12 @@ def main(paths: list[str]) -> None:
     # production sums whenever a twin was added in only one place
     twin_sets = [set(r["oracle_twins"]) for r in runs]
     assert all(t == twin_sets[0] for t in twin_sets), \
-        "runs disagree on the oracle-twin set (mixed Bench versions?)"
+        ("runs disagree on the oracle-twin set (mixed Bench versions?) on "
+         f"{sorted(set.union(*twin_sets) - set.intersection(*twin_sets))}. "
+         "Bench derives the set from SparkEntry's PinnedBy checks since it "
+         "grew from 9 to 12 names (x89_lsh_knn_twin, x90_ivf_knn_twin and "
+         "x114_frame_sample_fixed joined), so production_total moved by "
+         "those entries' seconds and runs from either side do not mix")
     oracle_twins = twin_sets[0]
 
     print("| Query | median (s) | min | max | task_ms med | task min | task max |")

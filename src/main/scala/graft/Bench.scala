@@ -1,5 +1,8 @@
 package graft
 object Bench {
+  /** An entry's key in the printed JSON: its unique qNN/xNN prefix. */
+  def shortId(name: String): String = name.takeWhile(_ != '_')
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
@@ -92,7 +95,6 @@ object Bench {
     // the full-name, full-precision map to bench_detail.json for the
     // BASELINE.md ledger.
     def s3(v: Double): String = f"$v%.3f"
-    def shortId(name: String): String = name.takeWhile(_ != '_')
     // Round-10 follow-up: at 197 queries even the short-id map is ~2.5k
     // chars — past the window again. Print only the TOP-60 slowest (the
     // rows a perf reader actually looks at, ~800 chars) plus an explicit
@@ -105,14 +107,11 @@ object Bench {
     val omitted = math.max(0, results.size - topN)
     val total = results.map(_._2.sec).sum
     // Oracle-math twins exist to VERIFY selection math via DuckDB-replayable
-    // primitives (per-gram md5 + fixed constants); their xxhash64 siblings
-    // (x02/x16/x03/x07/x04/x71) are the production surface. production_total
-    // is the gate number for that surface — the twins' md5 tax is a
-    // verification cost, not an engine cost.
-    val oracleTwins = Set("x22_ngram_jaccard_fixed", "x42_winnow_fixed",
-      "x43_minhash_fixed", "x44_simhash_fixed", "x45_lsh_bucket",
-      "x70_dsir_weights", "x431_chunk_minhash_fixed",
-      "x442_compress_census_fixed", "x478_media_neardup_verify")
+    // primitives (per-gram md5 + fixed constants); the rows-only entries
+    // they pin (x02/x16/x03/x07/x04/x71 ...) are the production surface.
+    // production_total is the gate number for that surface — the twins' md5
+    // tax is a verification cost, not an engine cost.
+    val oracleTwins = SparkEntry.pinnedBy.values.flatten.toSet
     val prodTotal = results.filterNot(r => oracleTwins(r._1)).map(_._2.sec).sum
     // Steal-defending rerun (r15 verdict ask #4): the headline BENCH json
     // is ONE run, and a hypervisor steal window can read a query at 3-25x

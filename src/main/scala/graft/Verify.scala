@@ -1,38 +1,50 @@
 package graft
+import java.io.File
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1, naming
+  * them, when any entry failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = GraftSession.cpus
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // local-iteration subset: SPARK_GRAFT_ONLY=x90,x91 dumps (and lists in
     // oracle_sql.json) just those entries so scripts/oracle_check.py can
     // gate one new operator without replaying the whole suite
-    val selected = SparkEntry.selected()
-    selected.foreach { case (name, fn) =>
+    val failed = try dump(spark, sfDir, outDir, SparkEntry.selected()) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} entries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each entry's result to `outDir/<name>` and the oracles of all of
+    * them to `outDir/oracle_sql.json`, and returns the names of the entries
+    * that failed, sorted. A failed entry leaves no dump behind, not even one
+    * from an earlier run, so a compare cannot pass it on stale rows. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      selected: Map[String, (SparkSession, String) => DataFrame]): Seq[String] = {
+    new File(outDir).mkdirs()
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      FileUtils.deleteDirectory(new File(outDir, name))
       try {
         val df = fn(spark, sfDir)
-        // the driver compare hashes pandas cells: an array/struct/map
-        // column crashes its sort ('unhashable type' — x80 in r8) and
-        // silently voids the entry. Fail HERE, at build time, instead.
-        val hostile = df.schema.fields.filter(f => f.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType
-             | _: org.apache.spark.sql.types.MapType
-             | _: org.apache.spark.sql.types.StructType => true
-          case _ => false
-        })
+        // the driver compare hashes pandas cells: fail HERE, at build time
+        val hostile = SparkEntry.unhashable(df.schema)
         require(hostile.isEmpty,
           s"entry $name emits non-scalar column(s) " +
             hostile.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ") +
             " — the driver compare cannot hash these; reshape to scalars " +
             "(posexplode or concat_ws) as x80/x63/x69 do")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,6 +62,6 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(o => selected.contains(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed.sorted
   }
 }

@@ -2558,10 +2558,13 @@ object Similarity {
             "silently and the statistic would no longer replay " +
             "bit-identically. Corpus too large/hot for the scaled-long " +
             "fast path; use a DECIMAL(38,9) accumulation instead."))))
-    val sA = base.select(F.posexplode(F.col(cA)).as(Seq("__i", "__x")))
+    // `_outer`: every base row holds non-empty arrays, so these emit the
+    // same rows as posexplode, and the optimizer infers no `size > 0`
+    // filter that it would push below base's rounding projection
+    val sA = base.select(F.posexplode_outer(F.col(cA)).as(Seq("__i", "__x")))
       .groupBy("__i").agg(exact53(F.sum(scaled(F.col("__x"))), "sum_a")
         .as("__si"))
-    val sB = base.select(F.posexplode(F.col(cB)).as(Seq("__j", "__x")))
+    val sB = base.select(F.posexplode_outer(F.col(cB)).as(Seq("__j", "__x")))
       .groupBy("__j").agg(exact53(F.sum(scaled(F.col("__x"))), "sum_b")
         .as("__sj"))
     // chained posexplodes beat a flattened nested-transform here
@@ -2569,9 +2572,9 @@ object Similarity {
     // the second Generate) — terms stream through codegen row-at-a-time
     val cross = base
       .select(F.col(cB).as("__bv"),
-        F.posexplode(F.col(cA)).as(Seq("__i", "__xa")))
+        F.posexplode_outer(F.col(cA)).as(Seq("__i", "__xa")))
       .select(F.col("__i"), F.col("__xa"),
-        F.posexplode(F.col("__bv")).as(Seq("__j", "__xb")))
+        F.posexplode_outer(F.col("__bv")).as(Seq("__j", "__xb")))
       .groupBy("__i", "__j")
       .agg(exact53(F.sum(scaled(F.col("__xa") * F.col("__xb"))),
         "sum_ab").as("__sab"))
@@ -2614,11 +2617,12 @@ object Similarity {
     * @return one row (n, d, cross_f2, a_f2, b_f2, cka) — 6-dp
     */
   def linearCka(df: DataFrame, vecA: Column, vecB: Column): DataFrame = {
-    val base = df.select(
+    // filter before rounding (transform keeps sizes): a filter on the
+    // rounded vectors is pushed below their projection, rounding them twice
+    val base = df.filter(F.size(vecA) > 0 && F.size(vecA) === F.size(vecB))
+      .select(
         F.transform(vecA, x => F.round(x.cast("double"), 9)).as("__a"),
         F.transform(vecB, x => F.round(x.cast("double"), 9)).as("__b"))
-      .filter(F.size(F.col("__a")) > 0 &&
-        F.size(F.col("__a")) === F.size(F.col("__b")))
     val nTab = base.agg(F.count(F.lit(1)).as("__n"))
     val dTab = base.agg(F.max(F.size(F.col("__a"))).as("d"))
     val fab = ckaFrob(base, nTab, "__a", "__b")

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The harness contract every `SparkEntry.queries` entry must honor.
+/** The harness contract every `SparkEntry.entries` entry must honor.
   *
   * The driver compare loads each entry's parquet into pandas, sorts by
   * every column, and hashes cell values — an array/struct/map column
@@ -49,11 +48,7 @@ class EntryContractSpec extends AnyFunSuite {
       val ((df, sites), eager) = SparkTest.plansDuring(SparkTest.jobSitesDuring(fn(spark, dir)))
       val invariant = (df.queryExecution.optimizedPlan +: eager)
         .flatMap(SparkTest.lambdaInvariants).map(_.sql).distinct
-      val bad = df.schema.fields.filter(f => f.dataType match {
-        case _: ArrayType | _: MapType | _: StructType => true
-        case _ => false
-      })
-      (name, bad.map(f => s"$name(${f.name}: ${f.dataType.simpleString})"),
+      (name, SparkEntry.unhashable(df.schema).map(f => s"$name(${f.name}: ${f.dataType.simpleString})"),
         sites.count(_.startsWith("parquet at")), invariant.map(e => s"$name: $e"))
     }
     val offenders = built.flatMap(_._2)
@@ -104,37 +99,34 @@ class EntryContractSpec extends AnyFunSuite {
     assert(e.getMessage.contains("q99, x92_pagernak"), e.getMessage)
   }
 
-  test("every oracleSql key has a matching queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql keys without a query: $orphans")
+  test("entries without an oracle are exactly the documented rows-only set") {
+    // An entry's check is an Oracle or the twins it is PinnedBy, so the
+    // views of the entry list must partition it.
+    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(rowsOnly == SparkEntry.pinnedBy.keySet)
   }
 
-  test("entries without an oracle are exactly the documented rows-only set") {
-    // Every rows-only entry is an xxhash64/LSH op whose math is pinned by
-    // an md5 oracle twin or an OpsSpec equivalence (VERDICT r8). A NEW
-    // entry that forgets its oracleSql would silently downgrade to a
-    // rows-only driver check — fail HERE instead, and either add the SQL
-    // or consciously extend this list with the twin that pins it.
-    val rowsOnly = Set(
-      "x02_minhash_pairs", "x03_simhash_pairs", "x04_ngram_jaccard",
-      "x05_embed_neardup", "x07_knn_lsh", "x15_simhash_sstring",
-      "x16_winnow_pairs", "x17_knn_ivf", "x18_frame_sample",
-      "x57_minhash_delta", "x71_dsir_weights_prod",
-      "x430_media_neardup", // md5 twin: x431_chunk_minhash_fixed
-      "x441_compress_census") // census-plumbing twin: x442_compress_census_fixed; deflate codec pinned by OpsSpec replay
-    val actual = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(actual == rowsOnly,
-      s"unexpected rows-only entries (missing oracleSql?): ${actual -- rowsOnly}; " +
-        s"stale list entries: ${rowsOnly -- actual}")
+  test("building the entry list fails on a name given twice") {
+    val e = SparkEntry.entries.head
+    val err = intercept[IllegalArgumentException](SparkEntry.uniquelyNamed(e, SparkEntry.entries(1), e))
+    assert(err.getMessage.contains(e.name), err.getMessage)
+  }
+
+  test("short ids are unique across the entry list") {
+    // Bench prints its timings keyed by short id: a repeated xNN_ prefix
+    // would silently overwrite a row of the printed JSON.
+    val clashes = SparkEntry.entries.map(_.name).groupBy(Bench.shortId)
+      .collect { case (id, names) if names.size > 1 => s"$id: ${names.mkString(", ")}" }
+    assert(clashes.isEmpty, clashes.mkString("; "))
   }
 
   test("every rows-only entry names its oracle twin in SURVEY §8's twin " +
       "table, and the twin is itself hash-checked") {
     // The twin convention is a CONTRACT, not prose: a rows-only entry is
-    // only acceptable because a hash-green twin replays its math. Parse
-    // the SURVEY §8 twin table and require (a) one row per rows-only
-    // entry, (b) every named twin exists in `queries` AND has its own
-    // oracleSql (so the twin really is hash-checked, not rows-only too).
+    // only acceptable because a hash-green twin replays its math. Require
+    // (a) SURVEY §8's twin table to name exactly each entry's PinnedBy
+    // twins, (b) every twin to exist AND carry its own Oracle (so the twin
+    // really is hash-checked, not rows-only too).
     val survey = scala.io.Source.fromFile("SURVEY.md", "UTF-8")
     val lines = try survey.getLines().toVector finally survey.close()
     val tableRows = lines
@@ -146,13 +138,12 @@ class EntryContractSpec extends AnyFunSuite {
         val cells = l.split("\\|").map(_.trim).filter(_.nonEmpty)
         cells(0) -> "x[0-9]+_[a-z0-9_]+".r.findAllIn(cells(1)).toSet
       }.toMap
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val undocumented = rowsOnly -- tableRows.keySet
-    assert(undocumented.isEmpty,
-      s"rows-only entries missing from the SURVEY twin table: $undocumented")
-    val stale = tableRows.keySet -- rowsOnly
-    assert(stale.isEmpty, s"twin-table rows no longer rows-only: $stale")
-    for ((entry, twins) <- tableRows; twin <- twins) {
+    val pinned = SparkEntry.pinnedBy.map { case (entry, twins) => entry -> twins.toSet }
+    val differ = (tableRows.keySet ++ pinned.keySet).filter(e => tableRows.get(e) != pinned.get(e))
+    assert(differ.isEmpty, "SURVEY twin table rows that differ from the entries' PinnedBy: " +
+      differ.toSeq.sorted.map(e => s"$e: table ${tableRows.get(e)}, PinnedBy ${pinned.get(e)}")
+        .mkString("; "))
+    for ((entry, twins) <- SparkEntry.pinnedBy; twin <- twins) {
       assert(SparkEntry.queries.contains(twin),
         s"$entry names twin $twin which is not a queries entry")
       assert(SparkEntry.oracleSql.contains(twin),

@@ -1520,6 +1520,21 @@ class PlanQualitySpec extends AnyFunSuite {
       s"corpus-scale sort-merge join must not appear:\n$p")
   }
 
+  test("linearCka: the size filter reads the raw vectors, so no Filter " +
+      "runs the per-element rounding transform") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Round}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val df = graft.ops.Similarity.linearCka(emb,
+      F.col("embedding"), F.transform(F.col("embedding"), x => x * 2.0))
+    val rounding = df.queryExecution.optimizedPlan.collect { case f: Filter => f.condition }
+      .filter(_.exists {
+        case t: ArrayTransform => t.function.exists(_.isInstanceOf[Round])
+        case _ => false
+      })
+    assert(rounding.isEmpty, rounding.map(_.sql).mkString("\n"))
+  }
+
   test("ransacLine: pivot pick is TakeOrdered (no global sort), models " +
       "broadcast into one inlier pass, no corpus shuffle join") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
